@@ -49,12 +49,28 @@ def truncate_plan(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame
     return df.localCheckpoint(eager=True)
 
 
-#: r15 (ADVICE): plan-only tooling (plan dumps, plan-shape tests) can set
-#: this False to skip the eager ``count()`` in ``pin_partition_ids`` —
-#: building a quantile/rank-spine frame then runs no Spark job.  Execution
-#: paths must leave it True: the eager fill is the measured r14 fix for
-#: consumers parking task slots in RDD block locks (PROBE_R14_EAGER_PID).
+#: Whether ``pin_partition_ids`` fills each pin with an eager ``count()``.
+#: Switch it off only through ``lazy_pins()``: the eager fill is the
+#: measured r14 fix for consumers parking task slots in RDD block locks
+#: (PROBE_R14_EAGER_PID), so execution paths must see it True.
 EAGER_PINS = True
+
+
+@contextmanager
+def lazy_pins() -> Iterator[None]:
+    """Skip the eager fill in ``pin_partition_ids`` inside the block, for
+    plan-only tooling (plan dumps, plan-shape tests): building a
+    quantile/rank-spine frame then runs no Spark job.  The pins are still
+    persisted.  The previous setting is restored on exit, on success or
+    raise, so scopes nest.  Process-wide, not per thread: do not run
+    executing queries on other threads meanwhile."""
+    global EAGER_PINS
+    prev = EAGER_PINS
+    EAGER_PINS = False
+    try:
+        yield
+    finally:
+        EAGER_PINS = prev
 
 
 def pin_partition_ids(part: DataFrame) -> DataFrame:

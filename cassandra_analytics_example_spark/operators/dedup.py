@@ -36,8 +36,8 @@ valve + ``on_saturation="error"`` — ``lsh_candidate_pairs`` /
   registered queries' behavior byte-identical.
 
   The r14 AQE-coalesce fix for q21 (PRE-VALIDATED zero-void via
-  call-time patching, ``tools/probe_r14_q21_pinned_width.py``,
-  ``PROBE_R14_Q21.json``) also LANDED in round 14: ``spread()`` on the
+  call-time patching; the probe's results are ``PROBE_R14_Q21.json``)
+  also LANDED in round 14: ``spread()`` on the
   candidate frame at the END of ``lsh_candidate_pairs``. The probe
   REVISED the plan recorded in ``SCALE_PROBE_r13.json``: the
   width-pinned bucket exchange inside ``_lsh_buckets`` is measured
@@ -846,11 +846,6 @@ def simhash(
         .mapInArrow(_simhash_batches(n_bits, gram_n), schema)
         .withColumnRenamed("__id", id_col)
     )
-
-
-def hamming64(a, b):
-    """Hamming distance between two bigint fingerprints (bit_count of XOR)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
 
 
 class BlockingSaturationError(RuntimeError):

@@ -72,18 +72,6 @@ def bloom_probe(
     )
 
 
-def positions_sql(key_expr: str, m: int, k: int) -> str:
-    """DuckDB twin of :func:`_positions` as an UNNEST-able list literal —
-    each element ``CAST(('0x' || substr(md5(j || key), 1, 15)) AS BIGINT)
-    % m`` for j in 0..k-1 (matches ``md5_u60(seed=j)``)."""
-    elems = ", ".join(
-        f"(CAST(('0x' || substr(md5('{j}' || {key_expr}), 1, 15)) AS BIGINT)"
-        f" % {m})"
-        for j in range(k)
-    )
-    return f"[{elems}]"
-
-
 def positions_py(value, m: int, k: int) -> list[int]:
     """Driver-side twin of :func:`_positions` for a SINGLE probe value —
     byte-identical to the column expression (md5 of ``str(seed) +

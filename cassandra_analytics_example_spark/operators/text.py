@@ -33,11 +33,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def token_count(text_col: str | Column = "text") -> Column:
-    """Whitespace token count (BPE-ish proxy: words + punctuation runs)."""
-    return F.size(tokens(text_col)).alias("n_tokens")
-
-
 def lang_scores(text_col: str | Column = "text") -> list[Column]:
     """Per-language marker-overlap scores (count of marker tokens present)."""
     toks = distinct_tokens(text_col)
@@ -493,8 +488,9 @@ def bm25_scores(
     #   ValueError was a breaking change),
     # * an empty term set is a clear error instead of a plan-build crash,
     # * null-text documents are EXCLUDED from n_docs/total_tokens (the
-    #   old explode plan dropped them; without the filter size(null) = -1
-    #   silently corrupts total_tokens and shifts every doc's IDF/avgdl).
+    #   old explode plan dropped them; without the filter, under ANSI
+    #   their dl is NULL, so sum(dl) skips them but count() still counts
+    #   them: n_docs is inflated, which shrinks avgdl and shifts IDF).
     query_terms = list(dict.fromkeys(query_terms))
     if not query_terms:
         raise ValueError("query_terms must be non-empty")

@@ -32,6 +32,10 @@ def list_data_files(
     skipping hidden/marker entries (``_SUCCESS``, ``.crc``, ``_snapshots``)
     exactly as Spark's own readers do."""
     fs, jpath = _fs_and_path(spark, path)
+    # listFiles yields qualified paths (file:/..., s3a://...); compare the
+    # parent walk against the qualified root, or a scheme-less root never
+    # matches and the walk climbs into the root's own hidden ancestors
+    root = fs.makeQualified(jpath).toString()
     out: list[tuple[str, int]] = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -43,7 +47,7 @@ def list_data_files(
         # skip anything inside a hidden directory (e.g. _snapshots/)
         parent_hidden = False
         parent = p.getParent()
-        while parent is not None and parent.toString() != jpath.toString():
+        while parent is not None and parent.toString() != root:
             if parent.getName().startswith(("_", ".")):
                 parent_hidden = True
                 break
@@ -76,8 +80,3 @@ def read_text(spark: SparkSession, path: str) -> str:
         return bytes(data).decode("utf-8")
     finally:
         stream.close()
-
-
-def exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _fs_and_path(spark, path)
-    return bool(fs.exists(jpath))

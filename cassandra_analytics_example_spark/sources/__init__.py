@@ -7,14 +7,12 @@ from cassandra_analytics_example_spark.sources.registry import (
     get_reader,
     get_writer,
     load_table,
-    load_tables,
     read,
     write,
 )
 from cassandra_analytics_example_spark.sources.snapshot import (
     create_snapshot,
     read_snapshot,
-    snapshot_exists,
 )
 
 __all__ = [
@@ -25,9 +23,7 @@ __all__ = [
     "get_reader",
     "get_writer",
     "load_table",
-    "load_tables",
     "read",
     "read_snapshot",
-    "snapshot_exists",
     "write",
 ]

@@ -181,8 +181,3 @@ def write(df: DataFrame, options: dict[str, str]) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from a scale-factor directory (TESTDATA.md)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}

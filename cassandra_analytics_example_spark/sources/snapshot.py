@@ -62,7 +62,3 @@ def read_snapshot(
     raw = fs.read_text(spark, _manifest_path(table_path, name))
     manifest = json.loads(raw)
     return spark.read.parquet(*manifest["files"])
-
-
-def snapshot_exists(spark: SparkSession, table_path: str, name: str) -> bool:
-    return fs.exists(spark, _manifest_path(table_path, name))

@@ -8,6 +8,14 @@ import pytest
 
 from cassandra_analytics_example_spark.session import get_spark
 
+# The session's 16g default heap is sized for sf0.1 bench timing. Storage
+# memory is ~0.6 of the heap, so on a host with 16 GB of RAM or less the
+# suite's persisted pins can grow the one local-mode JVM until the kernel
+# OOM-kills it mid-suite, failing every later test. Test inputs are at most
+# sf0.1, and MEMORY_AND_DISK pins spill instead of failing, so a smaller
+# heap changes no result. An explicit SPARK_GRAFT_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.001")
 

@@ -1011,3 +1011,30 @@ def test_personalized_pagerank_caches_nodes_and_edges(spark):
     # one cached node read per iteration, and no raw re-derivation: the
     # distinct+union build must not appear outside the cache build
     assert node_scans >= 3, plan
+
+
+def test_list_data_files_scheme_less_path_under_hidden_ancestor(spark, tmp_path):
+    """A scheme-less table path whose ancestors start with ``.``/``_`` must
+    still list its files: the hidden-directory walk stops at the table
+    root (compared qualified, as ``listFiles`` reports it), so only
+    directories INSIDE the table, like ``_snapshots/``, are skipped."""
+    from cassandra_analytics_example_spark.datagen import (
+        gen_dataset_deterministic,
+    )
+    from cassandra_analytics_example_spark.plans.fs import list_data_files
+    from cassandra_analytics_example_spark.sources import read, write
+
+    table = str(tmp_path / ".hid" / "_u" / "t")
+    write(gen_dataset_deterministic(spark, 600, 3), {"path": table})
+    snap = read(
+        spark, {"path": table, "createSnapshot": "true", "snapshotName": "s1"}
+    )
+    assert snap.count() == 600
+    files = list_data_files(spark, table)
+    assert files, "no data files listed under a hidden ancestor"
+    assert all("/_snapshots/" not in p for p, _ in files), files
+    # the second snapshot must freeze the data files, not s1's manifest
+    again = read(
+        spark, {"path": table, "createSnapshot": "true", "snapshotName": "s2"}
+    )
+    assert again.count() == 600

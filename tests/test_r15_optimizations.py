@@ -125,9 +125,10 @@ def test_bm25_edge_semantics_restored(spark):
 
 
 def test_eager_pins_toggle_for_plan_tooling(spark):
-    """checkpoints.EAGER_PINS=False skips the construction-time fill job
+    """checkpoints.lazy_pins() skips the construction-time fill job
     (plan-only tooling escape hatch, r15 ADVICE) while keeping the
-    persist itself — consumers still read one pinned lineage."""
+    persist itself — consumers still read one pinned lineage — and
+    restores the eager default on exit, even when the block raises."""
     from cassandra_analytics_example_spark.operators import checkpoints
     from pyspark.sql import functions as F
 
@@ -137,14 +138,21 @@ def test_eager_pins_toggle_for_plan_tooling(spark):
     )
     tracker = spark.sparkContext.statusTracker()
     assert checkpoints.EAGER_PINS is True  # execution-path default
-    checkpoints.EAGER_PINS = False
+    pinned = None
     try:
-        before = len(tracker.getJobIdsForGroup() or [])
-        pinned = checkpoints.pin_partition_ids(part)
-        after = len(tracker.getJobIdsForGroup() or [])
-        assert after == before, "lazy pin must not run a job at build time"
-        assert pinned.storageLevel.useMemory
-        assert pinned.count() == 1000
+        with checkpoints.lazy_pins():
+            before = len(tracker.getJobIdsForGroup() or [])
+            pinned = checkpoints.pin_partition_ids(part)
+            after = len(tracker.getJobIdsForGroup() or [])
+            assert after == before, "lazy pin must not run a job at build time"
+            assert pinned.storageLevel.useMemory
+            assert pinned.count() == 1000
+        assert checkpoints.EAGER_PINS is True
+        with pytest.raises(RuntimeError, match="boom"):
+            with checkpoints.lazy_pins():
+                assert checkpoints.EAGER_PINS is False
+                raise RuntimeError("boom")
+        assert checkpoints.EAGER_PINS is True, "lazy_pins must restore on raise"
     finally:
-        checkpoints.EAGER_PINS = True
-        pinned.unpersist()
+        if pinned is not None:
+            pinned.unpersist()

@@ -5,7 +5,7 @@ For each query: cache-cold noop-sink run, then the status-store stage
 table (executor run time, shuffle read/write bytes, task count) sorted by
 executor time — the local-mode stand-in for the Spark UI stage page.
 
-Usage: python tools/profile_query_r14.py q253_rfm_segments [more...]
+Usage: python tools/profile_query.py q253_rfm_segments [more...]
 """
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ def stages(spark):
 def main() -> None:
     registry = load_all()
     spark = get_spark(
-        app_name="profile-r14",
+        app_name="profile-query",
         extra_conf={"spark.ui.retainedStages": "100000"},
     )
     spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode(

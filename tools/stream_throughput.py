@@ -1,7 +1,6 @@
 #!/usr/bin/env python3
-"""STREAM_THROUGHPUT_r13.json: measured input-scaling curves for the
-streaming surface — the one operator family whose 100 TB story had no
-recorded perf evidence (batch heavyweights got curves in
+"""Measured input-scaling curves for the streaming surface (the committed
+run is STREAM_THROUGHPUT_r13.json; batch heavyweights got curves in
 SCALE_PROBE_r13.json / SCALE_PROBE_SIMILARITY_r13.json).
 
 Four stores with structurally different state machinery, driven through
@@ -32,7 +31,7 @@ cross-scale read is the MARGINAL throughput between scales, reported
 as marginal_events_per_sec between x1 and x10 — (rows10 - rows1) /
 (wall10 - wall1) — alongside the raw exponent.
 
-Usage: python tools/stream_throughput_probe_r13.py [out.json]
+Usage: python tools/stream_throughput.py [out.json]   (default STREAM_THROUGHPUT.json)
 """
 
 from __future__ import annotations
@@ -105,15 +104,15 @@ def _fit_exponent(scales, values):
 
 def main() -> None:
     out_path = (
-        sys.argv[1] if len(sys.argv) > 1 else "STREAM_THROUGHPUT_r13.json"
+        sys.argv[1] if len(sys.argv) > 1 else "STREAM_THROUGHPUT.json"
     )
-    spark = get_spark(app_name="stream-throughput-r13")
+    spark = get_spark(app_name="stream-throughput")
 
     from cassandra_analytics_example_spark.queries import load_all
 
     registry = load_all()
 
-    root = tempfile.mkdtemp(prefix="stream_tp_r13_")
+    root = tempfile.mkdtemp(prefix="stream_tp_")
     dirs, rows_in = {}, {}
     for s in SCALES:
         d = os.path.join(root, f"x{s}")
@@ -123,7 +122,7 @@ def main() -> None:
         print(f"built x{s}: {rows_in[s]} rows", flush=True)
 
     report = {
-        "metric": "stream_throughput_r13",
+        "metric": "stream_throughput",
         "sf_base": 0.1,
         "scales": SCALES,
         "loadavg_start": round(os.getloadavg()[0], 2),
