@@ -80,3 +80,9 @@ def read_text(spark: SparkSession, path: str) -> str:
         return bytes(data).decode("utf-8")
     finally:
         stream.close()
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is not an error."""
+    fs, jpath = _fs_and_path(spark, path)
+    fs.delete(jpath, True)

@@ -12,9 +12,10 @@ DataFrame pipelines.
 
 Differences by design (Spark-first, 100 TB):
 
-* One lineage, cached when two actions share it. The reference recomputes the
-  whole pipeline for its follow-up ``count()`` (``App.scala:239,244``); we
-  ``persist()`` across the write+count action pair and unpersist after.
+* One Spark pass per job. The reference recomputes the whole pipeline for
+  its follow-up ``count()`` (``App.scala:239,244``); here the sink write
+  counts its own rows (``sources.write`` returns them), so no job caches its
+  lineage or runs a second action over it.
 * No driver-side ``collect()`` of file lists (the reference's
   ``App.scala:76``); output inventories are computed distributed and only
   small summaries come back.
@@ -31,7 +32,6 @@ import uuid
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from cassandra_analytics_example_spark.config import DataTransport, JobConfiguration
 from cassandra_analytics_example_spark.datagen import (
@@ -90,15 +90,17 @@ def staged_write(
     write_options: dict[str, str],
     targets: dict[str, dict[str, str]],
     listener: StorageTransportListener,
-    n_rows: int,
-) -> None:
+) -> int:
     """S3_COMPAT transport: two-phase stage→import with lifecycle callbacks
     (the reference's storage-transport extension path, App.scala:208-235).
 
     Phase 1 stages the dataset once into ``staging_dir`` and fires
     object-persisted/stage-succeeded per target; phase 2 imports into every
     target only after ALL targets staged (all-or-nothing when the listener
-    is coordinated).
+    is coordinated). Returns the staged row count; an import that writes a
+    different count raises before its import-succeeded callback. Without a
+    ``staging_dir`` option the stage goes to a fresh temporary directory,
+    deleted when the write ends.
 
     Object-store staging is a CONFIG change, not a code change: every path
     here (``staging_dir``, targets) is resolved through Spark's Hadoop
@@ -110,24 +112,35 @@ def staged_write(
     LocalStorageTransportExtension.scala:79-99 maps onto the scheme's
     Hadoop connector configuration)."""
     listener.on_transport_start()
-    stage_dir = write_options.get(
-        "staging_dir", f"{tempfile.gettempdir()}/staged-{uuid.uuid4().hex}"
-    )
-    write(df, {**write_options, "path": stage_dir, "mode": "overwrite"})
-    staged_files = fs.list_data_files(spark, stage_dir, suffix=".parquet")
-    for fpath, size in staged_files:
-        listener.on_object_persisted("staging", fpath, size)
-    listener.on_all_objects_persisted(len(staged_files), n_rows)
-    for cluster in targets:
-        listener.on_stage_succeeded(cluster)
-    if isinstance(listener, CoordinatedStorageTransportListener):
-        if not listener.all_staged:  # pragma: no cover - defensive
-            raise RuntimeError("coordinated write: staging incomplete")
-    staged = spark.read.parquet(stage_dir)
-    for cluster, opts in targets.items():
-        write(staged, opts)
-        listener.on_import_succeeded(cluster)
-    listener.on_job_succeeded(0.0)
+    stage_dir = write_options.get("staging_dir")
+    own_stage = stage_dir is None
+    if own_stage:
+        stage_dir = f"{tempfile.gettempdir()}/staged-{uuid.uuid4().hex}"
+    try:
+        n_rows = write(df, {**write_options, "path": stage_dir, "mode": "overwrite"})
+        staged_files = fs.list_data_files(spark, stage_dir, suffix=".parquet")
+        for fpath, size in staged_files:
+            listener.on_object_persisted("staging", fpath, size)
+        listener.on_all_objects_persisted(len(staged_files), n_rows)
+        for cluster in targets:
+            listener.on_stage_succeeded(cluster)
+        if isinstance(listener, CoordinatedStorageTransportListener):
+            if not listener.all_staged:  # pragma: no cover - defensive
+                raise RuntimeError("coordinated write: staging incomplete")
+        # the staged files carry df's schema: no footer-inference job
+        staged = spark.read.schema(df.schema).parquet(stage_dir)
+        for cluster, opts in targets.items():
+            imported = write(staged, opts)
+            if imported != n_rows:
+                cause = f"imported {imported} of {n_rows} staged rows"
+                listener.on_import_failed(cluster, cause)
+                raise RuntimeError(f"staged write into {cluster!r}: {cause}")
+            listener.on_import_succeeded(cluster)
+        listener.on_job_succeeded(0.0)
+        return n_rows
+    finally:
+        if own_stage:
+            fs.delete(spark, stage_dir)
 
 
 def write_job(
@@ -135,8 +148,8 @@ def write_job(
     config: JobConfiguration,
     listener: StorageTransportListener | None = None,
 ) -> int:
-    """Generate N rows → bulk-write → count. Returns written row count
-    (reference logs "Written rows", App.scala:244).
+    """Generate N rows → bulk-write. Returns the row count the write
+    observed (reference logs "Written rows", App.scala:244).
 
     ``data_transport`` steers the write path exactly as in the reference
     (``App.scala:98,229-231``): DIRECT writes straight to the sink;
@@ -144,23 +157,15 @@ def write_job(
     storage-transport lifecycle callbacks."""
     transport = DataTransport(config.write_options.get("data_transport", "DIRECT"))
     df = _generate(spark, config)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if transport is DataTransport.S3_COMPAT:
-            n_rows = df.count()
-            staged_write(
-                spark,
-                df,
-                config.write_options,
-                {"default": config.write_options},
-                listener or StorageTransportListener(),
-                n_rows,
-            )
-            return n_rows
-        write(df, config.write_options)
-        return df.count()
-    finally:
-        df.unpersist()
+    if transport is DataTransport.S3_COMPAT:
+        return staged_write(
+            spark,
+            df,
+            config.write_options,
+            {"default": config.write_options},
+            listener or StorageTransportListener(),
+        )
+    return write(df, config.write_options)
 
 
 def read_job(spark: SparkSession, config: JobConfiguration) -> int:
@@ -179,15 +184,9 @@ def write_read_same_table(spark: SparkSession, config: JobConfiguration) -> tupl
 def copy_table(spark: SparkSession, config: JobConfiguration) -> int:
     """oneClusterCopyTable: read source → bulk-write into target → count
     (reference ``copyTable`` = ``writeExisting(read()).get.count()``,
-    App.scala:237-240). One cached lineage serves both the write and the
-    count instead of re-reading the source."""
-    df = read(spark, config.read_options)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        write(df, config.write_options)
-        return df.count()
-    finally:
-        df.unpersist()
+    App.scala:237-240). The write counts the rows it copies, so the source
+    is read once."""
+    return write(read(spark, config.read_options), config.write_options)
 
 
 def two_clusters_copy_table(
@@ -196,13 +195,7 @@ def two_clusters_copy_table(
     """twoClustersCopyTable: write on cluster 1 → read cluster 1 → write the
     same data into cluster 2. Returns (written_first, copied_to_second)."""
     written = write_job(spark, config)
-    df = read(spark, config.read_options)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        write(df, second_write_options)
-        copied = df.count()
-    finally:
-        df.unpersist()
+    copied = write(read(spark, config.read_options), second_write_options)
     return written, copied
 
 
@@ -219,23 +212,17 @@ def two_clusters_coordinated_write(
     Two-phase: (1) stage the dataset once into a staging directory, firing
     object-persisted/stage-succeeded callbacks per target; (2) only when every
     target staged successfully, import (rename/copy) into each target path.
-    On any staging failure nothing is imported. Returns written rows.
+    On any staging failure nothing is imported. Returns the staged rows,
+    which every import matched.
     """
     listener = listener or CoordinatedStorageTransportListener(list(targets))
-    df = _generate(spark, config).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        n_rows = df.count()
-        staged_write(
-            spark,
-            df,
-            config.write_options,
-            {c: {**opts, "mode": "overwrite"} for c, opts in targets.items()},
-            listener,
-            n_rows,
-        )
-        return n_rows
-    finally:
-        df.unpersist()
+    return staged_write(
+        spark,
+        _generate(spark, config),
+        config.write_options,
+        {c: {**opts, "mode": "overwrite"} for c, opts in targets.items()},
+        listener,
+    )
 
 
 def table_to_parquet(
@@ -250,22 +237,16 @@ def table_to_parquet(
     driver-side work-unit bookkeeping and no ``collect()`` of file names.
     Returns (rows, files_produced).
     """
-    df = read(spark, config.read_options)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        write(
-            df,
-            {
-                **config.write_options,
-                "path": output_dir,
-                "mode": "overwrite",
-                "maxRecordsPerFile": config.write_options.get(
-                    "maxRecordsPerFile", 100_000
-                ),
-            },
-        )
-        rows = df.count()
-    finally:
-        df.unpersist()
+    rows = write(
+        read(spark, config.read_options),
+        {
+            **config.write_options,
+            "path": output_dir,
+            "mode": "overwrite",
+            "maxRecordsPerFile": config.write_options.get(
+                "maxRecordsPerFile", 100_000
+            ),
+        },
+    )
     n_files = len(fs.list_data_files(spark, output_dir, suffix=".parquet"))
     return rows, n_files

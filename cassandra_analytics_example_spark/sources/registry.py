@@ -23,7 +23,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, DataFrameReader, DataFrameWriter, SparkSession
+from pyspark.sql import (
+    DataFrame,
+    DataFrameReader,
+    DataFrameWriter,
+    Observation,
+    SparkSession,
+)
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.sources.options import (
@@ -47,7 +53,8 @@ TABLES = (
 CASSANDRA_FORMAT = "org.apache.spark.sql.cassandra"
 MAX_RECORDS_PER_FILE = 100_000  # reference App.scala:68
 
-_CONNECTOR_PROBE: dict[str, bool] = {}  # session id → jar-on-classpath
+_CONNECTOR_PROBE: dict[str, bool] = {}  # app id → jar-on-classpath
+_STANDIN_SESSIONS: set[str] = set()  # session UUIDs the stand-in is registered in
 
 
 def cassandra_format(spark: SparkSession) -> str:
@@ -72,7 +79,13 @@ def cassandra_format(spark: SparkSession) -> str:
         return CASSANDRA_FORMAT
     from cassandra_analytics_example_spark.sources import standin
 
-    return standin.register(spark)
+    # data sources register per session; registering again would only
+    # re-pickle the class and log a replacement warning
+    session = spark._jsparkSession.sessionUUID()
+    if session not in _STANDIN_SESSIONS:
+        standin.register(spark)
+        _STANDIN_SESSIONS.add(session)
+    return standin.STANDIN_FORMAT
 
 
 def get_reader(spark: SparkSession, options: dict[str, str]) -> DataFrameReader:
@@ -110,12 +123,10 @@ def read(spark: SparkSession, options: dict[str, str]) -> DataFrame:
     snap_name = options.get("snapshotName")
     if options.get("createSnapshot") == "true":
         from cassandra_analytics_example_spark.sources.snapshot import (
-            create_snapshot,
-            read_snapshot,
+            snapshot_frame,
         )
 
-        name = create_snapshot(spark, path, snap_name)
-        return read_snapshot(spark, path, name)
+        return snapshot_frame(spark, path, snap_name)[1]
     if snap_name:
         from cassandra_analytics_example_spark.sources.snapshot import (
             read_snapshot,
@@ -163,19 +174,29 @@ def apply_write_discipline(df: DataFrame, options: dict[str, str]) -> DataFrame:
     return out.sortWithinPartitions(*cols)
 
 
-def write(df: DataFrame, options: dict[str, str]) -> DataFrame:
-    """Write ``df`` through the configured sink and return it (reference
-    ``writeExisting``, ``SparkUtils.scala:67-74``)."""
-    out = apply_write_discipline(df, options)
+def write(df: DataFrame, options: dict[str, str]) -> int:
+    """Write ``df`` through the configured sink and return the number of
+    rows written (reference ``writeExisting(...).count()``,
+    ``SparkUtils.scala:67-74``, ``App.scala:239``) — counted inside the
+    write itself, so the caller needs no second action over the lineage.
+
+    The count is an observed metric attached after the write discipline,
+    i.e. in the write's own final stage: Spark merges a task's metric
+    update once, for its successful attempt, whereas a counter in an
+    upstream shuffle-map stage could count a retried stage twice."""
     path = options.get("path")
     fmt = options.get("format", "parquet")
+    if fmt != "cassandra" and path is None:
+        raise ValueError("parquet write requires a 'path' option")
+    rows = Observation()
+    out = apply_write_discipline(df, options).observe(
+        rows, F.count(F.lit(1)).alias("rows")
+    )
     if fmt == "cassandra":
         get_writer(out, options).save()
     else:
-        if path is None:
-            raise ValueError("parquet write requires a 'path' option")
         get_writer(out, options).save(path)
-    return df
+    return rows.get["rows"]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -11,7 +11,10 @@ Reading the snapshot reads exactly those files. Zero data movement at any
 scale — snapshotting a 100 TB table writes a few MB of file list, the same
 trick Delta/Iceberg use for time travel. The manifest lives under
 ``<table>/_snapshots/<name>.json`` (underscore-prefixed → invisible to
-normal Spark reads of the table directory).
+normal Spark reads of the table directory). It also records the table's
+schema, inferred once when the snapshot is taken, so a snapshot read plans
+from it instead of inferring again from parquet footers (a Spark job).
+Manifests written before the schema was recorded still read, by inference.
 
 Caveat (same as Cassandra's): a snapshot protects against APPENDS, not
 against deleting the underlying files — ``mode=overwrite`` of the table
@@ -24,6 +27,7 @@ import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from cassandra_analytics_example_spark.plans import fs
 
@@ -34,24 +38,36 @@ def _manifest_path(table_path: str, name: str) -> str:
     return f"{table_path.rstrip('/')}/{_SNAPDIR}/{name}.json"
 
 
-def create_snapshot(
+def snapshot_frame(
     spark: SparkSession, table_path: str, name: str | None = None
-) -> str:
+) -> tuple[str, DataFrame]:
     """Freeze the table's current data-file set under ``name`` (default: a
     random UUID, like the reference's ``UUID.randomUUID`` snapshot names).
-    Returns the snapshot name."""
+    Returns the snapshot name and a DataFrame over the frozen files — the
+    one plan whose schema inference the manifest records."""
     name = name or str(uuid.uuid4())
     files = fs.list_data_files(spark, table_path, suffix=".parquet")
     if not files:
         raise ValueError(f"no parquet data files under {table_path}")
+    paths = [p for p, _ in files]
+    df = spark.read.parquet(*paths)
     manifest = {
         "name": name,
         "table_path": table_path,
-        "files": [p for p, _ in files],
+        "files": paths,
         "total_bytes": sum(sz for _, sz in files),
+        "schema": df.schema.jsonValue(),
     }
     fs.write_text(spark, _manifest_path(table_path, name), json.dumps(manifest))
-    return name
+    return name, df
+
+
+def create_snapshot(
+    spark: SparkSession, table_path: str, name: str | None = None
+) -> str:
+    """Freeze the table's current data-file set under ``name``; returns the
+    snapshot name (see ``snapshot_frame``)."""
+    return snapshot_frame(spark, table_path, name)[0]
 
 
 def read_snapshot(
@@ -61,4 +77,7 @@ def read_snapshot(
     table after the snapshot are invisible."""
     raw = fs.read_text(spark, _manifest_path(table_path, name))
     manifest = json.loads(raw)
-    return spark.read.parquet(*manifest["files"])
+    reader = spark.read
+    if "schema" in manifest:
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    return reader.parquet(*manifest["files"])

@@ -39,6 +39,24 @@ def test_standin_selected_without_connector_jar(spark):
     assert cassandra_format(spark) == STANDIN_FORMAT
 
 
+def test_standin_registered_once_per_session(spark, monkeypatch):
+    """Every cassandra read and write resolves the format; only the first
+    resolution in a session registers the data source (registering again
+    re-pickles the class and logs a replacement warning)."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    cassandra_format(spark)
+    calls = []
+    real = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, ds: calls.append(ds) or real(self, ds),
+    )
+    assert cassandra_format(spark) == STANDIN_FORMAT
+    assert calls == []
+
+
 def test_write_read_roundtrip(spark, tmp_path):
     df = gen_dataset_deterministic(spark, 1000, 4)
     write(df, _opts(tmp_path, partition_key="id", splits="4"))

@@ -1038,3 +1038,55 @@ def test_list_data_files_scheme_less_path_under_hidden_ancestor(spark, tmp_path)
         spark, {"path": table, "createSnapshot": "true", "snapshotName": "s2"}
     )
     assert again.count() == 600
+
+
+def test_etl_legs_run_one_pass(spark, tmp_path):
+    """Each bulk-ETL leg runs its lineage once: the sink write counts its
+    own rows, and snapshot and staging reads plan from a known schema
+    instead of running a parquet footer-inference job. The job budgets
+    below are what the legs take with that design; a persist+count pair
+    or a re-inferred read adds at least one job. No leg leaves a cached
+    RDD behind."""
+    from cassandra_analytics_example_spark.config import JobConfiguration
+    from cassandra_analytics_example_spark.plans import jobs
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cached_before = set(sc._jsc.getPersistentRDDs().keySet())
+    uri = lambda name: f"file://{tmp_path}/{name}"  # noqa: E731
+
+    def n_jobs(leg, fn):
+        group = f"one-pass-{leg}"
+        sc.setJobGroup(group, leg)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    cfg = JobConfiguration
+    budgets = {
+        "write_job": (2, lambda: jobs.write_job(spark, cfg(write_options={
+            "rows": "4000", "path": uri("t1"), "mode": "overwrite",
+            "partition_key": "id", "splits": "4"}))),
+        "snapshot": (None, lambda: jobs.read_job(spark, cfg(read_options={
+            "path": uri("t1"), "createSnapshot": "true", "snapshotName": "s1"}))),
+        "append": (1, lambda: jobs.write_job(spark, cfg(write_options={
+            "rows": "400", "path": uri("t1"), "mode": "append"}))),
+        "copy_table": (1, lambda: jobs.copy_table(spark, cfg(
+            read_options={"path": uri("t1"), "snapshotName": "s1"},
+            write_options={"path": uri("t2"), "mode": "overwrite"}))),
+        "table_to_parquet": (2, lambda: jobs.table_to_parquet(
+            spark, cfg(read_options={"path": uri("t2")}), uri("t3"))),
+        "coordinated_write": (3, lambda: jobs.two_clusters_coordinated_write(
+            spark, cfg(write_options={"rows": "4000", "staging_dir": uri("stg")}),
+            {"c1": {"path": uri("c1")}, "c2": {"path": uri("c2")}})),
+    }
+    over = {}
+    for leg, (budget, fn) in budgets.items():
+        used = n_jobs(leg, fn)
+        if budget is not None and used > budget:
+            over[leg] = (used, budget)
+    assert not over, f"legs over their Spark-job budget (used, budget): {over}"
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before

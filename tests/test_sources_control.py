@@ -9,17 +9,29 @@ discipline at the plan level.
 
 from __future__ import annotations
 
+import json
+import signal
+import tempfile
+
 import pytest
+from pyspark.sql.types import StructType
 
 from cassandra_analytics_example_spark.config import JobConfiguration
-from cassandra_analytics_example_spark.datagen import gen_dataset_deterministic
+from cassandra_analytics_example_spark.datagen import (
+    gen_dataset_deterministic,
+    gen_wide_types_deterministic,
+)
 from cassandra_analytics_example_spark.plans import (
     execute,
     execute_job,
+    fs,
+    jobs,
     table_to_parquet,
+    two_clusters_coordinated_write,
     write_job,
 )
 from cassandra_analytics_example_spark.plans.listeners import (
+    CoordinatedStorageTransportListener,
     StorageTransportListener,
 )
 from cassandra_analytics_example_spark.sources import (
@@ -212,6 +224,38 @@ class TestSnapshotIsolation:
         with pytest.raises(Exception):
             create_snapshot(spark, f"file://{tmp_path}/empty")
 
+    def test_manifest_schema_matches_inference(self, spark, tmp_path):
+        """The manifest records the schema inferred at snapshot time; a
+        snapshot read planned from it sees the same schema and rows as an
+        inferring read, across binary, array, map and struct columns."""
+        table = f"file://{tmp_path}/wide"
+        write(gen_wide_types_deterministic(spark, 400, 4), {"path": table})
+        name = create_snapshot(spark, table)
+        manifest = json.loads(
+            fs.read_text(spark, f"{table}/_snapshots/{name}.json")
+        )
+        inferred = spark.read.parquet(table)
+        assert StructType.fromJson(manifest["schema"]) == inferred.schema
+        snap = read_snapshot(spark, table, name)
+        assert snap.schema == inferred.schema
+        by_id = lambda df: sorted(df.collect(), key=lambda r: r.id)  # noqa: E731
+        assert by_id(snap) == by_id(inferred)
+
+    def test_manifest_without_schema_still_reads(self, spark, tmp_path):
+        """A manifest written before the schema was recorded reads by
+        inferring the schema from the frozen files."""
+        table = f"file://{tmp_path}/legacy"
+        write(gen_dataset_deterministic(spark, 300, 2), {"path": table})
+        name = create_snapshot(spark, table)
+        path = f"{table}/_snapshots/{name}.json"
+        manifest = json.loads(fs.read_text(spark, path))
+        del manifest["schema"]
+        fs.write_text(spark, path, json.dumps(manifest))
+        write(gen_dataset_deterministic(spark, 50, 1), {"path": table})
+        snap = read_snapshot(spark, table, name)
+        assert snap.count() == 300
+        assert snap.schema == spark.read.parquet(table).schema
+
 
 class TestDataTransportRouting:
     def test_direct_write_fires_no_transport_callbacks(self, spark, tmp_path):
@@ -255,6 +299,121 @@ class TestDataTransportRouting:
         assert kinds[-1] == "job_succeeded"
         # stage strictly precedes import
         assert kinds.index("stage_succeeded") < kinds.index("import_succeeded")
+
+    def test_default_staging_dir_is_removed(self, spark, tmp_path, monkeypatch):
+        """Without a ``staging_dir`` the stage goes to a generated temporary
+        directory, which the write deletes; a caller's own staging
+        directory is left in place."""
+        tmp = tmp_path / "tmp"
+        tmp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        listener = StorageTransportListener()
+        opts = {
+            "rows": "300",
+            "path": str(tmp_path / "target"),
+            "data_transport": "S3_COMPAT",
+        }
+        assert write_job(spark, JobConfiguration(write_options=opts), listener) == 300
+        staged = [e.detail for e in listener.events if e.kind == "object_persisted"]
+        assert staged and all(str(tmp) in d for d in staged)
+        assert list(tmp.iterdir()) == []
+        assert spark.read.parquet(opts["path"]).count() == 300
+        kept = tmp_path / "kept"
+        write_job(
+            spark,
+            JobConfiguration(write_options={**opts, "staging_dir": str(kept)}),
+        )
+        assert list(kept.glob("*.parquet"))
+
+    def test_short_import_fails_the_staged_write(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An import that writes fewer rows than were staged raises before
+        its import-succeeded callback: the coordinated listener never
+        reports success, and the generated staging directory still goes."""
+        tmp = tmp_path / "tmp"
+        tmp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        targets = {
+            "c1": {"path": str(tmp_path / "c1")},
+            "c2": {"path": str(tmp_path / "c2")},
+        }
+        real_write = jobs.write
+
+        def short_second(df, options):
+            n = real_write(df, options)
+            return n - 1 if options.get("path") == targets["c2"]["path"] else n
+
+        monkeypatch.setattr(jobs, "write", short_second)
+        listener = CoordinatedStorageTransportListener(list(targets))
+        with pytest.raises(RuntimeError, match="c2"):
+            two_clusters_coordinated_write(
+                spark,
+                JobConfiguration(write_options={"rows": "200"}),
+                targets,
+                listener,
+            )
+        kinds = [e.kind for e in listener.events]
+        assert "job_succeeded" not in kinds
+        assert kinds.count("import_succeeded") == 1
+        assert kinds[-1] == "import_failed"
+        assert list(tmp.iterdir()) == []
+
+
+def _empty_frame(spark, kind: str):
+    base = gen_dataset_deterministic(spark, 100, 2)
+    if kind == "filter_false":
+        return base.filter("false")
+    if kind == "limit_0":
+        return base.limit(0)
+    if kind == "range_0":
+        return gen_dataset_deterministic(spark, 0, 2)
+    return spark.createDataFrame([], base.schema)
+
+
+class TestWriteCounts:
+    @pytest.mark.parametrize("backend", ["parquet", "cassandra"])
+    @pytest.mark.parametrize(
+        "kind", ["filter_false", "limit_0", "range_0", "create_empty"]
+    )
+    def test_empty_input_counts_zero(self, spark, tmp_path, kind, backend):
+        """The write's row count is an observed metric; an empty input must
+        still report it (0) rather than leave the caller waiting for it."""
+        if backend == "parquet":
+            opts = {"path": str(tmp_path / "t"), "mode": "overwrite"}
+        else:
+            opts = {
+                "format": "cassandra",
+                "sidecar_contact_points": str(tmp_path),
+                "keyspace": "ks",
+                "table": "t",
+            }
+
+        def hung(signum, frame):
+            raise TimeoutError("write never reported its row count")
+
+        previous = signal.signal(signal.SIGALRM, hung)
+        signal.alarm(180)
+        try:
+            assert write(_empty_frame(spark, kind), opts) == 0
+        finally:
+            signal.alarm(0)
+            signal.signal(signal.SIGALRM, previous)
+
+    def test_nondeterministic_write_job_counts_rows_on_disk(self, spark, tmp_path):
+        path = str(tmp_path / "random")
+        n = write_job(
+            spark,
+            JobConfiguration(
+                write_options={
+                    "rows": "700",
+                    "path": path,
+                    "mode": "overwrite",
+                    "deterministic": "false",
+                }
+            ),
+        )
+        assert n == spark.read.parquet(path).count() == 700
 
 
 class TestJobWrappers:
