@@ -17,6 +17,9 @@ Design rules (100 TB discipline):
 * Python only at Arrow boundaries (pandas_udf / mapInPandas), never per-row.
 """
 
+# first: every process that imports the package gets lazy zipimport
+# invalidation before any Python-worker task re-reads the zip indexes
+from cassandra_analytics_example_spark import _zipcache  # noqa: F401
 from cassandra_analytics_example_spark.session import get_spark, stop_spark
 from cassandra_analytics_example_spark.config import JobConfiguration
 

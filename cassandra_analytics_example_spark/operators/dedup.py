@@ -746,13 +746,20 @@ def token_containment_pairs(
     )
 
 
+#: feature rows per step of :func:`_simhash_batches`' bit count: bounds the
+#: per-step (features x n_bits) int64 matrix under 8 MiB (n_bits <= 60), whatever
+#: the document's size (unchunked, a 1M-feature document needed ~0.5 GB).
+_SIMHASH_CHUNK = 1 << 14
+
+
 def _simhash_batches(n_bits: int, gram_n: int):
     """Arrow batch function for :func:`simhash`: per document, the distinct
     word-``gram_n``-gram feature set, one 60-bit md5 hash per feature
     (identical to ``md5_u60``: first 15 hex chars of md5(utf-8 bytes) as a
-    non-negative bigint), per-bit majority vote vectorized in numpy.
-    Returned as a closure over two ints (cheaply picklable); all heavy
-    state (shift/weight vectors) is built once per task inside."""
+    non-negative bigint), per-bit majority vote vectorized in numpy over
+    ``_SIMHASH_CHUNK``-feature steps. Returned as a closure over two ints
+    (cheaply picklable); all heavy state (shift/weight vectors) is built
+    once per task inside."""
 
     def batches(it):
         import hashlib
@@ -786,7 +793,11 @@ def _simhash_batches(n_bits: int, gram_n: int):
                 dtype=np.int64,
                 count=len(feats),
             )
-            ones = ((hs[:, None] >> shifts) & 1).sum(axis=0)
+            ones = np.zeros(n_bits, dtype=np.int64)
+            for i in range(0, len(hs), _SIMHASH_CHUNK):
+                bits = hs[i: i + _SIMHASH_CHUNK, None] >> shifts
+                bits &= 1
+                ones += bits.sum(axis=0)
             return int(weights[(2 * ones) > len(feats)].sum())
 
         for b in it:

@@ -89,13 +89,22 @@ def cassandra_format(spark: SparkSession) -> str:
 
 
 def get_reader(spark: SparkSession, options: dict[str, str]) -> DataFrameReader:
-    """Reader bound to the configured backend (default parquet)."""
+    """Reader bound to the configured backend (default parquet).
+
+    The cassandra stand-in also gets the session's pushdown conf in its
+    option map (``standin.PUSHDOWN_OPTION``): it picks its reader variant in
+    a planner worker, where no session exists. The real connector never
+    sees that key."""
     fmt = options.get("format", "parquet")
     reader = spark.read
     if fmt == "cassandra":
-        reader = reader.format(cassandra_format(spark)).options(
-            **cassandra_options(options, "read")
-        )
+        from cassandra_analytics_example_spark.sources import standin
+
+        source = cassandra_format(spark)
+        opts = cassandra_options(options, "read")
+        if source == standin.STANDIN_FORMAT:
+            opts[standin.PUSHDOWN_OPTION] = str(standin.pushdown_enabled(spark)).lower()
+        reader = reader.format(source).options(**opts)
     else:
         reader = reader.format(fmt).options(
             **{k: v for k, v in options.items() if k not in CONTROL_KEYS}

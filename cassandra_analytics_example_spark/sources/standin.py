@@ -23,8 +23,9 @@ an option map (``keyspace``/``table``/``sidecar_contact_points``/
   the reference's S3_COMPAT transport (``App.scala:208-235``); ``abort``
   removes the staging directory, leaving the table untouched;
 * the reader supports filter pushdown (``pushFilters``) for comparison
-  predicates, mirroring the connector's partition-key pushdown surface, and
-  yields Arrow record batches (never per-row Python);
+  predicates on integer, string, boolean and date columns, mirroring the
+  connector's partition-key pushdown surface, and yields Arrow record
+  batches (never per-row Python);
 * registry CONTROL keys (``path``/``splits``/``rows``…) are *rejected* if
   they reach the DataSource — asserting the ``cassandra_options``
   translation actually stripped them (sources/options.py:73-90).
@@ -58,7 +59,16 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DateType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+)
 
 STANDIN_FORMAT = "cassandra_standin"
 
@@ -74,6 +84,11 @@ _SNAPDIR = "snapshots"
 _RETAINED = ".retained"
 
 _PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
+
+#: the session's pushdown conf, resolved on the driver by the registry
+#: (``registry.get_reader``): Spark calls ``reader()`` in a planner worker,
+#: where there is no session to ask.
+PUSHDOWN_OPTION = "standin_filter_pushdown"
 
 #: portable token space: md5_u60 tokens (first 15 hex chars of md5 of the
 #: partition key's string form) lie in [0, 2^60) — the stand-in analogue of
@@ -264,6 +279,20 @@ class StandInReaderBase(DataSourceReader):
         yield from table.to_batches()
 
 
+#: column types whose comparisons pyarrow evaluates exactly as Spark does.
+#: Floats are not among them: Spark orders NaN above every number and holds
+#: NaN = NaN, pyarrow drops NaN from both ``> x`` and ``== NaN``.
+_EXACT_TYPES = (
+    ByteType,
+    ShortType,
+    IntegerType,
+    LongType,
+    StringType,
+    BooleanType,
+    DateType,
+)
+
+
 class StandInReader(StandInReaderBase):
     """Pushdown-capable variant: exact pushdown of comparison filters into
     the parquet scan (row-group pruning via pyarrow) — the shape of the
@@ -272,9 +301,9 @@ class StandInReader(StandInReaderBase):
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """Consume the comparison filters we can evaluate EXACTLY inside the
-        pyarrow scan; return the rest for Spark to re-apply. (Spark still
-        re-checks consumed filters' correctness only if we returned them —
-        so only exact translations are consumed.)"""
+        pyarrow scan; return the rest for Spark to re-apply. (Spark never
+        re-checks a consumed filter, so only exact translations are
+        consumed: comparisons on ``_EXACT_TYPES`` columns.)"""
         ops = {
             EqualTo: "==",
             GreaterThan: ">",
@@ -282,9 +311,14 @@ class StandInReader(StandInReaderBase):
             LessThan: "<",
             LessThanOrEqual: "<=",
         }
+        types = {f.name: f.dataType for f in self._schema.fields}
         for f in filters:
             op = ops.get(type(f))
-            if op is not None and len(f.attribute) == 1:
+            if (
+                op is not None
+                and len(f.attribute) == 1
+                and isinstance(types.get(f.attribute[0]), _EXACT_TYPES)
+            ):
                 self._pushed.append((f.attribute[0], op, f.value))
             elif isinstance(f, IsNotNull) and len(f.attribute) == 1:
                 self._pushed.append((f.attribute[0], "is_not_null", None))
@@ -478,19 +512,30 @@ class CassandraStandInDataSource(DataSource):
         """Conf-adaptive: hand out the pushdown reader only when the session
         allows Python-DataSource pushdown — in any other session (e.g. a
         harness-built default session) fall back to the pushdown-free reader
-        rather than tripping Spark 4's DATA_SOURCE_PUSHDOWN_DISABLED error."""
-        from pyspark.sql import SparkSession
+        rather than tripping Spark 4's DATA_SOURCE_PUSHDOWN_DISABLED error.
 
-        session = SparkSession.getActiveSession()
-        enabled = (
-            session is not None
-            and str(session.conf.get(_PUSHDOWN_CONF, "false")).lower() == "true"
-        )
+        Spark calls this in a planner worker, which has no session: the
+        registry resolves the conf on the driver into ``PUSHDOWN_OPTION``.
+        Without that option (a direct ``spark.read.format`` load) the active
+        session, if any, decides."""
+        opt = self.options.get(PUSHDOWN_OPTION)
+        if opt is not None:
+            enabled = opt == "true"
+        else:
+            from pyspark.sql import SparkSession
+
+            session = SparkSession.getActiveSession()
+            enabled = session is not None and pushdown_enabled(session)
         cls = StandInReader if enabled else StandInReaderBase
         return cls(self.options, schema, self._resolve_snapshot())
 
     def writer(self, schema: StructType, overwrite: bool) -> StandInWriter:
         return StandInWriter(self.options, schema, overwrite)
+
+
+def pushdown_enabled(spark) -> bool:
+    """Whether ``spark`` allows Python-DataSource filter pushdown."""
+    return str(spark.conf.get(_PUSHDOWN_CONF, "false")).lower() == "true"
 
 
 def register(spark) -> str:

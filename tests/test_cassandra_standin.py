@@ -113,6 +113,76 @@ def test_filter_pushdown_values(spark, tmp_path):
     assert got == 100
 
 
+def _scan_output_rows(spark, action):
+    """Run ``action``; return its result and the summed ``number of output
+    rows`` of the BatchScan nodes in the SQL executions it recorded."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    first = store.executionsCount()
+    result = action()
+    bus.waitUntilEmpty()
+    rows = 0
+    for eid in range(first, store.executionsCount()):
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if not node.name().startswith("BatchScan"):
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                metric = metrics.apply(k)
+                value = values.get(metric.accumulatorId())
+                if metric.name() == "number of output rows" and value.isDefined():
+                    rows += int(value.get().replace(",", ""))
+    return result, rows
+
+
+def test_filter_pushdown_reaches_the_scan(spark, tmp_path):
+    """Spark picks the reader in a planner worker, where no session exists:
+    the registry's driver-resolved option must still select the pushdown
+    reader, so the scan itself emits only the matching rows."""
+    write(gen_dataset_deterministic(spark, 1000, 4), _opts(tmp_path))
+    df = read(spark, _opts(tmp_path)).filter(
+        (F.col("id") >= 100) & (F.col("id") < 200)
+    )
+    got, scanned = _scan_output_rows(spark, df.count)
+    assert got == 100
+    assert scanned == 100
+
+
+def test_float_filters_keep_spark_nan_semantics(spark, tmp_path):
+    """Spark orders NaN above every number and holds NaN = NaN; pyarrow
+    does neither, so double-column filters stay with Spark."""
+    df = spark.createDataFrame(
+        [(0, float("nan")), (1, 2.0), (2, 0.5), (3, None)], "id long, x double"
+    )
+    write(df, _opts(tmp_path, table="nan"))
+    back = read(spark, _opts(tmp_path, table="nan"))
+    for cond, want in ((F.col("x") > 1.0, [0, 1]), (F.col("x") == float("nan"), [0])):
+        assert sorted(r.id for r in df.filter(cond).collect()) == want
+        assert sorted(r.id for r in back.filter(cond).collect()) == want
+
+
+def test_pushdown_option_only_reaches_standin(spark, tmp_path, monkeypatch):
+    from pyspark.sql import DataFrameReader
+
+    from cassandra_analytics_example_spark.sources import registry
+    from cassandra_analytics_example_spark.sources.standin import PUSHDOWN_OPTION
+
+    seen = []
+    real = DataFrameReader.options
+    monkeypatch.setattr(
+        DataFrameReader, "options", lambda self, **kw: seen.append(kw) or real(self, **kw)
+    )
+    registry.get_reader(spark, _opts(tmp_path))
+    assert seen[-1][PUSHDOWN_OPTION] == "true"
+    monkeypatch.setattr(registry, "cassandra_format", lambda s: registry.CASSANDRA_FORMAT)
+    registry.get_reader(spark, _opts(tmp_path))
+    assert PUSHDOWN_OPTION not in seen[-1]
+
+
 def test_pushfilters_consumes_comparisons(spark, tmp_path):
     from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, StringContains
 

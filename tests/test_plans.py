@@ -1089,4 +1089,7 @@ def test_etl_legs_run_one_pass(spark, tmp_path):
         if budget is not None and used > budget:
             over[leg] = (used, budget)
     assert not over, f"legs over their Spark-job budget (used, budget): {over}"
-    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before
+    # earlier tests' pins may be released meanwhile (the context cleaner
+    # unpersists collected RDDs), so only a NEW persistent RDD is a leak
+    left_behind = set(sc._jsc.getPersistentRDDs().keySet()) - cached_before
+    assert not left_behind, f"legs left cached RDDs behind: {left_behind}"
