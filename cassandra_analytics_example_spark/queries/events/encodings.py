@@ -7,15 +7,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cassandra_analytics_example_spark.functions.numeric import money_sum
 from cassandra_analytics_example_spark.operators.quantiles import (
     group_quantiles_exact,
 )
-from cassandra_analytics_example_spark.operators.relational import (
-    asof_join,
-    lww_latest,
-    sessionize,
-)
+from cassandra_analytics_example_spark.operators.relational import sessionize
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
 

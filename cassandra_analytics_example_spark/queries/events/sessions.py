@@ -11,11 +11,7 @@ from cassandra_analytics_example_spark.functions.numeric import money_sum
 from cassandra_analytics_example_spark.operators.quantiles import (
     group_quantiles_exact,
 )
-from cassandra_analytics_example_spark.operators.relational import (
-    asof_join,
-    lww_latest,
-    sessionize,
-)
+from cassandra_analytics_example_spark.operators.relational import sessionize
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
 from cassandra_analytics_example_spark.queries.events.windows import (  # noqa: E402

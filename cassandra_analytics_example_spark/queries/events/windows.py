@@ -8,9 +8,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.functions.numeric import money_sum
-from cassandra_analytics_example_spark.operators.quantiles import (
-    group_quantiles_exact,
-)
 from cassandra_analytics_example_spark.operators.relational import (
     asof_join,
     lww_latest,

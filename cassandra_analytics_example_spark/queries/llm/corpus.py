@@ -4,7 +4,7 @@ former queries/llm.py in round 10 (zero behavior change; see llm/__init__.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.dedup import (
@@ -13,7 +13,6 @@ from cassandra_analytics_example_spark.operators.dedup import (
     embedding_near_dup_pairs,
     exact_dedup,
     minhash_lsh_dedup,
-    simhash,
     token_jaccard_pairs,
 )
 from cassandra_analytics_example_spark.operators.multimodal import (

@@ -7,32 +7,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cassandra_analytics_example_spark.operators.dedup import (
-    simhash_near_dup_pairs_auto,
-    connected_components,
-    embedding_near_dup_pairs,
-    exact_dedup,
-    minhash_lsh_dedup,
-    simhash,
-    token_jaccard_pairs,
-)
-from cassandra_analytics_example_spark.operators.multimodal import (
-    attach_payload,
-    extract_features,
-    frame_sample,
-)
-from cassandra_analytics_example_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_topk,
-    lsh_topk,
-)
-from cassandra_analytics_example_spark.operators.text import (
-    detect_language,
-    fingerprint,
-    quality_features,
-    rolling_fingerprint,
-    token_stats,
-)
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
 

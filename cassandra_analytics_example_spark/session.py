@@ -20,6 +20,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "cassandra-analytics-example-spark"
 
+# The directory holding the package, and the conf that hands it to Python
+# workers (UDFs, mapInArrow, the cassandra stand-in all import it there).
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def _cpus() -> int:
     try:
@@ -78,6 +83,12 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    # Workers start in the driver's cwd, so without this a driver launched
+    # outside the repository root fails every Python task with
+    # ModuleNotFoundError. A caller's own worker PYTHONPATH is kept.
+    paths = [p for p in conf.get(_WORKER_PYTHONPATH, "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        conf[_WORKER_PYTHONPATH] = os.pathsep.join(paths + [_PACKAGE_PARENT])
     for k, v in conf.items():
         builder = builder.config(k, v)
 

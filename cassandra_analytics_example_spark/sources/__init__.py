@@ -6,7 +6,6 @@ from cassandra_analytics_example_spark.sources.registry import (
     apply_write_discipline,
     get_reader,
     get_writer,
-    load_table,
     read,
     write,
 )
@@ -22,7 +21,6 @@ __all__ = [
     "create_snapshot",
     "get_reader",
     "get_writer",
-    "load_table",
     "read",
     "read_snapshot",
     "write",

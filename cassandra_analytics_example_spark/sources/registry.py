@@ -21,8 +21,6 @@ per task with ``maxRecordsPerFile`` bounding file sizes (the reference's
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import (
     DataFrame,
     DataFrameReader,
@@ -207,7 +205,3 @@ def write(df: DataFrame, options: dict[str, str]) -> int:
         get_writer(out, options).save(path)
     return rows.get["rows"]
 
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table from a scale-factor directory (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

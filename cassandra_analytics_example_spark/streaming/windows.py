@@ -9,7 +9,7 @@ plain function over an (un)bounded DataFrame, so the SAME logic runs:
 * in batch mode — the oracle-checked twins in queries/events.py.
 
 Local smoke path: file-source readStream over the fixture parquet, memory
-sink, ``processAllAvailable()`` — bounded input drives the stream to
+sink, ``availableNow`` trigger — bounded input drives the stream to
 completion synchronously. At scale the source becomes Kafka/object-store
 listing and sinks become parquet/Delta with checkpointing; the
 transformations are unchanged.
@@ -19,19 +19,32 @@ The fixture's ``ts`` column has shipped either as ``timestamp[ns]``
 or as native ``timestamp[us]``; ``readStream`` requires an explicit
 schema, so the loader probes the fixture's footer with a driver-side
 batch read first and adapts — both vintages surface an identical
-µs-timestamp ``ts`` column before watermarking.
+µs-timestamp ``ts`` column before watermarking. Every events-fed store
+streams through ``stream_events``, and its batch side (baselines, twins)
+reads through ``queries/_tables.py:events``.
+
+Every store runs through two private helpers. ``_drain`` starts a
+stream with the ``availableNow`` trigger, blocks until all input is
+processed and stops it even when a microbatch raises, so no store leaves
+a query running. ``_fold_store`` is the merge-on-read store shape: it
+appends ``fold(batch)`` to a parquet store per microbatch (offsets
+checkpointed beside it) and returns the un-merged partials, to which
+each store applies its own merge. Stores that count their epochs (s09,
+s14, s21) write their own sinks and call ``_drain`` directly.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 EVENTS_STREAM_SCHEMA = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, "
@@ -87,6 +100,43 @@ def _require_single_file_source(sf_dir: str, table: str, what: str) -> None:
             f"(one microbatch); {path} is not a single file - the "
             "registered value oracle does not hold for multi-batch arrival"
         )
+
+
+def _drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run a bounded stream to completion: ``availableNow`` plans every
+    input present at start, the call blocks until the last microbatch
+    commits (re-raising a failed batch's error), and the query is
+    stopped either way. Returns the stopped query, whose
+    ``recentProgress`` stays readable."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    return q
+
+
+def _fold_store(
+    stream: DataFrame, fold: Callable[[DataFrame], DataFrame], prefix: str
+) -> DataFrame:
+    """Drain ``stream`` into an append-only parquet store: each
+    microbatch appends ``fold(batch)`` under a fresh temp root named by
+    ``prefix``, with the source offsets checkpointed beside it. Returns
+    the appended partials UN-merged; the caller's merge-on-read (sum,
+    max, argmin, top-k ...) publishes the store."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    target = os.path.join(root, "store")
+
+    def append(batch: DataFrame, epoch_id: int) -> None:
+        fold(batch).write.mode("append").parquet(target)
+
+    _drain(
+        stream.writeStream.foreachBatch(append).option(
+            "checkpointLocation", os.path.join(root, "ck")
+        )
+    )
+    return stream.sparkSession.read.parquet(target)
 
 
 def tumbling_aggregate(
@@ -208,18 +258,11 @@ def _run_to_memory(
     state — matching the batch twins minus the watermark drop (no late
     data in the fixture)."""
     name = f"s_{uuid.uuid4().hex[:12]}"
-    q = (
+    _drain(
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
     return spark.table(name)
 
 
@@ -329,8 +372,6 @@ def run_stream_dedup_to_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams append immediately. Returns the sink read back, re-aggregated
     to match s03's output shape. On a cluster the paths become object-store
     URIs; the checkpoint makes restarts resume, not recompute."""
-    import tempfile
-
     out = tempfile.mkdtemp(prefix="spark_graft_stream_sink_")
     ckpt = tempfile.mkdtemp(prefix="spark_graft_stream_ckpt_")
     deduped = dedup_within_watermark(stream_events(spark, sf_dir)).select(
@@ -339,19 +380,12 @@ def run_stream_dedup_to_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     _require_single_file_source(
         sf_dir, "events", "run_stream_dedup_to_files"
     )
-    q = (
+    q = _drain(
         deduped.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
     # count DATA batches, not batch ids: a watermark-advancing no-data
     # commit batch trails the data batch under availableNow with stateful
     # operators (numInputRows == 0), and is not an arrival-order hazard
@@ -527,8 +561,6 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joins to zero new rows, which the test exercises by re-running
     the stream over the same input.
     """
-    import tempfile
-
     out = tempfile.mkdtemp(prefix="upsert_sink_")
     target = os.path.join(out, "target")
     ck = os.path.join(out, "ck")
@@ -556,17 +588,11 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fresh.write.mode("append").parquet(target)
 
-    q = (
-        latest.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        latest.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", ck
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
     # the per-type upsert-count oracle (s09, r13) counts DISTINCT
     # (user, type) keys, exact only when the dedup feeding the upsert saw
     # all rows in one microbatch — same invariant class as s03/s07/s21,
@@ -597,9 +623,11 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns per-(segment, event_type) counts re-aggregated in batch from
     the enriched row stream (append mode — row-level joins emit
     immediately; only the summary is small enough to assert on)."""
+    from cassandra_analytics_example_spark.queries._tables import events
+
     ev = stream_events(spark, sf_dir)
     users = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        events(spark, sf_dir)
         .select("user_id")
         .distinct()
         .withColumn("segment", (F.col("user_id") % 5).cast("bigint"))
@@ -645,8 +673,6 @@ def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Update output mode: each microbatch emits the keys it touched with
     their latest totals; on the bounded fixture (one microbatch) that is
     one row per user."""
-    ev = stream_events(spark, sf_dir).select("user_id", "value")
-
     if not tws_available():
         totals = running_user_totals(stream_events(spark, sf_dir)).select(
             "user_id",
@@ -684,6 +710,7 @@ def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
+    ev = stream_events(spark, sf_dir).select("user_id", "value")
     out = ev.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=RunningTotals(),
         outputStructType="user_id BIGINT, n BIGINT, total DOUBLE",
@@ -731,41 +758,19 @@ def run_stream_countmin(
     produce the IDENTICAL final cell table — the determinism/mergeability
     property tests/test_streaming_batch_twins.py pins.
     """
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.sketches import (
         countmin_cells,
     )
 
-    out = tempfile.mkdtemp(prefix="cms_sink_")
-    target = os.path.join(out, "cells")
-    ck = os.path.join(out, "ck")
-
     keys = stream_events(spark, sf_dir).select(
         F.col("event_type").alias("__k")
     )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        countmin_cells(batch, "__k", depth=depth, width=width).write.mode(
-            "append"
-        ).parquet(target)
-
-    q = (
-        keys.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    cells = _fold_store(
+        keys,
+        lambda batch: countmin_cells(batch, "__k", depth=depth, width=width),
+        "cms_sink_",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    return (
-        spark.read.parquet(target)
-        .groupBy("d", "cell")
-        .agg(F.sum("c").cast("bigint").alias("c"))
-    )
+    return cells.groupBy("d", "cell").agg(F.sum("c").cast("bigint").alias("c"))
 
 
 def jsonl_ingest_accounting(stream_df: DataFrame) -> DataFrame:
@@ -796,8 +801,6 @@ def run_jsonl_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean/corrupt accounting — the streaming twin of q123's batch round
     trip, proving the quarantine contract holds under the file-source
     microbatch model."""
-    import tempfile
-
     from cassandra_analytics_example_spark.sources.files import (
         CORRUPT_COL,
         write_jsonl,
@@ -880,8 +883,6 @@ def late_data_audit(
 
     Returns per-event-type accounting: ``n_ontime`` / ``n_late`` counts.
     """
-    import tempfile
-
     root = tempfile.mkdtemp(prefix="s14_late_audit_")
     staged = os.path.join(root, "staged")
     os.makedirs(staged, exist_ok=True)
@@ -933,17 +934,11 @@ def late_data_audit(
                 1
             ).write.mode("overwrite").parquet(wm_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(audit_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream.writeStream.foreachBatch(audit_batch).option(
+            "checkpointLocation", ck
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
 
     # the registered oracle (r13) encodes EXACTLY the staged two-batch
     # plan: batch0 = newest quarter (advances the explicit watermark to
@@ -994,15 +989,9 @@ def run_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys) must produce the IDENTICAL register table — pinned by
     tests/test_streaming_batch_twins.py. Returns (bucket, r).
     """
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.sketches import (
         hll_registers,
     )
-
-    out = tempfile.mkdtemp(prefix="hll_sink_")
-    target = os.path.join(out, "regs")
-    ck = os.path.join(out, "ck")
 
     keys = stream_events(spark, sf_dir).select(
         F.concat(
@@ -1012,25 +1001,10 @@ def run_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("__k")
     )
 
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        hll_registers(batch, "__k").write.mode("append").parquet(target)
-
-    q = (
-        keys.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    regs = _fold_store(
+        keys, lambda batch: hll_registers(batch, "__k"), "hll_sink_"
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    return (
-        spark.read.parquet(target)
-        .groupBy("bucket")
-        .agg(F.max("r").alias("r"))
-    )
+    return regs.groupBy("bucket").agg(F.max("r").alias("r"))
 
 
 def run_stream_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1045,44 +1019,23 @@ def run_stream_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-maintained flags are bit-identical to q144's — pinned by
     tests/test_streaming_batch_twins.py. Returns (event_type, hr, n, side).
     """
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.profiling import (
         hourly_anomaly_flags,
     )
-
-    out = tempfile.mkdtemp(prefix="hourly_anom_")
-    target = os.path.join(out, "hourly")
-    ck = os.path.join(out, "ck")
 
     ev = stream_events(spark, sf_dir).select(
         "event_type",
         F.expr("unix_micros(ts) div 3600000000").alias("hr"),
     )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("event_type", "hr")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .write.mode("append")
-            .parquet(target)
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    partials = _fold_store(
+        ev,
+        lambda batch: batch.groupBy("event_type", "hr").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n")
+        ),
+        "hourly_anom_",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    hourly = (
-        spark.read.parquet(target)
-        .groupBy("event_type", "hr")
-        .agg(F.sum("n").cast("bigint").alias("n"))
+    hourly = partials.groupBy("event_type", "hr").agg(
+        F.sum("n").cast("bigint").alias("n")
     )
     return hourly_anomaly_flags(hourly)
 
@@ -1098,15 +1051,10 @@ def run_stream_chunk_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.py:chunk_dedup_stats), pinned by
     tests/test_streaming_batch_twins.py.
     """
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.multimodal import (
         attach_audio_payload,
     )
 
-    out = tempfile.mkdtemp(prefix="chunk_store_")
-    target = os.path.join(out, "store")
-    ck = os.path.join(out, "ck")
     path = os.path.join(sf_dir, "documents.parquet")
     probe = spark.read.parquet(path).schema
     docs = (
@@ -1118,7 +1066,7 @@ def run_stream_chunk_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     payloads = attach_audio_payload(docs).select("doc_id", "payload")
 
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
+    def fold(batch: DataFrame) -> DataFrame:
         ln = F.length(F.col("payload"))
         idx = F.explode(
             F.sequence(
@@ -1126,7 +1074,7 @@ def run_stream_chunk_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.ceil(ln.cast("double") / F.lit(64)).cast("int") - F.lit(1),
             )
         ).alias("i")
-        (
+        return (
             batch.where(ln > 0)
             .select(F.col("payload"), idx)
             .select(
@@ -1139,23 +1087,10 @@ def run_stream_chunk_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("h")
             .agg(F.count(F.lit(1)).alias("n"), F.max("b").alias("b"))
-            .write.mode("append")
-            .parquet(target)
         )
 
-    q = (
-        payloads.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
     store = (
-        spark.read.parquet(target)
+        _fold_store(payloads, fold, "chunk_store_")
         .groupBy("h")
         .agg(F.sum("n").alias("refcount"), F.max("b").alias("b"))
     )
@@ -1182,46 +1117,20 @@ def run_stream_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_batch_twins.py).  Returns
     (event_type, n_events, lag_minutes, stale).
     """
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="freshness_")
-    target = os.path.join(out, "state")
-    ck = os.path.join(out, "ck")
-
     ev = stream_events(spark, sf_dir).select(
         "event_type", F.unix_micros("ts").alias("ts_us")
     )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("event_type")
-            .agg(
-                F.max("ts_us").alias("newest"),
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-            )
-            .write.mode("append")
-            .parquet(target)
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    partials = _fold_store(
+        ev,
+        lambda batch: batch.groupBy("event_type").agg(
+            F.max("ts_us").alias("newest"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        ),
+        "freshness_",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    state = (
-        spark.read.parquet(target)
-        .groupBy("event_type")
-        .agg(
-            F.max("newest").alias("newest"),
-            F.sum("n").cast("bigint").alias("n_events"),
-        )
+    state = partials.groupBy("event_type").agg(
+        F.max("newest").alias("newest"),
+        F.sum("n").cast("bigint").alias("n_events"),
     )
     hw = state.agg(F.max("newest").alias("hwm"))
     return state.crossJoin(F.broadcast(hw)).select(
@@ -1246,12 +1155,6 @@ def run_stream_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_batch_twins.py).  Returns
     (day, n, max_c, day_max_ts).
     """
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="zonemap_")
-    target = os.path.join(out, "stats")
-    ck = os.path.join(out, "ck")
-
     ev = stream_events(spark, sf_dir).select(
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
         (F.col("value").cast("decimal(18,2)") * 100)
@@ -1260,38 +1163,19 @@ def run_stream_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
     )
 
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("day")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.max("cents").alias("max_c"),
-                F.max("ts_us").alias("day_max_ts"),
-            )
-            .write.mode("append")
-            .parquet(target)
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    partials = _fold_store(
+        ev,
+        lambda batch: batch.groupBy("day").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.max("cents").alias("max_c"),
+            F.max("ts_us").alias("day_max_ts"),
+        ),
+        "zonemap_",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    return (
-        spark.read.parquet(target)
-        .groupBy("day")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.max("max_c").alias("max_c"),
-            F.max("day_max_ts").alias("day_max_ts"),
-        )
+    return partials.groupBy("day").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.max("max_c").alias("max_c"),
+        F.max("day_max_ts").alias("day_max_ts"),
     )
 
 
@@ -1343,8 +1227,6 @@ def run_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch twin: q61 (single-file source = one microbatch, so the
     stream's extra within-stream growth is a no-op on the fixture and
     the accepted set is BIT-IDENTICAL to the batch anti-join)."""
-    import tempfile
-
     out = tempfile.mkdtemp(prefix="stream_inc_dedup_")
     inv = os.path.join(out, "inventory")
     acc = os.path.join(out, "accepted")
@@ -1381,17 +1263,11 @@ def run_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             fresh.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream.writeStream.foreachBatch(fold_batch).option(
+            "checkpointLocation", ck
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
     # the registered oracle is q61's STATIC anti-join, sound only because
     # the single-file source makes the stream exactly one microbatch (with
     # several, the growing inventory would also drop cross-batch duplicate
@@ -1478,21 +1354,9 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and the per-bucket terms quantize BEFORE summation, the
     published table is BIT-IDENTICAL to q192's batch recompute
     (tests/test_streaming_batch_twins.py)."""
-    import tempfile
+    from cassandra_analytics_example_spark.queries._tables import events
 
-    out = tempfile.mkdtemp(prefix="stream_psi_")
-    live = os.path.join(out, "live")
-    ck = os.path.join(out, "ck")
-    path = os.path.join(sf_dir, "events.parquet")
-    base = spark.read.parquet(path)
-    ts_us_b = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        if dict(base.dtypes)["ts"] not in ("bigint", "long")
-        else F.expr("ts div 1000")
-    )
-    bb = base.select(
-        "event_type", ts_us_b.alias("ts_us"), "value"
-    )
+    bb = events(spark, sf_dir).select("event_type", "ts_us", "value")
     mid = bb.agg(
         ((F.min("ts_us") + F.max("ts_us")) / F.lit(2))
         .cast("bigint")
@@ -1502,55 +1366,26 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.floor(F.col("value") / 10).cast("bigint"), F.lit(0)),
         F.lit(9),
     )
-    baseline = (
+    base_h = (
         bb.where(F.col("ts_us") < mid)
         .select("event_type", bucket.alias("bucket"))
         .groupBy("event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("c1"))
+        .localCheckpoint(eager=True)
     )
-    baseline.write.mode("overwrite").parquet(os.path.join(out, "baseline"))
-
-    probe = base.schema
-    stream = (
-        spark.readStream.schema(probe)
-        .format("parquet")
-        .option("path", sf_dir)
-        .option("pathGlobFilter", "events.parquet")
-        .load()
+    live_stream = (
+        stream_events(spark, sf_dir)
+        .select("event_type", F.unix_micros("ts").alias("ts_us"), "value")
+        .where(F.col("ts_us") >= mid)
     )
-    ts_us_s = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        if dict(base.dtypes)["ts"] not in ("bigint", "long")
-        else F.expr("ts div 1000")
-    )
-    live_stream = stream.select(
-        "event_type", ts_us_s.alias("ts_us"), "value"
-    ).where(F.col("ts_us") >= mid)
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.select("event_type", bucket.alias("bucket"))
-            .groupBy("event_type", "bucket")
-            .agg(F.count(F.lit(1)).alias("c2"))
-            .write.mode("append")
-            .parquet(live)
-        )
-
-    q = (
-        live_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    base_h = spark.read.parquet(os.path.join(out, "baseline"))
     live_h = (
-        spark.read.parquet(live)
+        _fold_store(
+            live_stream,
+            lambda batch: batch.select("event_type", bucket.alias("bucket"))
+            .groupBy("event_type", "bucket")
+            .agg(F.count(F.lit(1)).alias("c2")),
+            "stream_psi_",
+        )
         .groupBy("event_type", "bucket")
         .agg(F.sum("c2").alias("c2"))
     )
@@ -1598,13 +1433,7 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIT-IDENTICAL to the batch q200 at any microbatch split (twin gate:
     tests/test_streaming_batch_twins.py). The ordering key is the same
     wide-decimal (ts, event_id) total order as q200."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="stream_ohlc_")
-    store = os.path.join(out, "store")
-    ck = os.path.join(out, "ck")
-    events = stream_events(spark, sf_dir)
-    base = events.select(
+    base = stream_events(spark, sf_dir).select(
         "event_type",
         F.expr("unix_micros(ts) div 3600000000")
         .cast("bigint")
@@ -1616,34 +1445,19 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
 
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("event_type", "hour_bucket")
-            .agg(
-                F.min("ord").alias("o_ord"),
-                F.min_by("cents", "ord").alias("o_cents"),
-                F.max("cents").alias("high"),
-                F.min("cents").alias("low"),
-                F.max("ord").alias("c_ord"),
-                F.max_by("cents", "ord").alias("c_cents"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .write.mode("append")
-            .parquet(store)
-        )
-
-    q = (
-        base.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    partials = _fold_store(
+        base,
+        lambda batch: batch.groupBy("event_type", "hour_bucket").agg(
+            F.min("ord").alias("o_ord"),
+            F.min_by("cents", "ord").alias("o_cents"),
+            F.max("cents").alias("high"),
+            F.min("cents").alias("low"),
+            F.max("ord").alias("c_ord"),
+            F.max_by("cents", "ord").alias("c_cents"),
+            F.count(F.lit(1)).alias("n"),
+        ),
+        "stream_ohlc_",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    partials = spark.read.parquet(store)
     return partials.groupBy("event_type", "hour_bucket").agg(
         F.min_by("o_cents", "o_ord").cast("bigint").alias("open_cents"),
         F.max("high").cast("bigint").alias("high_cents"),
@@ -1684,15 +1498,10 @@ def run_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is BIT-IDENTICAL to the batch q185 at any microbatch split —
     the resumable-sampling property a training pipeline needs (twin
     gate: tests/test_streaming_batch_twins.py)."""
-    import tempfile
-
     from pyspark.sql import Window
 
     k = 50
     den = float(1 << 60)
-    out = tempfile.mkdtemp(prefix="stream_wsample_")
-    store = os.path.join(out, "partials")
-    ck = os.path.join(out, "ck")
     path = os.path.join(sf_dir, "documents.parquet")
     probe = spark.read.parquet(path).schema
     docs = (
@@ -1720,26 +1529,15 @@ def run_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("es_key"),
     )
 
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.orderBy(F.col("es_key").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .write.mode("append")
-            .parquet(store)
+    partials = replay_safe_partials(
+        _fold_store(
+            keyed,
+            lambda batch: batch.orderBy(
+                F.col("es_key").desc(), F.col("doc_id").asc()
+            ).limit(k),
+            "stream_wsample_",
         )
-
-    q = (
-        keyed.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    partials = replay_safe_partials(spark.read.parquet(store))
     top = partials.orderBy(
         F.col("es_key").desc(), F.col("doc_id").asc()
     ).limit(k)
@@ -1846,75 +1644,46 @@ def run_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplication, so the published row is BIT-IDENTICAL to the
     batch q246 at any microbatch split
     (tests/test_streaming_batch_twins.py)."""
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.rankstats import (
         ks_from_counts,
     )
+    from cassandra_analytics_example_spark.queries._tables import events
 
-    out = tempfile.mkdtemp(prefix="stream_ks_")
-    live = os.path.join(out, "live")
-    ck = os.path.join(out, "ck")
-    path = os.path.join(sf_dir, "events.parquet")
-    base = spark.read.parquet(path)
-    ts_us_col = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        if dict(base.dtypes)["ts"] not in ("bigint", "long")
-        else F.expr("ts div 1000")
-    )
-    bb = base.where(F.col("event_type") == "purchase").select(
-        ts_us_col.alias("ts_us"),
-        F.round(F.col("value") * 100).cast("bigint").alias("v"),
+    bb = (
+        events(spark, sf_dir)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            "ts_us", F.round(F.col("value") * 100).cast("bigint").alias("v")
+        )
     )
     mid = bb.agg(
         F.expr("(min(ts_us) + max(ts_us)) div 2").alias("m")
     ).first()["m"]
-    baseline = (
+    base_h = (
         bb.where(F.col("ts_us") < mid)
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("na"))
-    )
-    baseline.write.mode("overwrite").parquet(os.path.join(out, "baseline"))
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .format("parquet")
-        .option("path", sf_dir)
-        .option("pathGlobFilter", "events.parquet")
-        .load()
+        .localCheckpoint(eager=True)
     )
     live_stream = (
-        stream.where(F.col("event_type") == "purchase")
+        stream_events(spark, sf_dir)
+        .where(F.col("event_type") == "purchase")
         .select(
-            ts_us_col.alias("ts_us"),
+            F.unix_micros("ts").alias("ts_us"),
             F.round(F.col("value") * 100).cast("bigint").alias("v"),
         )
         .where(F.col("ts_us") >= mid)
     )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("v")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("nb"))
-            .write.mode("append")
-            .parquet(live)
-        )
-
-    q = (
-        live_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    base_h = spark.read.parquet(os.path.join(out, "baseline"))
     live_h = (
-        spark.read.parquet(live).groupBy("v").agg(F.sum("nb").alias("nb"))
+        _fold_store(
+            live_stream,
+            lambda batch: batch.groupBy("v").agg(
+                F.count(F.lit(1)).cast("bigint").alias("nb")
+            ),
+            "stream_ks_",
+        )
+        .groupBy("v")
+        .agg(F.sum("nb").alias("nb"))
     )
     g = (
         base_h.join(live_h, ["v"], "full_outer")
@@ -1937,55 +1706,22 @@ def run_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the scan is pure integer arithmetic, so the published row is
     BIT-IDENTICAL to the batch q249 at any microbatch split
     (tests/test_streaming_batch_twins.py)."""
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.rankstats import (
         cusum_changepoint_from_counts,
         densify_counts,
     )
 
-    out = tempfile.mkdtemp(prefix="stream_cusum_")
-    live = os.path.join(out, "live")
-    ck = os.path.join(out, "ck")
-    base = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_us_col = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        if dict(base.dtypes)["ts"] not in ("bigint", "long")
-        else F.expr("ts div 1000")
+    ts_us = stream_events(spark, sf_dir).select(
+        F.unix_micros("ts").alias("ts_us")
     )
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .format("parquet")
-        .option("path", sf_dir)
-        .option("pathGlobFilter", "events.parquet")
-        .load()
+    partials = _fold_store(
+        ts_us,
+        lambda batch: batch.groupBy(
+            F.expr("ts_us div 3600000000").alias("h")
+        ).agg(F.count(F.lit(1)).cast("bigint").alias("c")),
+        "stream_cusum_",
     )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.select(ts_us_col.alias("ts_us"))
-            .groupBy(F.expr("ts_us div 3600000000").alias("h"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .write.mode("append")
-            .parquet(live)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    e = spark.read.parquet(live).groupBy("h").agg(
-        F.sum("c").cast("bigint").alias("c")
-    )
+    e = partials.groupBy("h").agg(F.sum("c").cast("bigint").alias("c"))
     return cusum_changepoint_from_counts(densify_counts(e))
 
 
@@ -1999,65 +1735,32 @@ def run_stream_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     global top-3 per user from the merged-on-read candidate store and
     assembles the exact feature row — BIT-IDENTICAL to the batch q269
     at any microbatch split (tests/test_streaming_batch_twins.py)."""
-    import tempfile
-
     from pyspark.sql import Window
 
-    out = tempfile.mkdtemp(prefix="stream_lagf_")
-    live = os.path.join(out, "live")
-    ck = os.path.join(out, "ck")
-    base = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_us_col = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        if dict(base.dtypes)["ts"] not in ("bigint", "long")
-        else F.expr("ts div 1000")
-    )
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .format("parquet")
-        .option("path", sf_dir)
-        .option("pathGlobFilter", "events.parquet")
-        .load()
-    )
-    purchases = stream.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        ts_us_col.alias("ts_us"),
-        "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts_us").desc(), F.col("event_id").desc()
+    purchases = (
+        stream_events(spark, sf_dir)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "event_id",
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-        (
-            batch.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= 3)
-            .drop("__r")
-            .write.mode("append")
-            .parquet(live)
-        )
-
-    q = (
-        purchases.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    # foreachBatch is at-least-once: a retried batch may append its
-    # candidates twice, so dedupe on the event identity before ranking —
-    # otherwise two copies of the same purchase would occupy rk 1 and 2
-    cand = spark.read.parquet(live).dropDuplicates(["user_id", "event_id"])
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts_us").desc(), F.col("event_id").desc()
     )
+    partials = _fold_store(
+        purchases,
+        lambda batch: batch.withColumn("__r", F.row_number().over(w))
+        .where(F.col("__r") <= 3)
+        .drop("__r"),
+        "stream_lagf_",
+    )
+    # foreachBatch is at-least-once: a retried batch may append its
+    # candidates twice, so dedupe on the event identity before ranking —
+    # otherwise two copies of the same purchase would occupy rk 1 and 2
+    cand = partials.dropDuplicates(["user_id", "event_id"])
     top3 = cand.withColumn("rk", F.row_number().over(w)).where(
         F.col("rk") <= 3
     )
@@ -2098,61 +1801,29 @@ def run_stream_metrics_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so the published metrics table is BIT-IDENTICAL to the batch
     q272 at any microbatch split
     (tests/test_streaming_batch_twins.py)."""
-    import tempfile
-
     from cassandra_analytics_example_spark.operators.quantiles import (
         group_quantiles_from_counts,
     )
 
-    out = tempfile.mkdtemp(prefix="stream_metrics_")
-    live = os.path.join(out, "live")
-    ck = os.path.join(out, "ck")
-    base = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_us_col = (
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        if dict(base.dtypes)["ts"] not in ("bigint", "long")
-        else F.expr("ts div 1000")
-    )
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .format("parquet")
-        .option("path", sf_dir)
-        .option("pathGlobFilter", "events.parquet")
-        .load()
-    )
-    rows = stream.where(
-        F.col("event_type").isin("purchase", "click")
-    ).select(
-        "event_type",
-        F.floor(ts_us_col / F.lit(86_400_000_000))
-        .cast("bigint")
-        .alias("day"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-
-    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("event_type", "day", "cents")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .write.mode("append")
-            .parquet(live)
+    rows = (
+        stream_events(spark, sf_dir)
+        .where(F.col("event_type").isin("purchase", "click"))
+        .select(
+            "event_type",
+            F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
+            .cast("bigint")
+            .alias("day"),
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-
-    q = (
-        rows.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
     merged = (
-        spark.read.parquet(live)
+        _fold_store(
+            rows,
+            lambda batch: batch.groupBy("event_type", "day", "cents").agg(
+                F.count(F.lit(1)).cast("bigint").alias("c")
+            ),
+            "stream_metrics_",
+        )
         .groupBy("event_type", "day", "cents")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )

@@ -21,6 +21,8 @@ SF01 = os.environ.get("SPARK_GRAFT_TWIN_DIR", "/root/testdata/sf0.01")
 
 
 def _assert_same(got, want) -> None:
+    # every store drains its stream before returning: nothing left running
+    assert got.sparkSession.streams.active == []
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

@@ -1102,3 +1102,74 @@ def test_zonemap_store_duplicate_replay_mixed_units(spark, tmp_path):
         rn, rmc, rmts = replayed[day]
         assert rn == 2 * n, "count is at-least-once without the checkpoint"
         assert (rmc, rmts) == (mc, mts), "zone bounds are replay-idempotent"
+
+
+def test_drain_reraises_fold_error_and_stops_the_stream(spark, tmp_path):
+    """A fold that raises inside ``foreachBatch`` surfaces to the caller,
+    and the store's query is stopped anyway: no stream outlives a failed
+    store."""
+    import pytest
+
+    from cassandra_analytics_example_spark.streaming.windows import (
+        _fold_store,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_batch(str(src / "b0.parquet"), [(1, 0)], time.time())
+    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(str(src))
+
+    def fold(batch):
+        raise RuntimeError("fold failed on purpose")
+
+    with pytest.raises(Exception, match="fold failed on purpose"):
+        _fold_store(stream, fold, "drain_raise_")
+    assert spark.streams.active == []
+
+
+def test_events_stores_read_ns_vintage_fixture(spark, tmp_path, sf_dir):
+    """The events fixture has shipped with ``ts`` as timestamp[ns], which
+    Spark reads only with ``nanosAsLong`` set. Each events-fed store must
+    set it itself (through ``stream_events`` / ``_tables.events``), not
+    rely on an earlier query in the session: with the conf unset before
+    every store, an ns copy of the fixture gives the µs original's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cassandra_analytics_example_spark.streaming.windows import (
+        run_stream_cusum,
+        run_stream_ks_drift,
+        run_stream_lag_features,
+        run_stream_metrics_layer,
+        run_stream_psi_drift,
+    )
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field(
+        "ts"
+    ).type == pa.timestamp("ns")
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    try:
+        for run in (
+            run_stream_psi_drift,
+            run_stream_ks_drift,
+            run_stream_cusum,
+            run_stream_lag_features,
+            run_stream_metrics_layer,
+        ):
+            spark.conf.unset(key)
+            want = sorted(run(spark, sf_dir).collect())
+            spark.conf.unset(key)
+            got = sorted(run(spark, str(tmp_path)).collect())
+            assert got == want, run.__name__
+            assert len(got) > 0, run.__name__
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
