@@ -41,7 +41,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
     release_pins,
@@ -150,6 +151,124 @@ def cached_storage_bytes(spark) -> int:
 STORAGE_BUDGET_BYTES = 2 * 1024**3
 
 
+CONTROL = "q01_pricing_summary"
+
+
+def ratio_fields(
+    timings: dict[str, float],
+    anchor_q: dict[str, float],
+    tag: str,
+    control_key: str | None = None,
+) -> dict:
+    """Ratio fields of one anchor over the queries both sides timed:
+    ``vs_<tag>`` (summed run time over summed anchor time, so widening the
+    headline set never skews it; < 1 means faster) and
+    ``vs_<tag>_queries`` (per query).  Empty when no query is common.
+
+    With ``control_key``, q01's own ratio is the host factor of the run
+    (round-9 verdict task 3): the q01 control's code and plan are
+    untouched since round 1, yet it read 0.99x..1.70x of its anchor across
+    one day.  ``control_key`` records it, and ``vs_<tag>_ctrl`` /
+    ``vs_<tag>_ctrl_queries`` divide by it, so values near 1.0 mean "no
+    plan-level change" even on a loaded host."""
+    common = [n for n in timings if anchor_q.get(n)]
+    if not common:
+        return {}
+    total = round(
+        sum(timings[n] for n in common) / sum(anchor_q[n] for n in common), 3
+    )
+    per_q = {n: round(timings[n] / anchor_q[n], 3) for n in common}
+    out = {f"vs_{tag}": total, f"vs_{tag}_queries": per_q}
+    ctrl = per_q.get(CONTROL) if control_key else None
+    if ctrl and ctrl > 0:
+        out[control_key] = {"query": CONTROL, "ratio": ctrl}
+        out[f"vs_{tag}_ctrl"] = round(total / ctrl, 3)
+        out[f"vs_{tag}_ctrl_queries"] = {
+            n: round(r / ctrl, 3) for n, r in per_q.items()
+        }
+    return out
+
+
+def _anchor(name: str, sf: float | None) -> dict | None:
+    path = os.path.join(HERE, name)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        anchor = json.load(f)
+    return anchor if anchor.get("sf") == sf else None
+
+
+def anchor_fields(timings: dict[str, float], sf: float | None) -> dict:
+    """The report's anchor-derived fields, from the four committed anchor
+    files whose ``sf`` matches the run's:
+
+    * BENCH_BASELINE.json — round-1 best-of-2 numbers (``vs_baseline``),
+      so "within 2x" is mechanically checkable per round;
+    * BENCH_ANCHOR.json — the round-4 full-suite anchor (``vs_anchor``),
+      the reference for queries added after round 1;
+    * BENCH_ANCHOR_COLD.json — the first cache-cold anchor, round 8
+      (``vs_anchor_cold``; see ``methodology_note`` in ``main``);
+    * BENCH_ANCHOR_ISOLATED.json — fresh-JVM per-query anchors for the
+      full headline set (round 12, minted by
+      tools/mint_isolated_anchors.py as minima across >=3 isolated
+      sessions; ``vs_anchor_isolated``).  Isolated numbers compare only
+      with isolated numbers, but the q01 in-session control carries the
+      same in-suite-vs-isolated factor, so the ``_ctrl`` ratios are the
+      like-for-like per-round read.  A partially minted file must not
+      silently become the headline ratio: it applies only when it covers
+      every timed query, and its coverage is always recorded."""
+    out: dict = {}
+    base = _anchor("BENCH_BASELINE.json", sf)
+    if base is not None:
+        out["baseline_round"] = base.get("round")
+        out["baseline_total"] = base.get("total")
+        out.update(ratio_fields(timings, base.get("queries", {}), "baseline"))
+        out.setdefault("vs_baseline_queries", {})
+    full = _anchor("BENCH_ANCHOR.json", sf)
+    if full is not None:
+        fields = ratio_fields(timings, full.get("queries", {}), "anchor")
+        if fields:
+            out["anchor_round"] = full.get("round")
+            out.update(fields)
+    cold = _anchor("BENCH_ANCHOR_COLD.json", sf)
+    if cold is not None:
+        fields = ratio_fields(
+            timings, cold.get("queries", {}), "anchor_cold", "host_control"
+        )
+        if fields:
+            out["cold_anchor_round"] = cold.get("round")
+            out.update(fields)
+    iso = _anchor("BENCH_ANCHOR_ISOLATED.json", sf)
+    iso_q = {
+        n: e.get("min")
+        for n, e in (iso or {}).get("queries", {}).items()
+        if isinstance(e, dict) and e.get("min")
+    }
+    if iso_q:
+        common = [n for n in timings if iso_q.get(n)]
+        out["isolated_anchor_coverage"] = {
+            "n_common": len(common),
+            "n_timed": len(timings),
+        }
+        if common and len(common) < len(timings):
+            missing = sorted(set(timings) - set(common))[:5]
+            print(
+                "WARN: BENCH_ANCHOR_ISOLATED.json covers "
+                f"{len(common)}/{len(timings)} timed queries "
+                f"(missing e.g. {missing}) - skipping the isolated "
+                "map; falling back to the cold ctrl read",
+                file=sys.stderr,
+            )
+        if common and len(common) == len(timings):
+            out["isolated_anchor_round"] = iso.get("round")
+            out.update(
+                ratio_fields(
+                    timings, iso_q, "anchor_isolated", "isolated_host_control"
+                )
+            )
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_all()
@@ -225,171 +344,7 @@ def main() -> None:
         # anchor; vs_anchor_cold is the like-for-like per-round ratio.
         "methodology_note": "cache-cold per run since round 8",
     }
-
-    # diff against the recorded anchor (BENCH_BASELINE.json, round-1 best-of-2
-    # numbers) so "within 2x" is mechanically checkable per round: ratio < 1
-    # means faster than the anchor.
-    anchor_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_BASELINE.json"
-    )
-    if os.path.exists(anchor_path):
-        with open(anchor_path) as f:
-            anchor = json.load(f)
-        if anchor.get("sf") == report["sf"]:
-            base_q = anchor.get("queries", {})
-            report["baseline_round"] = anchor.get("round")
-            report["baseline_total"] = anchor.get("total")
-            # compare on the intersection of anchored queries only, so
-            # widening the headline set never skews the ratio: ratio < 1
-            # means the queries the anchor measured got faster.
-            common = [n for n in timings if base_q.get(n)]
-            if common:
-                report["vs_baseline"] = round(
-                    sum(timings[n] for n in common)
-                    / sum(base_q[n] for n in common),
-                    3,
-                )
-            report["vs_baseline_queries"] = {
-                n: round(timings[n] / base_q[n], 3) for n in common
-            }
-
-    # BENCH_ANCHOR.json: the full-suite anchor (recorded round 4, every
-    # headline query) — BENCH_BASELINE.json predates half the suite, so this
-    # is the per-query regression reference for queries added after round 1.
-    full_anchor_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_ANCHOR.json"
-    )
-    if os.path.exists(full_anchor_path):
-        with open(full_anchor_path) as f:
-            fa = json.load(f)
-        if fa.get("sf") == report["sf"]:
-            fa_q = fa.get("queries", {})
-            common = [n for n in timings if fa_q.get(n)]
-            if common:
-                report["anchor_round"] = fa.get("round")
-                report["vs_anchor"] = round(
-                    sum(timings[n] for n in common)
-                    / sum(fa_q[n] for n in common),
-                    3,
-                )
-                report["vs_anchor_queries"] = {
-                    n: round(timings[n] / fa_q[n], 3) for n in common
-                }
-
-    # BENCH_ANCHOR_COLD.json: first cold-methodology anchor (round 8) —
-    # the like-for-like reference once every run is cache-cold.
-    cold_anchor_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_ANCHOR_COLD.json"
-    )
-    if os.path.exists(cold_anchor_path):
-        with open(cold_anchor_path) as f:
-            ca = json.load(f)
-        if ca.get("sf") == report["sf"]:
-            ca_q = ca.get("queries", {})
-            common = [n for n in timings if ca_q.get(n)]
-            if common:
-                report["cold_anchor_round"] = ca.get("round")
-                report["vs_anchor_cold"] = round(
-                    sum(timings[n] for n in common)
-                    / sum(ca_q[n] for n in common),
-                    3,
-                )
-                report["vs_anchor_cold_queries"] = {
-                    n: round(timings[n] / ca_q[n], 3) for n in common
-                }
-                # Control-normalized ratios (round-9 verdict task 3): the
-                # host demonstrably drifts (the q01 control — code and plan
-                # untouched since round 1 — read 0.99x..1.70x of its anchor
-                # across one day), which makes single-run raw ratios
-                # unreadable. q01's own ratio IS the host factor for this
-                # run: dividing every per-query ratio by it cancels the
-                # drift, so _ctrl values near 1.0 mean "no plan-level
-                # change" even on a loaded host. The control query itself
-                # reads exactly 1.0 by construction.
-                ctrl = report["vs_anchor_cold_queries"].get(
-                    "q01_pricing_summary"
-                )
-                if ctrl and ctrl > 0:
-                    report["host_control"] = {
-                        "query": "q01_pricing_summary",
-                        "ratio": ctrl,
-                    }
-                    report["vs_anchor_cold_ctrl"] = round(
-                        report["vs_anchor_cold"] / ctrl, 3
-                    )
-                    report["vs_anchor_cold_ctrl_queries"] = {
-                        n: round(r / ctrl, 3)
-                        for n, r in report["vs_anchor_cold_queries"].items()
-                    }
-
-    # BENCH_ANCHOR_ISOLATED.json (round 12, r11 verdict task 6): fresh-JVM
-    # per-query anchors for the FULL headline set, minted by
-    # tools/mint_isolated_anchors.py (minima across >=3 isolated
-    # sessions). Isolated numbers are only comparable to isolated numbers
-    # (fresh-process inflation is per-stage, so it varies per query) —
-    # but the q01 in-session control carries the SAME in-suite-vs-isolated
-    # methodology factor, so the _ctrl ratios are the like-for-like
-    # per-round read and retire the in-suite r8 cold anchors' position-
-    # dependence (three rounds of drift triage — q143, q16 — traced to it).
-    iso_anchor_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "BENCH_ANCHOR_ISOLATED.json",
-    )
-    if os.path.exists(iso_anchor_path):
-        with open(iso_anchor_path) as f:
-            ia = json.load(f)
-        ia_q = {
-            n: e.get("min")
-            for n, e in ia.get("queries", {}).items()
-            if isinstance(e, dict) and e.get("min")
-        }
-        if ia.get("sf") == report["sf"] and ia_q:
-            common = [n for n in timings if ia_q.get(n)]
-            # r12 ADVICE: a partially minted anchor file (e.g. from a
-            # --queries run) must not silently become the headline ratio
-            # over whatever intersection happens to exist — require full
-            # coverage of this run's timings, and always record how much
-            # of the run the anchors covered so a partial read is legible.
-            report["isolated_anchor_coverage"] = {
-                "n_common": len(common),
-                "n_timed": len(timings),
-            }
-            if common and len(common) < len(timings):
-                missing = sorted(set(timings) - set(common))[:5]
-                print(
-                    "WARN: BENCH_ANCHOR_ISOLATED.json covers "
-                    f"{len(common)}/{len(timings)} timed queries "
-                    f"(missing e.g. {missing}) - skipping the isolated "
-                    "map; falling back to the cold ctrl read",
-                    file=sys.stderr,
-                )
-            if common and len(common) == len(timings):
-                report["isolated_anchor_round"] = ia.get("round")
-                report["vs_anchor_isolated"] = round(
-                    sum(timings[n] for n in common)
-                    / sum(ia_q[n] for n in common),
-                    3,
-                )
-                report["vs_anchor_isolated_queries"] = {
-                    n: round(timings[n] / ia_q[n], 3) for n in common
-                }
-                ictrl = report["vs_anchor_isolated_queries"].get(
-                    "q01_pricing_summary"
-                )
-                if ictrl and ictrl > 0:
-                    report["isolated_host_control"] = {
-                        "query": "q01_pricing_summary",
-                        "ratio": ictrl,
-                    }
-                    report["vs_anchor_isolated_ctrl"] = round(
-                        report["vs_anchor_isolated"] / ictrl, 3
-                    )
-                    report["vs_anchor_isolated_ctrl_queries"] = {
-                        n: round(r / ictrl, 3)
-                        for n, r in report[
-                            "vs_anchor_isolated_queries"
-                        ].items()
-                    }
+    report.update(anchor_fields(timings, report["sf"]))
 
     # Three emission surfaces (round-10 verdict task 5 — the driver keeps
     # only the last ~2000 chars of stdout, so BENCH_r10.json came back
@@ -402,13 +357,7 @@ def main() -> None:
     #      the driver's tail window: same metric/value/unit/sf/queries
     #      shape plus the anchor ratios and the ctrl map.
     print(json.dumps(report))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_FULL_LAST.json",
-        ),
-        "w",
-    ) as f:
+    with open(os.path.join(HERE, "BENCH_FULL_LAST.json"), "w") as f:
         json.dump(report, f)
     keys: dict[str, str] = {}
     for n in timings:

@@ -18,22 +18,11 @@ valve + ``on_saturation="error"`` — ``lsh_candidate_pairs`` /
   bucket computation instead of running the signature pipeline twice
   (measured: persist 1.065x vs silent 1.0x vs re-derive 1.24x,
   SCALE_PROBE_r11). The frame is collision-groups-only (bucket-count
-  rows), but it stays cached for the SESSION: a long-lived multi-tenant
-  session accumulates one entry per capped call until
-  ``spark.catalog.clearCache()`` or session end. The persist fires when
-  the guarded frame is BUILT, even if it is never acted on. Deliberate
-  trade: an unpersist-after-action hook would need an eager terminal,
-  which candidate generators deliberately are not.
-
-  A ``guard_persist=False`` caller flag (r12 verdict nit, deferred in
-  r13 on void-budget arithmetic) LANDED in round 14: every capped
-  generator takes ``guard_persist: bool = True`` and passes it to
-  ``_guarded_union`` as ``persist`` — ``False`` skips the
-  session-lifetime bucket-frame persist entirely (zero cache footprint;
-  the audit aggregate recomputes its lineage instead, the measured
-  ~1.24x trade from SCALE_PROBE_r11 accepted knowingly by the caller).
-  Default ``True`` keeps the r11-measured cached sharing and the
-  registered queries' behavior byte-identical.
+  rows). The persist fires when the guarded frame is BUILT, even if it
+  is never acted on; candidate generators return lazy frames, so they
+  cannot release it themselves. Like every persist in this module it is
+  registered through ``session.pin_small``: the cache is released by
+  ``pin_scope``/``release_pins``.
 
   The r14 AQE-coalesce fix for q21 (PRE-VALIDATED zero-void via
   call-time patching; the probe's results are ``PROBE_R14_Q21.json``)
@@ -68,7 +57,6 @@ import math
 import random
 
 from pyspark.sql import Column, DataFrame, Window
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.functions.text import (
@@ -79,7 +67,11 @@ from cassandra_analytics_example_spark.functions.text import (
     tokens,
     word_ngrams,
 )
-from cassandra_analytics_example_spark.session import passing, spread
+from cassandra_analytics_example_spark.session import (
+    passing,
+    pin_small,
+    spread,
+)
 
 #: Mersenne prime 2^31 - 1: universal-hash modulus. With h < p and a < p the
 #: product a*h < 2^62 stays inside signed-64 range in every engine.
@@ -220,7 +212,6 @@ def lsh_candidate_pairs(
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """LSH banding: split each signature into bands, hash each band, group
     ids by (band_index, band_hash) bucket, and emit all in-bucket pairs.
@@ -280,7 +271,6 @@ def lsh_candidate_pairs(
             "Raise max_bucket_size, run exact_dedup first (byte-identical "
             "docs inflate band buckets), or widen num_bands*rows_per_band; "
             "audit via lsh_bucket_stats.",
-            persist=guard_persist,
         )
     )
 
@@ -350,7 +340,6 @@ def minhash_lsh_dedup(
     jaccard_threshold: float = 0.5,
     max_bucket_size: int | None = 1000,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: exact-dedup pre-pass → signatures
     → banded candidates (bucket-capped) → exact Jaccard verification on
@@ -400,25 +389,24 @@ def minhash_lsh_dedup(
     # those three consumers column-prune down to int columns (near-free
     # cache reads) and only the two verification joins decode the arrays.
     # q21: 5 array decodes -> 2; executor 50.5 -> ~30 s, wall 2.41 -> ~1.7 s.
-    from pyspark.storagelevel import StorageLevel
-
     sh = df.select(
         F.col(id_col),
         F.array_distinct(shingles(text_col, shingle_k)).alias("sh"),
     )
-    base = signatures_from_shingles(
-        sh.select(F.col(id_col), "sh", F.size("sh").alias("__sz")),
-        id_col,
-        "sh",
-        num_hashes,
-        keep=("sh", "__sz"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin_small(
+        signatures_from_shingles(
+            sh.select(F.col(id_col), "sh", F.size("sh").alias("__sz")),
+            id_col,
+            "sh",
+            num_hashes,
+            keep=("sh", "__sz"),
+        )
+    )
     sh = base.select(F.col(id_col), "sh")
     sigs = base.select(F.col(id_col), "sig")
     cands = lsh_candidate_pairs(
         sigs, id_col, num_bands, rows_per_band, max_bucket_size,
         on_saturation=on_saturation,  # guard survives the joins (docstring)
-        guard_persist=guard_persist,
     )
     # Size-ratio prefilter — RESULT-IDENTICAL, not a recall trade:
     # |A∩B| <= min(|A|,|B|) bounds jaccard <= min/max, so j >= t forces
@@ -475,10 +463,8 @@ def token_jaccard_pairs(
     threshold: float = 0.3,
     ngram_n: int = 3,
     n_blocks: int = 3,
-    persist_tokens: bool = True,
     max_block_size: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Near-dup by word-n-gram Jaccard with K-rarest-gram blocking.
 
@@ -506,31 +492,28 @@ def token_jaccard_pairs(
     restores the audited silent-empty path). Default ``None`` keeps the
     historical uncapped behavior — registered q22-family results are
     byte-identical. Capping with ``on_saturation="error"`` widens every
-    output column to nullable and persists a session-lifetime
-    bucket-size frame — see the module docstring's capped-path contract.
+    output column to nullable and persists a bucket-size frame — see the
+    module docstring's capped-path contract.
     Fully ANSI-SQL-expressible (explode →
     df-count → sorted top-K → equi-join), hence oracle-checkable. Exact
     Jaccard verifies candidates. Returns (id_a, id_b, jaccard ≥ threshold).
 
-    ``persist_tokens`` materializes the tokenized layer (MEMORY_AND_DISK):
-    it is consumed THREE times — document-frequency counting, blocking,
-    and both sides of the Jaccard verification — and recomputing the
-    n-gram arrays from the scan per consumer costs more than caching them
-    (~3x wall-clock on the fixture). The cache is the tokenized corpus
-    (≈ corpus size; spills to disk) — the standard deliberate
-    materialization for multi-pass set-similarity; pass False to trade
-    recompute for zero cache footprint.
+    The tokenized layer is persisted (MEMORY_AND_DISK): it is consumed
+    THREE times — document-frequency counting, blocking, and both sides of
+    the Jaccard verification — and recomputing the n-gram arrays from the
+    scan per consumer costs more than caching them (~3x wall-clock on the
+    fixture). The cache is the tokenized corpus (≈ corpus size; spills to
+    disk) — the standard deliberate materialization for multi-pass
+    set-similarity; it is released by ``pin_scope``/``release_pins``.
     """
     if on_saturation not in ("error", "ignore"):
         raise ValueError(f"on_saturation must be error|ignore, got {on_saturation!r}")
-    toks = spread(df).select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(text_col, ngram_n)).alias("toks"),
+    toks = pin_small(
+        spread(df).select(
+            F.col(id_col),
+            F.array_distinct(word_ngrams(text_col, ngram_n)).alias("toks"),
+        )
     )
-    if persist_tokens:
-        from pyspark.storagelevel import StorageLevel
-
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
     tok = toks.select(F.col(id_col), F.explode("toks").alias("tok"))
     # Pair generation from id-only buckets (single block lineage, one
     # shuffle); a pair may share several block keys, so dedupe pairs before
@@ -583,7 +566,6 @@ def token_jaccard_pairs(
         "Raise max_block_size, exact-dedup byte-identical docs first "
         "(they share every rarest gram), or raise ngram_n/n_blocks to "
         "spread the block keys.",
-        persist=guard_persist,
     )
 
 
@@ -662,10 +644,8 @@ def token_containment_pairs(
     threshold: float = 0.6,
     ngram_n: int = 3,
     n_blocks: int = 3,
-    persist_tokens: bool = True,
     max_block_size: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Asymmetric near-dup by n-gram CONTAINMENT (overlap coefficient):
     |A ∩ B| / min(|A|, |B|) — the measure that catches a short document
@@ -687,19 +667,17 @@ def token_containment_pairs(
     pair as :func:`token_jaccard_pairs` (r10 verdict task 4) — the
     rarest-gram key is NOT structurally bounded, see there; the capped
     "error" path also widens output nullability and persists a
-    session-lifetime bucket-size frame (module docstring, capped-path
-    contract).
+    bucket-size frame (module docstring, capped-path contract). The
+    tokenized layer is persisted as in :func:`token_jaccard_pairs`.
     """
     if on_saturation not in ("error", "ignore"):
         raise ValueError(f"on_saturation must be error|ignore, got {on_saturation!r}")
-    toks = spread(df).select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(text_col, ngram_n)).alias("toks"),
+    toks = pin_small(
+        spread(df).select(
+            F.col(id_col),
+            F.array_distinct(word_ngrams(text_col, ngram_n)).alias("toks"),
+        )
     )
-    if persist_tokens:
-        from pyspark.storagelevel import StorageLevel
-
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
     tok = toks.select(F.col(id_col), F.explode("toks").alias("tok"))
     buckets = _rarest_gram_buckets(tok, id_col, n_blocks)
     capped = buckets
@@ -742,7 +720,6 @@ def token_containment_pairs(
         "Raise max_block_size, exact-dedup byte-identical docs first "
         "(they share every rarest gram), or raise ngram_n/n_blocks to "
         "spread the block keys.",
-        persist=guard_persist,
     )
 
 
@@ -891,7 +868,6 @@ def _guarded_union(
     error_name: str,
     bucket_kind: str,
     remedy: str,
-    persist: bool = True,
 ) -> DataFrame:
     """Union a ZERO-ROW guard branch onto ``out`` that raises at action
     time when the ``max_bucket_size`` valve dropped every collision
@@ -923,8 +899,8 @@ def _guarded_union(
     is the deterministic form of the same sharing, and callers that pass
     ``on_saturation="ignore"`` never reach it (zero footprint). The
     cache is bucket-count-sized (collision groups only), strictly
-    smaller than the banded corpus, and is dropped with the session /
-    ``clearCache`` like the operators' other deliberate layers.
+    smaller than the banded corpus, and is released by
+    ``pin_scope``/``release_pins`` like the operators' other layers.
 
     The branch's output columns are NULLs built by ``_nonfoldable_null``,
     NOT ``lit(None)`` (r10 ADVICE, confirmed on Spark 4.1.2): a consumer
@@ -937,18 +913,8 @@ def _guarded_union(
     predicate stays a runtime Filter above the (zero-row, or raising)
     explode. ``tests/test_r11_guard_hardening.py`` asserts raise_error
     survives ``optimizedPlan`` under join/null-filter consumers for every
-    in-repo composition.
-
-    ``persist=False`` (the ``guard_persist`` caller flag, r12 verdict nit /
-    r13 deferral) skips the session-lifetime MEMORY_AND_DISK persist of the
-    bucket frame: the guard still runs and still raises, but the bucket
-    pipeline is recomputed for the audit aggregate instead of cached —
-    zero cache footprint for callers (long-lived multi-tenant sessions)
-    that would otherwise accumulate one entry per capped call. The cost is
-    the measured r11 trade in reverse (~1.24x on the guarded path when the
-    lineages stop sharing); correctness is unchanged either way."""
-    if persist:
-        buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
+    in-repo composition."""
+    buckets = pin_small(buckets)
     from pyspark.sql.types import ArrayType
 
     is_list = isinstance(buckets.schema[list_col].dataType, ArrayType)
@@ -1105,7 +1071,6 @@ def _bucket_pairs(
     max_hamming: int,
     max_bucket_size: int | None,
     on_saturation: str,
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Shared capped bucket→pair expansion for both SimHash blocking
     schemes (contiguous single bands and piece combinations): apply the
@@ -1155,7 +1120,6 @@ def _bucket_pairs(
         "Use simhash_near_dup_pairs_auto (escalates the blocking), "
         "widen the blocking (simhash_near_dup_pairs_combi), or "
         "raise max_bucket_size; audit via simhash_bucket_stats.",
-        persist=guard_persist,
     )
 
 
@@ -1296,7 +1260,6 @@ def simhash_near_dup_pairs_combi(
     gram_n: int = 3,
     max_bucket_size: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs via piece-COMBINATION blocking (Manku et al.
     WWW'07 §3) — the saturated-regime escalation of
@@ -1312,10 +1275,7 @@ def simhash_near_dup_pairs_combi(
     buckets = _simhash_combi_buckets(
         df, id_col, text_col, n_bits, n_pieces, max_hamming, gram_n
     )
-    return _bucket_pairs(
-        buckets, max_hamming, max_bucket_size, on_saturation,
-        guard_persist=guard_persist,
-    )
+    return _bucket_pairs(buckets, max_hamming, max_bucket_size, on_saturation)
 
 
 def simhash_bucket_stats(
@@ -1392,7 +1352,6 @@ def simhash_near_dup_pairs(
     max_bucket_size: int | None = None,
     band_width: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs via pigeonhole band blocking + exact hamming
     verification (Manku et al., WWW'07 style).
@@ -1440,10 +1399,7 @@ def simhash_near_dup_pairs(
     buckets = _simhash_buckets(
         df, id_col, text_col, n_bits, n_bands, gram_n, band_width
     )
-    return _bucket_pairs(
-        buckets, max_hamming, max_bucket_size, on_saturation,
-        guard_persist=guard_persist,
-    )
+    return _bucket_pairs(buckets, max_hamming, max_bucket_size, on_saturation)
 
 
 def simhash_near_dup_pairs_auto(
@@ -1459,7 +1415,6 @@ def simhash_near_dup_pairs_auto(
     n_docs: int | None = None,
     max_tables: int = 70,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """``simhash_near_dup_pairs`` with the BLOCKING derived from the
     corpus size — the corpus-proof entry point. Two regimes:
@@ -1508,7 +1463,6 @@ def simhash_near_dup_pairs_auto(
             max_bucket_size=max_bucket_size,
             band_width=width,
             on_saturation=on_saturation,
-            guard_persist=guard_persist,
         )
     n_pieces, key_bits = combi_blocking_plan(
         n,
@@ -1542,7 +1496,6 @@ def simhash_near_dup_pairs_auto(
         gram_n=gram_n,
         max_bucket_size=max_bucket_size,
         on_saturation=on_saturation,
-        guard_persist=guard_persist,
     )
 
 
@@ -1554,7 +1507,6 @@ def embedding_near_dup_pairs(
     n_bits: int = 8,
     max_bucket_size: int | None = 1000,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup: sign-bucket LSH blocking + exact cosine
     verification within buckets. Returns (id_a, id_b, cosine ≥ threshold).
@@ -1615,7 +1567,6 @@ def embedding_near_dup_pairs(
         "sign-LSH ",
         "Raise max_bucket_size or widen n_bits (expected occupancy is "
         "N/2^n_bits); audit via embedding_bucket_stats.",
-        persist=guard_persist,
     )
 
 
@@ -1830,9 +1781,11 @@ def dedup_drop_audit(
     """
     rows_per_band = num_hashes // num_bands
     reps = exact_dedup(docs, "doc_id", "text")
-    sigs = minhash_signatures(
-        reps, "doc_id", "text", num_hashes=num_hashes, shingle_k=shingle_k
-    ).persist()
+    sigs = pin_small(
+        minhash_signatures(
+            reps, "doc_id", "text", num_hashes=num_hashes, shingle_k=shingle_k
+        )
+    )
     lstats = lsh_bucket_stats(
         sigs, "doc_id", num_bands, rows_per_band, max_bucket_size
     )
@@ -1934,7 +1887,6 @@ def edit_distance_neardup(
     max_dist: int = 8,
     max_block_size: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Edit-distance near-dup pairs over a text PREFIX with equi-join
     blocking: candidates share ``block_cols`` plus the first
@@ -1961,7 +1913,7 @@ def edit_distance_neardup(
     emitting nothing (``on_saturation="ignore"`` opts out). Default
     ``None`` keeps the historical uncapped behavior — registered q87
     results are byte-identical; the capped "error" path widens output
-    nullability and persists a session-lifetime block-size frame (module
+    nullability and persists a block-size frame (module
     docstring, capped-path contract). Spark's 3-arg
     ``levenshtein`` early-exits above the threshold (returns -1), so the
     per-candidate cost is bounded by ``max_dist`` band width, not
@@ -2028,7 +1980,6 @@ def edit_distance_neardup(
         "prefix ",
         "Raise max_block_size or widen block_prefix to spread the "
         "blocks.",
-        persist=guard_persist,
     )
 
 
@@ -2039,7 +1990,6 @@ def overlap_join(
     min_overlap: int,
     max_posting_size: int | None = None,
     on_saturation: str = "error",
-    guard_persist: bool = True,
 ) -> DataFrame:
     """Set-overlap self-join with PREFIX FILTERING (the PPJoin family's
     core idea, Xiao et al., public literature): pairs of documents whose
@@ -2071,15 +2021,13 @@ def overlap_join(
     emitting nothing (``on_saturation="ignore"`` opts out). Default
     ``None`` keeps the historical uncapped behavior — registered q104
     results are byte-identical; the capped "error" path widens output
-    nullability and persists a session-lifetime posting-size frame
+    nullability and persists a posting-size frame
     (module docstring, capped-path contract)."""
     if on_saturation not in ("error", "ignore"):
         raise ValueError(f"on_saturation must be error|ignore, got {on_saturation!r}")
-    from pyspark.storagelevel import StorageLevel
-
-    arrays = df.select(
-        F.col(id_col), distinct_tokens(text_col).alias("__ts")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    arrays = pin_small(
+        df.select(F.col(id_col), distinct_tokens(text_col).alias("__ts"))
+    )
     tok = arrays.select(F.col(id_col), F.explode("__ts").alias("t"))
     freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("__df"))
     w_rank = Window.partitionBy(id_col).orderBy(
@@ -2140,7 +2088,6 @@ def overlap_join(
         "prefix-posting ",
         "Raise max_posting_size, exact-dedup byte-identical docs first, "
         "or raise min_overlap to shorten the prefixes.",
-        persist=guard_persist,
     )
 
 
@@ -2293,11 +2240,13 @@ def incremental_lsh_clusters(
     rows_per_band = num_hashes // num_bands
     reps = exact_dedup(spread(df), id_col, text_col).drop("content_hash")
     reps = spread(reps)
-    sh = reps.select(
-        F.col(id_col),
-        F.array_distinct(shingles(text_col, shingle_k)).alias("sh"),
-        delta_pred.alias("is_delta"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = pin_small(
+        reps.select(
+            F.col(id_col),
+            F.array_distinct(shingles(text_col, shingle_k)).alias("sh"),
+            delta_pred.alias("is_delta"),
+        )
+    )
     sigs = signatures_from_shingles(sh, id_col, "sh", num_hashes)
     bands = []
     for b in range(num_bands):
@@ -2316,13 +2265,12 @@ def incremental_lsh_clusters(
                 ).alias("bhash"),
             )
         )
-    banded = (
+    banded = pin_small(
         sigs.join(sh.select(F.col(id_col), "is_delta"), id_col)
         .select(
             F.col(id_col), "is_delta", F.explode(F.array(*bands)).alias("b")
         )
         .select(F.col(id_col), "is_delta", F.col("b.band"), F.col("b.bhash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     base_b = banded.where(~F.col("is_delta"))
     delta_b = banded.where(F.col("is_delta"))
@@ -2362,11 +2310,10 @@ def incremental_lsh_clusters(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    pairs = (
+    pairs = pin_small(
         joined.select("id_a", "id_b", (inter / union).alias("j"))
         .where(F.col("j") >= jaccard_threshold)
         .select("id_a", "id_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     flags = sh.select(F.col(id_col), "is_delta")
     fa = flags.select(F.col(id_col).alias("id_a"), F.col("is_delta").alias("da"))
@@ -2374,9 +2321,7 @@ def incremental_lsh_clusters(
     pf = pairs.join(F.broadcast(fa), "id_a").join(F.broadcast(fb), "id_b")
     base_pairs = pf.where(~F.col("da") & ~F.col("db")).select("id_a", "id_b")
     delta_pairs = pf.where(F.col("da") | F.col("db")).select("id_a", "id_b")
-    base_cc = connected_components(base_pairs).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    base_cc = pin_small(connected_components(base_pairs))
     rep = base_cc.select(
         F.col("id").alias("m_id"), F.col("cluster_id").alias("m_rep")
     )

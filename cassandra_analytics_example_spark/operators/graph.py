@@ -12,17 +12,22 @@ sums are associative/commutative bit-for-bit, so the result is identical
 under any partitioning, any aggregation order, and any engine — which is
 what makes a 5-iteration PageRank DuckDB-oracle-checkable with a plain
 hash compare (float PageRank would differ by ulps between engines).
+
+Every cached layer is persisted through ``session.pin_small``: the lazy
+operators' caches are released by the caller's ``pin_scope``/
+``release_pins``, and the eager ones (``label_propagation``,
+``k_core_rounds``, ``bfs_hop_counts``) unpersist theirs before returning.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
     truncate_plan,
 )
+from cassandra_analytics_example_spark.session import pin_small
 
 #: Integer mass quantum per node.  Large enough that 5-15 iterations of
 #: ``div`` flooring lose < 1e-9 relative mass per step; small enough that
@@ -93,21 +98,19 @@ def pagerank_integer(
     # tests/test_plans.py::test_pagerank_edge_cache_partitioning_is_reused
     # pins the no-reshuffle contract).
     w = Window.partitionBy("src")
-    edeg = (
+    edeg = pin_small(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .repartition(nparts, "src")
         .withColumn("outdeg", F.count(F.lit(1)).over(w))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # node inventory, persisted: the unrolled N-iteration plan embeds
     # `nodes` once per iteration's left join, and an unpersisted distinct
     # would re-aggregate the edge cache each time (round-11 self-review;
     # the old code's persisted deg table paid this once too) — the cache
     # is node-sized.
-    nodes = (
+    nodes = pin_small(
         edeg.select(F.col("src").alias("node"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     teleport = PAGERANK_QUANTUM * (damping_den - damping_num) // damping_den
     ranks = nodes.select(
@@ -168,13 +171,12 @@ def triangle_participation(
     Returns (node, tri_count) for nodes in >= 1 triangle.
     """
     a, b = F.col(src), F.col(dst)
-    und = (
+    und = pin_small(
         edges.select(
             F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ends = und.select(F.col("a").alias("node")).unionAll(
         und.select(F.col("b").alias("node"))
@@ -187,7 +189,7 @@ def triangle_participation(
     )
     ra = rank.withColumnRenamed("node", "a").withColumnRenamed("rk", "rka")
     rb = rank.withColumnRenamed("node", "b").withColumnRenamed("rk", "rkb")
-    oriented = (
+    oriented = pin_small(
         und.join(ra, "a")
         .join(rb, "b")
         .select(
@@ -198,7 +200,6 @@ def triangle_participation(
             .otherwise(F.col("a"))
             .alias("v"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     o1 = oriented.select(F.col("u"), F.col("v").alias("v1"))
     o2 = oriented.select(F.col("u"), F.col("v").alias("v2"))
@@ -247,14 +248,13 @@ def label_propagation(
     nparts = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    e = (
+    e = pin_small(
         edges.select("src", "dst")
         .repartition(nparts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = seeds.select(
-        "node", "label", F.lit(True).alias("is_seed")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    labels = pin_small(
+        seeds.select("node", "label", F.lit(True).alias("is_seed"))
+    )
     labels.count()
     try:
         for _ in range(rounds):
@@ -277,11 +277,13 @@ def label_propagation(
                 .select("node", "label")
             )
             seeds_only = labels.where(F.col("is_seed"))
-            nxt = seeds_only.unionByName(
-                majority.join(
-                    seeds_only.select("node"), "node", "left_anti"
-                ).select("node", "label", F.lit(False).alias("is_seed"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            nxt = pin_small(
+                seeds_only.unionByName(
+                    majority.join(
+                        seeds_only.select("node"), "node", "left_anti"
+                    ).select("node", "label", F.lit(False).alias("is_seed"))
+                )
+            )
             try:
                 nxt.count()
             except Exception:
@@ -337,9 +339,7 @@ def k_core_rounds(
     trajectory itself.
     """
     spark = edges.sparkSession
-    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    e = pin_small(edges.select(F.col(a).alias("a"), F.col(b).alias("b")))
     two_e, v = (
         e.select(F.explode(F.array("a", "b")).alias("node"))
         .agg(
@@ -356,17 +356,15 @@ def k_core_rounds(
             .groupBy("node")
             .agg(F.count("*").alias("__d"))
         )
-        surv = (
+        surv = pin_small(
             deg.where(F.col("__d") >= F.lit(int(k)))
             .select("node")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_nodes = surv.count()
         prev = e
-        e = (
+        e = pin_small(
             prev.join(surv, prev.a == surv.node, "left_semi")
             .join(surv, F.col("b") == surv.node, "left_semi")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_edges = e.count()
         prev.unpersist()
@@ -408,19 +406,15 @@ def bfs_hop_counts(
     level trajectory built from the already-computed scalars.
     """
     spark = edges.sparkSession
-    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    all_nodes = (
+    e = pin_small(edges.select(F.col(a).alias("a"), F.col(b).alias("b")))
+    all_nodes = pin_small(
         e.select(F.explode(F.array("a", "b")).alias("node"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    reached = (
+    reached = pin_small(
         seeds.select(F.col(node).alias("node"))
         .join(all_nodes, "node", "left_semi")
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     frontier = reached
     levels: list[tuple[int, int]] = [(0, reached.count())]
@@ -436,12 +430,8 @@ def bfs_hop_counts(
             .distinct()
         )
         prev_frontier, prev_reached = frontier, reached
-        frontier = nbr.join(reached, "node", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        reached = prev_reached.unionByName(frontier).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        frontier = pin_small(nbr.join(reached, "node", "left_anti"))
+        reached = pin_small(prev_reached.unionByName(frontier))
         levels.append((h, frontier.count()))
         reached.count()
         if prev_frontier is not prev_reached:
@@ -498,14 +488,13 @@ def personalized_pagerank_integer(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     w = Window.partitionBy("src")
-    edeg = (
+    edeg = pin_small(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .repartition(nparts, "src")
         .withColumn("outdeg", F.count(F.lit(1)).over(w))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sd = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
+    nodes = pin_small(
         edeg.select(F.col("src").alias("node"))
         .unionByName(edeg.select(F.col("dst").alias("node")))
         .unionByName(sd)
@@ -515,7 +504,6 @@ def personalized_pagerank_integer(
             "node",
             F.coalesce(F.col("__is_seed"), F.lit(0)).alias("is_seed"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     teleport = PAGERANK_QUANTUM * (damping_den - damping_num) // damping_den
     ranks = nodes.select(

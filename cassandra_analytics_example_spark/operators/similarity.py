@@ -29,6 +29,7 @@ from cassandra_analytics_example_spark.functions.vector import (
     l2_norm,
     sign_bucket,
 )
+from cassandra_analytics_example_spark.session import pin_small
 
 
 def brute_force_topk(
@@ -704,7 +705,6 @@ def semdedup_prune(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_cells: bool = True,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster the
     embedding space into cells, then inside each cell drop every vector
@@ -744,9 +744,9 @@ def semdedup_prune(
     Returns one row per input vector: (id, cell, kept) — ``kept=false``
     means a lower-id semantic duplicate exists in the same cell.
 
-    ``persist_cells`` materializes the assignment layer (MEMORY_AND_DISK):
-    it is consumed THREE times (both prune sides + the kept-flag spine);
-    pass False to trade recompute for zero cache footprint.
+    The assignment layer is persisted (MEMORY_AND_DISK): it is consumed
+    THREE times (both prune sides + the kept-flag spine). The cache is
+    released by ``pin_scope``/``release_pins``.
     """
     n = emb.count()
     k = max(min_cells, -(-n // target_cell_size))
@@ -781,7 +781,7 @@ def semdedup_prune(
         )
         return -best["neg_id"]
 
-    cells = (
+    cells = pin_small(
         emb.withColumn("cbucket", sign_bucket(vec_col, m))
         .join(F.broadcast(bucket_cents), "cbucket", "left")
         .crossJoin(F.broadcast(all_cents))
@@ -795,10 +795,6 @@ def semdedup_prune(
             .alias("cell"),
         )
     )
-    if persist_cells:
-        from pyspark.storagelevel import StorageLevel
-
-        cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
     a = cells.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "cell"
     )

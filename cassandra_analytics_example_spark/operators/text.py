@@ -649,13 +649,14 @@ def boilerplate_gram_coverage(
     Returns (id, n_grams, n_boiler, boiler_frac) with an ANSI-safe zero
     guard for gram-less documents.
     """
-    toks = spread(df).select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(text_col, ngram_n)).alias("toks"),
-    )
-    from pyspark.storagelevel import StorageLevel
+    from cassandra_analytics_example_spark.session import pin_small
 
-    toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+    toks = pin_small(
+        spread(df).select(
+            F.col(id_col),
+            F.array_distinct(word_ngrams(text_col, ngram_n)).alias("toks"),
+        )
+    )
     tok = toks.select(F.col(id_col), F.explode("toks").alias("tok"))
     dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("dfc"))
     ndocs = df.agg(F.count(F.lit(1)).alias("n_docs"))

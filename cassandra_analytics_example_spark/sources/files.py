@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassandra_analytics_example_spark.session import pin_small
 from cassandra_analytics_example_spark.sources.registry import (
     MAX_RECORDS_PER_FILE,
 )
@@ -78,8 +79,9 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     be materialized (cached or persisted through a shuffle) before it can
     be filtered on — a plain filter over the lazy scan raises
     AnalysisException — so the split caches the parsed layer once and both
-    outputs share it."""
-    cached = df.cache()
+    outputs share it. The cache is released by
+    ``pin_scope``/``release_pins``."""
+    cached = pin_small(df)
     clean = cached.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = cached.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")

@@ -256,14 +256,20 @@ def _run_to_memory(
     microbatch nothing passes the watermark before input ends, so
     append-mode would emit nothing; complete shows the full aggregate
     state — matching the batch twins minus the watermark drop (no late
-    data in the fixture)."""
+    data in the fixture).
+
+    The sink's temp view is dropped once the frame is resolved: the frame
+    keeps reading the sink's rows, and the session catalog no longer holds
+    one ``s_…`` table per call."""
     name = f"s_{uuid.uuid4().hex[:12]}"
     _drain(
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
     )
-    return spark.table(name)
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

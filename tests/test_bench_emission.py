@@ -104,3 +104,28 @@ def test_compact_line_prefers_isolated_ctrl_map_and_fits():
     assert len(line) < 1900, len(line)
     parsed = json.loads(line)
     assert "vs_anchor_isolated_ctrl_queries" in parsed
+
+
+def test_anchor_fields_replay_recorded_report():
+    """Golden replay of the anchor ratios: BENCH_SELF_r15.json's timings,
+    fed through ``bench.anchor_fields`` with the committed anchor files,
+    give back every anchor-derived field that report recorded, value for
+    value — the four anchor reads share one helper, and the full and
+    compact lines bench.py prints must not drift with it."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(here, "BENCH_SELF_r15.json")) as f:
+        report = json.load(f)
+    fields = bench.anchor_fields(report["queries"], report["sf"])
+    assert set(fields) == {
+        "baseline_round", "baseline_total", "vs_baseline",
+        "vs_baseline_queries",
+        "anchor_round", "vs_anchor", "vs_anchor_queries",
+        "cold_anchor_round", "vs_anchor_cold", "vs_anchor_cold_queries",
+        "host_control", "vs_anchor_cold_ctrl", "vs_anchor_cold_ctrl_queries",
+        "isolated_anchor_coverage", "isolated_anchor_round",
+        "vs_anchor_isolated", "vs_anchor_isolated_queries",
+        "isolated_host_control", "vs_anchor_isolated_ctrl",
+        "vs_anchor_isolated_ctrl_queries",
+    }
+    for key, value in fields.items():
+        assert value == report[key], key

@@ -15,6 +15,7 @@ contracts close that leak:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
@@ -22,6 +23,28 @@ from cassandra_analytics_example_spark.operators.checkpoints import (
     pin_partition_ids,
     pin_scope,
     release_pins,
+)
+from cassandra_analytics_example_spark.operators.dedup import (
+    incremental_lsh_clusters,
+    minhash_lsh_dedup,
+    overlap_join,
+    token_containment_pairs,
+    token_jaccard_pairs,
+)
+from cassandra_analytics_example_spark.operators.graph import (
+    pagerank_integer,
+    personalized_pagerank_integer,
+    triangle_participation,
+)
+from cassandra_analytics_example_spark.operators.similarity import (
+    semdedup_prune,
+)
+from cassandra_analytics_example_spark.operators.text import (
+    boilerplate_gram_coverage,
+)
+from cassandra_analytics_example_spark.sources.files import (
+    read_csv,
+    split_corrupt,
 )
 
 
@@ -304,3 +327,102 @@ def test_every_registered_metric_query_leaves_no_cache_entries(spark):
                 "is not eager/self-releasing"
             )
     assert not _thread_pins(spark)
+
+
+# ---------------------------------------------------------------------------
+# Library operators that cache a shared layer: every such persist goes
+# through the pin registry, so a pin_scope around build + action leaves no
+# persistent RDD behind (the eager graph operators release theirs inside).
+# ---------------------------------------------------------------------------
+
+
+def _docs(spark):
+    body = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(i, f"{body} {i % 5} tail {i % 3}") for i in range(30)]
+    rows += [(100 + i, f"unrelated words {i} only here") for i in range(5)]
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def _edges(spark):
+    tri = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (5, 6), (6, 1)]
+    both = tri + [(b, a) for a, b in tri]
+    return spark.createDataFrame(both, "src long, dst long")
+
+
+def _seeds(spark):
+    return spark.createDataFrame([(1,), (4,)], "node long")
+
+
+def _corrupt_csv(spark, tmp_path):
+    p = tmp_path / "docs.csv"
+    p.write_text("doc_id,text\n1,plain words\n2,more words\nnot-a-number\n")
+    return read_csv(spark, str(p), "doc_id bigint, text string")
+
+
+# name -> build(spark, tmp_path, sf_dir): the frames to act on
+_PINNED_OPERATORS = {
+    "minhash_lsh_dedup_capped": lambda s, t, sf: [
+        minhash_lsh_dedup(_docs(s), "doc_id", "text", max_bucket_size=1000)
+    ],
+    "token_jaccard_pairs": lambda s, t, sf: [
+        token_jaccard_pairs(_docs(s), "doc_id", "text", max_block_size=1000)
+    ],
+    "token_containment_pairs": lambda s, t, sf: [
+        token_containment_pairs(
+            _docs(s), "doc_id", "text", max_block_size=1000
+        )
+    ],
+    "overlap_join": lambda s, t, sf: [
+        overlap_join(_docs(s), "doc_id", "text", 3, max_posting_size=1000)
+    ],
+    "incremental_lsh_clusters": lambda s, t, sf: [
+        incremental_lsh_clusters(
+            _docs(s), "doc_id", "text", F.col("doc_id") % 7 == 0
+        )
+    ],
+    "boilerplate_gram_coverage": lambda s, t, sf: [
+        boilerplate_gram_coverage(_docs(s), "doc_id", "text")
+    ],
+    "pagerank_integer": lambda s, t, sf: [
+        pagerank_integer(_edges(s), iterations=3)
+    ],
+    "personalized_pagerank_integer": lambda s, t, sf: [
+        personalized_pagerank_integer(_edges(s), _seeds(s), iterations=3)
+    ],
+    "triangle_participation": lambda s, t, sf: [
+        triangle_participation(_edges(s))
+    ],
+    "semdedup_prune": lambda s, t, sf: [
+        semdedup_prune(s.read.parquet(f"{sf}/embeddings.parquet"))
+    ],
+    "split_corrupt": lambda s, t, sf: list(
+        split_corrupt(_corrupt_csv(s, t))
+    ),
+}
+
+
+def _cached_rdd_ids(spark) -> set:
+    """Persistent RDDs that hold a cache. The local checkpoints of
+    ``truncate_plan`` (``connected_components``' per-round lineage cuts)
+    are persistent RDDs too, but they are not caches and no registry
+    owns them: Spark's context cleaner drops their blocks once the frame
+    is garbage-collected."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        i for i in rdds.keySet() if not rdds.get(i).rdd().isLocallyCheckpointed()
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_PINNED_OPERATORS))
+def test_operator_caches_are_released_by_pin_scope(
+    spark, tmp_path, sf_dir, name
+):
+    """Build and act on the operator inside ``pin_scope``: every cache it
+    created is registered, so the scope's exit leaves no new cached
+    persistent RDD (only ids that were already there may remain)."""
+    before = _cached_rdd_ids(spark)
+    with pin_scope(spark):
+        for out in _PINNED_OPERATORS[name](spark, tmp_path, sf_dir):
+            out.write.format("noop").mode("overwrite").save()
+    left_behind = _cached_rdd_ids(spark) - before
+    assert not left_behind, f"{name} left persistent RDDs: {left_behind}"

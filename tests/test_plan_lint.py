@@ -135,3 +135,39 @@ def test_driver_materializations_are_enumerated():
     )
     stale = set(_DRIVER_READ_ALLOWLIST) - set(found)
     assert not stale, f"allowlist entries no longer in the source: {stale}"
+
+
+_RAW_PERSIST = re.compile(r"\.persist\(|\.cache\(\)")
+
+
+def test_library_persists_go_through_the_pin_registry():
+    """Every cache an operator or source creates must be registered
+    (``session.pin_small`` or ``checkpoints.pin_partition_ids``), or
+    ``pin_scope``/``release_pins`` silently miss it and a long-lived
+    session keeps the entry until ``clearCache``. Only
+    ``operators/checkpoints.py``, which owns the registry, persists
+    directly."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "cassandra_analytics_example_spark"
+    )
+    found = []
+    scanned = 0
+    for sub in ("operators", "sources"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            if path.name == "checkpoints.py":
+                continue
+            scanned += 1
+            for lineno, line in enumerate(
+                path.read_text().splitlines(), start=1
+            ):
+                m = _RAW_PERSIST.search(line)
+                hash_pos = line.find("#")
+                if m and not 0 <= hash_pos < m.start():
+                    found.append(f"{sub}/{path.name}:{lineno}")
+    assert scanned > 20, f"scanned only {scanned} modules under {pkg}"
+    assert not found, (
+        "raw persist/cache outside the pin registry — use "
+        f"session.pin_small: {found}"
+    )

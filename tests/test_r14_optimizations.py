@@ -2,9 +2,10 @@
 
 Three focused pins for the r14 changes (VERDICT r13 tasks 1 and 4):
 
-* the ``guard_persist=False`` caller flag actually yields ZERO cache
-  entries (and the default keeps the r11-measured single cached bucket
-  frame) — the cache-entry-count test the flag shipped with;
+* the capped dedup path's cache is scoped: inside ``pin_scope`` it holds
+  exactly the shingle base plus the r11-measured single cached bucket
+  frame, and the scope's exit leaves ZERO entries (the guard still
+  raises on saturation inside a scope);
 * the q21/q137 AQE-coalesce fix is plan-gated: ``lsh_candidate_pairs``
   ends in an explicit width repartition (REPARTITION_BY_NUM is exempt
   from AQE byte-based coalescing), so the compute-dense verification
@@ -21,6 +22,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from cassandra_analytics_example_spark.operators.checkpoints import pin_scope
+
 
 def _tiny_docs(spark):
     rows = [(i, f"some text body number {i % 7} repeated") for i in range(40)]
@@ -31,39 +34,42 @@ def _cache_entry_count(spark) -> int:
     return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
-def test_guard_persist_false_leaves_no_cache_entries(spark):
-    """Capped generator with guard_persist=False: building AND acting on
-    the guarded frame must leave the SQL cache empty; the default (True)
-    keeps exactly the one bucket-frame entry r11 measured for."""
+def test_capped_dedup_cache_is_released_by_pin_scope(spark):
+    """Capped generator inside ``pin_scope``: building AND acting on the
+    guarded frame holds exactly its documented cache entries (the shingle
+    base plus the guard's one bucket frame, the cached sharing r11
+    measured for), and the scope's exit leaves zero entries behind."""
     from cassandra_analytics_example_spark.operators.dedup import (
         minhash_lsh_dedup,
     )
 
     docs = _tiny_docs(spark)
     spark.catalog.clearCache()
-    out = minhash_lsh_dedup(
-        docs, "doc_id", "text", max_bucket_size=1000, guard_persist=False
-    )
-    out.write.format("noop").mode("overwrite").save()
-    # the shingle layer persist is minhash_lsh_dedup's own documented
-    # cache; the GUARD must not have added a bucket-frame entry on top
-    n_nopersist = _cache_entry_count(spark)
-
-    spark.catalog.clearCache()
-    out = minhash_lsh_dedup(docs, "doc_id", "text", max_bucket_size=1000)
-    out.write.format("noop").mode("overwrite").save()
-    n_default = _cache_entry_count(spark)
+    # relative count: a shared test session can hold localCheckpoint
+    # blocks from earlier tests that clearCache does not (and must not)
+    # drop — only the DELTA this call creates is under test
+    n0 = _cache_entry_count(spark)
+    with pin_scope(spark):
+        out = minhash_lsh_dedup(docs, "doc_id", "text", max_bucket_size=1000)
+        out.write.format("noop").mode("overwrite").save()
+        n_default = _cache_entry_count(spark)
+    n_after = _cache_entry_count(spark)
     spark.catalog.clearCache()
 
-    assert n_default == n_nopersist + 1, (
-        f"guard_persist=False should drop exactly the guard's bucket-frame "
-        f"cache entry (default={n_default}, nopersist={n_nopersist})"
+    assert n_default == n0 + 2, (
+        f"the capped path should cache the shingle base and one "
+        f"bucket frame (before={n0}, inside the scope={n_default})"
+    )
+    assert n_after == n0, (
+        f"pin_scope should release every entry the call cached "
+        f"(before={n0}, after exit={n_after})"
     )
 
 
-def test_guard_persist_false_still_raises_on_saturation(spark):
-    """The flag controls the CACHE, not the guard: a fully saturated
-    valve must still raise at action time with guard_persist=False."""
+def test_scoped_capped_dedup_still_raises_on_saturation(spark):
+    """The scope controls the CACHE, not the guard: a fully saturated
+    valve must still raise at action time inside ``pin_scope``, and the
+    exit still releases what the failed call cached."""
     from cassandra_analytics_example_spark.operators.dedup import (
         minhash_lsh_dedup,
     )
@@ -73,18 +79,14 @@ def test_guard_persist_false_still_raises_on_saturation(spark):
         "doc_id bigint, text string",
     )
     spark.catalog.clearCache()
-    # relative count: a shared test session can hold localCheckpoint
-    # blocks from earlier tests that clearCache does not (and must not)
-    # drop — only the DELTA this call creates is under test
     n0 = _cache_entry_count(spark)
-    guarded = minhash_lsh_dedup(
-        docs, "doc_id", "text", max_bucket_size=1, guard_persist=False
-    )
-    with pytest.raises(Exception, match="BlockingSaturationError"):
-        guarded.write.format("noop").mode("overwrite").save()
-    # the one new entry allowed is minhash_lsh_dedup's own documented
-    # shingle-layer persist; the guard added none
-    assert _cache_entry_count(spark) <= n0 + 1
+    with pin_scope(spark):
+        guarded = minhash_lsh_dedup(
+            docs, "doc_id", "text", max_bucket_size=1
+        )
+        with pytest.raises(Exception, match="BlockingSaturationError"):
+            guarded.write.format("noop").mode("overwrite").save()
+    assert _cache_entry_count(spark) <= n0
     spark.catalog.clearCache()
 
 

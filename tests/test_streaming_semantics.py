@@ -1127,6 +1127,27 @@ def test_drain_reraises_fold_error_and_stops_the_stream(spark, tmp_path):
     assert spark.streams.active == []
 
 
+def test_memory_sink_store_drops_its_table(spark, sf_dir):
+    """A memory-sink store returns its rows without leaving its ``s_…``
+    sink table in the session catalog: one such table per call would
+    hold every result in driver memory for the session's life."""
+    from cassandra_analytics_example_spark.streaming.windows import (
+        run_tumbling_stream,
+    )
+
+    def sink_tables():
+        return {
+            t.name for t in spark.catalog.listTables() if t.name.startswith("s_")
+        }
+
+    before = sink_tables()
+    out = run_tumbling_stream(spark, sf_dir)
+    assert sink_tables() == before
+    rows = out.collect()
+    assert rows and len(rows) == len(out.collect())
+    assert spark.streams.active == []
+
+
 def test_events_stores_read_ns_vintage_fixture(spark, tmp_path, sf_dir):
     """The events fixture has shipped with ``ts`` as timestamp[ns], which
     Spark reads only with ``nanosAsLong`` set. Each events-fed store must
