@@ -1,19 +1,19 @@
-"""Plan-truncation helper for iterative operators.
+"""Lineage cuts and cache pins: the one owner of both.
 
 Iterative DataFrame algorithms (label propagation, Lloyd's iterations) must
 truncate their lineage every round or the plan grows unboundedly and
-re-optimization cost compounds. Two ways to truncate:
+re-optimization cost compounds. Every cut goes through ``truncate_plan``:
 
 * ``localCheckpoint`` — executor-local block storage. Cheap (no FS round
   trip) and the right default on ``local[*]``, but the blocks die with an
   executor: on a real multi-executor cluster a lost executor aborts the job.
 * reliable ``checkpoint`` — writes to a fault-tolerant checkpoint directory
   (HDFS/S3 on a cluster). Survives executor loss; costs one write+read of
-  the intermediate per round.
+  the intermediate per cut.
 
-Operators take ``checkpoint_dir: str | None``: a directory selects the
-reliable path, ``None`` the local one — the knob the r3 review asked for in
-place of a docstring caveat.
+The reliable path runs exactly when the context has a checkpoint directory
+(Spark's own ``spark.checkpoint.dir``): a deployment setting, not an
+argument. This module never sets one.
 """
 
 from __future__ import annotations
@@ -26,27 +26,24 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
-_CKPT_BASE_ATTR = "_cassandra_analytics_checkpoint_base"
 _PINS_ATTR = "_cassandra_analytics_pins"
 
 
-def truncate_plan(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+def truncate_plan(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and return a lineage-free DataFrame over the
-    materialized blocks (eager in both modes).
-
-    ``setCheckpointDir`` is session-global and mints a fresh UUID subdir
-    per call, so it runs only when this call's base dir differs from the
-    last one THIS module set (tracked on the SparkContext) — repeated
-    iterations reuse one subdir, and an operator that never passes a
-    ``checkpoint_dir`` never perturbs the session's setting.
-    """
-    if checkpoint_dir:
-        sc = df.sparkSession.sparkContext
-        if getattr(sc, _CKPT_BASE_ATTR, None) != checkpoint_dir:
-            sc.setCheckpointDir(checkpoint_dir)
-            setattr(sc, _CKPT_BASE_ATTR, checkpoint_dir)
+    materialized data (eager in both modes): a reliable checkpoint when
+    the session has a checkpoint directory, a local one otherwise."""
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isDefined():
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def release_cut(cut: DataFrame) -> None:
+    """Free a local cut's blocks once the round that superseded it is
+    materialized; the frame is unreadable afterwards. (A reliable cut's
+    files stay unless ``spark.cleaner.referenceTracking.cleanCheckpoints``.)"""
+    cut._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 #: Whether ``pin_partition_ids`` fills each pin with an eager ``count()``.

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.operators.quantiles import (
     group_quantiles_exact,
 )
@@ -77,7 +78,7 @@ def compression_quality_checks(
     * ``partition_invariant`` — identical score checksum when the input
       arrives partitioned differently (pure-function proof).
     """
-    scored = compression_scores(df, id_col, text_col).localCheckpoint()
+    scored = truncate_plan(compression_scores(df, id_col, text_col))
     n_docs = df.count()
 
     def row(name: str, ok_col, n_col) -> DataFrame:

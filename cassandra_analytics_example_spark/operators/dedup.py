@@ -67,6 +67,10 @@ from cassandra_analytics_example_spark.functions.text import (
     tokens,
     word_ngrams,
 )
+from cassandra_analytics_example_spark.operators.checkpoints import (
+    release_cut,
+    truncate_plan,
+)
 from cassandra_analytics_example_spark.session import (
     passing,
     pin_small,
@@ -1576,7 +1580,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     stats: dict | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair list — the clustering step
     that turns pairwise evidence into dedup groups (one representative per
@@ -1595,18 +1598,14 @@ def connected_components(
 
     Each round: neighbor-min (equi-join + partial-aggregated groupBy on
     the node id) + shortcut (self-equi-join on the label), then one
-    plan truncation to keep the lineage flat across rounds —
-    ``checkpoint_dir`` selects a reliable checkpoint (survives executor
-    loss on a real cluster), ``None`` the cheaper ``localCheckpoint``
-    (operators/checkpoints.py). The per-round ``count()`` is a
+    plan truncation to keep the lineage flat across rounds
+    (operators/checkpoints.py picks a local or reliable cut); each round
+    releases the cut it superseded, and the edge cut goes once the
+    labels converge. The per-round ``count()`` is a
     convergence test over the just-checkpointed partitions (an aggregate
     action, no data collected to the driver, no recompute). ``stats``,
     when given, records ``rounds``.
     """
-    from cassandra_analytics_example_spark.operators.checkpoints import (
-        truncate_plan,
-    )
-
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = e.union(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1620,7 +1619,7 @@ def connected_components(
     nparts = int(
         pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    edges = truncate_plan(edges.repartition(nparts, "b"), checkpoint_dir)
+    edges = truncate_plan(edges.repartition(nparts, "b"))
     labels = (
         edges.select(F.col("a").alias("id"))
         .distinct()
@@ -1666,10 +1665,14 @@ def connected_components(
                 < F.col("old")
             ).alias("__chg"),
         )
-        updated = truncate_plan(jumped, checkpoint_dir)
+        updated = truncate_plan(jumped)
+        if rnd > 1:  # round 1 read the edge cut's distinct ids, not a cut
+            release_cut(prev)
+        prev = updated
         changed = updated.filter(F.col("__chg")).count()
         labels = updated.drop("__chg")
         if changed == 0:
+            release_cut(edges)
             if stats is not None:
                 stats["rounds"] = rnd
             return labels

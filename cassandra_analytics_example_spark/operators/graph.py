@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
+    release_cut,
     truncate_plan,
 )
 from cassandra_analytics_example_spark.session import pin_small
@@ -45,7 +46,6 @@ def pagerank_integer(
     damping_num: int = 85,
     damping_den: int = 100,
     checkpoint_every: int = 0,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-integer PageRank over a directed edge list.
 
@@ -144,7 +144,10 @@ def pagerank_integer(
             )
         )
         if checkpoint_every and it % checkpoint_every == 0 and it < iterations:
-            ranks = truncate_plan(ranks, checkpoint_dir)
+            cut = truncate_plan(ranks)
+            if it > checkpoint_every:  # an earlier cut fed this one
+                release_cut(prev)
+            ranks = prev = cut
     return ranks
 
 

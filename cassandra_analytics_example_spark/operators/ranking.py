@@ -101,7 +101,6 @@ def roc_auc_exact(
     score_col: str = "score",
     label_col: str = "is_pos",
     num_partitions: int = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact ROC AUC by the Mann-Whitney U rank statistic, tie-corrected,
     in pure integer arithmetic.
@@ -127,16 +126,16 @@ def roc_auc_exact(
     EAGER: the one-row result is materialized and the internal partition
     pin released before returning, so looping callers cannot accumulate
     CacheManager entries (the returned frame reads the checkpointed row,
-    lineage-free).  Default materialization is ``localCheckpoint`` —
-    right on ``local[*]``, but its blocks die with a decommissioned
-    executor and the truncated lineage cannot recompute; on a cluster
-    with dynamic allocation pass ``checkpoint_dir`` for the reliable
-    path (``operators/checkpoints.py:truncate_plan``).
+    lineage-free).  Without a session checkpoint directory that is a
+    ``localCheckpoint`` — right on ``local[*]``, but its blocks die with
+    a decommissioned executor and the truncated lineage cannot
+    recompute; on a cluster with dynamic allocation set
+    ``spark.checkpoint.dir`` for the reliable path
+    (``operators/checkpoints.py:truncate_plan``).
     """
     with pin_scope(scored.sparkSession):
         return truncate_plan(
-            _roc_auc_lazy(scored, score_col, label_col, num_partitions),
-            checkpoint_dir,
+            _roc_auc_lazy(scored, score_col, label_col, num_partitions)
         )
 
 
@@ -196,7 +195,6 @@ def average_precision_exact(
     score_col: str = "score",
     label_col: str = "is_pos",
     num_partitions: int = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact average precision (area under the step PR curve) in pure
     integer arithmetic — the PR-side companion to ``roc_auc_exact``.
@@ -220,15 +218,13 @@ def average_precision_exact(
     guarded so ANSI mode cannot raise on ``P = 0``).
 
     EAGER like ``roc_auc_exact``: one-row result materialized, the
-    internal pin released before returning; ``checkpoint_dir`` selects
-    the executor-loss-safe reliable checkpoint on clusters.
+    internal pin released before returning.
     """
     with pin_scope(scored.sparkSession):
         return truncate_plan(
             _average_precision_lazy(
                 scored, score_col, label_col, num_partitions
-            ),
-            checkpoint_dir,
+            )
         )
 
 

@@ -61,33 +61,20 @@ def _eager_terminal(fn):
     build the lazy plan inside a ``pin_scope``, materialize it
     lineage-free (``truncate_plan``), release the internal partition pins
     before returning — looping callers hold ZERO CacheManager entries
-    between calls.  Adds a ``checkpoint_dir`` keyword: default
-    materialization is ``localCheckpoint`` (right on ``local[*]``; its
-    blocks die with a decommissioned executor), pass a reliable directory
-    on clusters with dynamic allocation.
+    between calls.  ``truncate_plan`` picks the local or reliable cut
+    from the session's checkpoint directory.
 
     The wrapper forwards ``*args``/``**kwargs`` against the wrapped fn's
     OWN signature (round-9 ADVICE: a named first parameter here silently
     renamed every metric's first argument to ``df`` and broke keyword
     calls like ``cusum_changepoint_from_counts(d=...)``); the session for
     ``pin_scope`` is taken from the bound first argument, which is the
-    input DataFrame for every metric in this module.  ``checkpoint_dir``
-    stays a wrapper-level keyword, asserted free at decoration time."""
+    input DataFrame for every metric in this module."""
     sig = inspect.signature(fn)
-    assert "checkpoint_dir" not in sig.parameters, (
-        f"{fn.__name__} has its own checkpoint_dir parameter - the "
-        f"_eager_terminal wrapper would shadow it"
-    )
-    # r10 ADVICE (low): the wrapper takes the DataFrame as the FIRST bound
-    # argument; a future metric whose first parameter has a default (and a
-    # caller omitting it) or is not the DataFrame would make pin_scope/
-    # truncate_plan operate on the wrong object with a confusing
-    # AttributeError far from the call. Pin the contract at decoration
-    # time (first param required-positional) and at call time (it IS a
-    # DataFrame).
-    # raise, not assert: these contract checks must hold under python -O
-    # too (r10 ADVICE low; an assert would vanish and restore the
-    # far-from-call AttributeError it exists to prevent).
+    # The first bound argument must be the DataFrame, or pin_scope/
+    # truncate_plan fail far from the call: check it at decoration time
+    # (required positional) and at call time (a DataFrame). Raise, not
+    # assert, so the checks hold under python -O.
     _first = next(iter(sig.parameters.values()))
     if _first.default is not inspect.Parameter.empty or _first.kind not in (
         inspect.Parameter.POSITIONAL_ONLY,
@@ -99,8 +86,7 @@ def _eager_terminal(fn):
         )
 
     @functools.wraps(fn)
-    def wrapper(*args, checkpoint_dir: str | None = None, **kwargs
-                ) -> DataFrame:
+    def wrapper(*args, **kwargs) -> DataFrame:
         bound = sig.bind(*args, **kwargs)
         df = next(iter(bound.arguments.values()))
         if not isinstance(df, DataFrame):
@@ -110,9 +96,8 @@ def _eager_terminal(fn):
                 f"takes its SparkSession from it"
             )
         with pin_scope(df.sparkSession):
-            return truncate_plan(fn(*args, **kwargs), checkpoint_dir)
+            return truncate_plan(fn(*args, **kwargs))
 
-    wrapper.__wrapped_lazy__ = fn
     return wrapper
 
 

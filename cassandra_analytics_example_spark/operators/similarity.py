@@ -29,6 +29,10 @@ from cassandra_analytics_example_spark.functions.vector import (
     l2_norm,
     sign_bucket,
 )
+from cassandra_analytics_example_spark.operators.checkpoints import (
+    release_cut,
+    truncate_plan,
+)
 from cassandra_analytics_example_spark.session import pin_small
 
 
@@ -241,7 +245,6 @@ def kmeans_centroids(
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
     objective_out: list | None = None,
 ) -> DataFrame:
     """Lloyd's KMeans on DataFrames — the learned-centroid upgrade for
@@ -259,9 +262,8 @@ def kmeans_centroids(
     therefore every subsequent assignment — are bit-identical at any
     parallelism. Fixed iteration count, no convergence action: the loop
     cost is known up front (n_iter x 2 jobs), and a per-iteration plan
-    truncation keeps the lineage flat — ``checkpoint_dir`` selects a
-    reliable checkpoint that survives executor loss on a real cluster,
-    ``None`` the cheaper ``localCheckpoint`` (operators/checkpoints.py).
+    truncation keeps the lineage flat (operators/checkpoints.py picks a
+    local or reliable cut); each round releases the cut it superseded.
     A centroid that loses all members drops out (standard Lloyd's
     behavior; k may shrink).
 
@@ -272,17 +274,13 @@ def kmeans_centroids(
     measurement is one extra aggregate action per iteration, so it is
     opt-in.
     """
-    from cassandra_analytics_example_spark.operators.checkpoints import (
-        truncate_plan,
-    )
-
     cents = emb.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cent_id"),
         F.col(vec_col).cast("array<double>").alias("centv"),
     )
     q = F.round(F.col("x") * F.lit(1e9)).cast("bigint")
     track = objective_out is not None
-    for _ in range(n_iter):
+    for it in range(n_iter):
         assigned = assign_cells(emb, cents, id_col, vec_col, keep_score=track)
         if track:
             objective_out.append(
@@ -308,7 +306,7 @@ def kmeans_centroids(
         means = ex.groupBy("cell", "dim").agg(
             ((F.sum(q).cast("double") / F.count("*")) / F.lit(1e9)).alias("m")
         )
-        cents = (
+        cut = truncate_plan(
             means.groupBy("cell")
             .agg(
                 F.sort_array(
@@ -320,7 +318,9 @@ def kmeans_centroids(
                 F.transform(F.col("s"), lambda p: p["m"]).alias("centv"),
             )
         )
-        cents = truncate_plan(cents, checkpoint_dir)
+        if it:  # round 0 read the input's first k rows, not a cut
+            release_cut(cents)
+        cents = cut
     if track:
         # objective after the FINAL mean update (what the invariant gate
         # compares against the last in-loop measurement)
@@ -339,14 +339,11 @@ def kmeans_cell_profile(
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Summary of the learned KMeans partition: per cell, member count and
     centroid L2 norm (deterministic scalars — the checkable surface of the
     iterative pipeline)."""
-    cents = kmeans_centroids(
-        emb, k, n_iter, id_col, vec_col, checkpoint_dir=checkpoint_dir
-    )
+    cents = kmeans_centroids(emb, k, n_iter, id_col, vec_col)
     assigned = assign_cells(emb, cents, id_col, vec_col)
     counts = assigned.groupBy("cell").agg(F.count("*").alias("n_members"))
     return counts.join(
@@ -364,7 +361,6 @@ def kmeans_invariants(
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Oracle-checkable surface for the iterative KMeans pipeline.
 
@@ -400,7 +396,6 @@ def kmeans_invariants(
         n_iter,
         id_col,
         vec_col,
-        checkpoint_dir=checkpoint_dir,
         objective_out=objective,
     )
     assigned = assign_cells(emb, cents, id_col, vec_col)

@@ -18,16 +18,20 @@ Determinism contract (what makes the oracle hash-match possible):
 
 from __future__ import annotations
 
-import hashlib
 import importlib
-import inspect
 import json
-import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+# The submodule import binds the name ``_fingerprint`` on this package; the
+# ``_fingerprint`` function defined below rebinds it.
+from cassandra_analytics_example_spark.queries._fingerprint import (
+    fingerprint,
+    one_hop_sources as _one_hop_sources,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -64,144 +68,10 @@ def register(
     return deco
 
 
-# package imports inside a query fn body (the house style imports its
-# operators locally): "from cassandra_analytics_example_spark.X import a, b"
-# or the parenthesized multi-line form.
-_PKG_IMPORT_RE = re.compile(
-    r"from\s+(cassandra_analytics_example_spark[.\w]*)\s+import\s+"
-    r"(\([^)]*\)|[^\n(]+)"
-)
-
-
-def _one_hop_sources(src: str, fn: Callable | None = None) -> list[str]:
-    """Source text of every package symbol the query fn uses directly —
-    the one-hop dependency layer.  A query whose own text is unchanged
-    can still change BEHAVIOR when the operator it calls is rewritten
-    (round 9's live case: q142's span operator); hashing the used
-    operator sources makes the evidence fingerprint sensitive to that
-    layer too.  Two resolution paths, both needed (round-9 review):
-
-    * imports written INSIDE the fn body (the common house style) —
-      parsed from ``src`` with inline comments stripped first, so a
-      ``# noqa`` on an import line cannot silently drop a symbol;
-    * package symbols imported at MODULE level and referenced by name in
-      ``src`` (e.g. llm.py's top-level ``minhash_lsh_dedup``) — resolved
-      through ``fn``'s module namespace, so a module-level-imported
-      operator rewrite voids its queries' evidence exactly like a
-      fn-local one.
-
-    Plus ONE helper hop (round-10, closing the r9 verdict's two-hop
-    blind spot): each resolved operator's own source is scanned for
-    package functions/classes bound in the OPERATOR's module namespace
-    (same-module privates like ``_bucket_pairs``, or module-level
-    imports like ``md5_u60``) and their sources are hashed too — a
-    helper rewrite two hops from the query now voids its evidence.  No
-    deeper closure, by measurement: hashing whole operator MODULES was
-    evaluated for round 10 and rejected — the defining-module blast
-    radius on the live registry is 285/322 queries for
-    ``queries._tables``, 36 for ``functions.numeric``, 30 for
-    ``streaming.windows`` (median 5, mean 15.3 across 37 modules), so a
-    one-line edit to a hub module would starve the ~50-slot driver
-    window for rounds.  The helper hop voids only queries whose used
-    operators actually REFERENCE the edited helper.  Deeper layers
-    remain covered by the suite + parity sweep.  Resolution failures are
-    skipped (the fingerprint simply omits that symbol) so load_all never
-    breaks on a moved import.  ``inspect.getsource`` follows
-    ``__wrapped__``, so a decorated operator (e.g. the eager rankstats
-    metrics) contributes its own def site, decorator line included.
-    Output is de-duplicated and sorted for determinism.
-
-    The fingerprint MUST be a pure function of the tree, independent of
-    the process's import state (round-9 second review: ``getattr`` on a
-    package resolves a SUBMODULE import like ``from ...sources import
-    versioned`` only after something imported it, flipping the
-    fingerprint mid-process and breaking the memoized ordering) — so
-    unresolved attributes fall back to ``importlib.import_module`` of
-    the dotted child, which succeeds deterministically; a submodule hop
-    hashes the submodule's whole source.  Comments are stripped from the
-    scanned text BEFORE the import regex runs, so a ``)`` inside an
-    inline comment cannot truncate a parenthesized symbol list."""
-    found: dict[str, str] = {}
-    objs: dict[str, object] = {}
-    scan = re.sub(r"#[^\n]*", "", src)  # strip comments before matching
-    for mod_name, names in _PKG_IMPORT_RE.findall(scan):
-        for sym in names.strip("()").replace("\n", " ").split(","):
-            sym = sym.strip()
-            if not sym or sym == "register":
-                continue
-            sym = sym.split(" as ")[0].strip()
-            try:
-                obj = getattr(importlib.import_module(mod_name), sym, None)
-                if obj is None:  # submodule not yet imported — resolve it
-                    obj = importlib.import_module(f"{mod_name}.{sym}")
-                found[f"{mod_name}.{sym}"] = inspect.getsource(obj)
-                objs[f"{mod_name}.{sym}"] = obj
-            except Exception:  # moved/renamed/C-level — omit, don't break
-                continue
-    if fn is not None:
-        mod = inspect.getmodule(fn)
-        for name, obj in list(vars(mod).items() if mod else []):
-            if name == "register" or obj is fn:
-                continue
-            obj_mod = getattr(obj, "__module__", "") or ""
-            if not obj_mod.startswith("cassandra_analytics_example_spark"):
-                continue
-            if not (inspect.isfunction(obj) or inspect.isclass(obj)):
-                continue
-            if not re.search(rf"\b{re.escape(name)}\b", src):
-                continue
-            try:
-                found[f"{obj_mod}.{name}"] = inspect.getsource(obj)
-                objs[f"{obj_mod}.{name}"] = obj
-            except Exception:
-                continue
-    # helper hop: package helpers referenced by the used operators' own
-    # source (see docstring — closes the two-hop rewrite blind spot
-    # without module-level blast radius)
-    for obj in list(objs.values()):
-        if not (inspect.isfunction(obj) or inspect.isclass(obj)):
-            continue
-        try:
-            osrc = inspect.getsource(obj)
-            omod = inspect.getmodule(obj)
-        except Exception:
-            continue
-        oscan = re.sub(r"#[^\n]*", "", osrc)
-        for name, hobj in list(vars(omod).items() if omod else []):
-            hmod = getattr(hobj, "__module__", "") or ""
-            if not hmod.startswith("cassandra_analytics_example_spark"):
-                continue
-            if not (inspect.isfunction(hobj) or inspect.isclass(hobj)):
-                continue
-            if hobj is obj or f"{hmod}.{name}" in found:
-                continue
-            if not re.search(rf"\b{re.escape(name)}\b", oscan):
-                continue
-            try:
-                found[f"{hmod}.{name}"] = inspect.getsource(hobj)
-            except Exception:
-                continue
-    return [found[k] for k in sorted(found)]
-
-
 def _fingerprint(qd: QueryDef) -> str:
-    """Content fingerprint of a query's checkable surface: the function's
-    source text (which, for ``@register``-decorated defs, includes the
-    decorator call and therefore the oracle SQL), the oracle string
-    explicitly, and the one-hop operator layer (``_one_hop_sources``).
-    Driver evidence is evidence FOR this fingerprint — a row recorded
-    against different source text proves nothing about the current code,
-    so the evidence ordering voids it (see ``_effective_round``).
-    Conservative by design: a comment-only edit also re-queues the query,
-    which only costs one re-check.  MUST stay in lockstep with the
-    inlined extractor in ``tools/stamp_evidence.py``, which replays this
-    formula inside historical trees."""
-    try:
-        src = inspect.getsource(qd.fn)
-    except (OSError, TypeError):  # source unavailable (REPL, C callable)
-        src = qd.fn.__qualname__
-    parts = [src, qd.oracle or ""] + _one_hop_sources(src, qd.fn)
-    return hashlib.sha256("\x00".join(parts).encode()).hexdigest()
+    """Evidence fingerprint of ``qd`` (formula in ``queries/_fingerprint.py``,
+    which ``tools/stamp_evidence.py`` also runs inside historical trees)."""
+    return fingerprint(qd.fn, qd.oracle)
 
 
 def _effective_round(

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.operators.quantiles import (
     group_quantiles_exact,
 )
@@ -832,7 +833,7 @@ def q175_zonemap_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cents").alias("max_c"),
         F.max("ts_us").alias("day_max_ts"),
     )
-    stats = stats.localCheckpoint(eager=True)
+    stats = truncate_plan(stats)
     hw = stats.agg(F.max("day_max_ts").alias("hwm"))
     p1 = stats.select(
         F.lit("cents>=20000").alias("predicate"), "day", "n",

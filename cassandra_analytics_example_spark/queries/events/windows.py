@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.functions.numeric import money_sum
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.operators.relational import (
     asof_join,
     lww_latest,
@@ -953,21 +954,21 @@ GROUP BY event_type
     "DIRECTORIES before the scan (plan-gated); at 100 TB this is the "
     "difference between reading 2/5 and 5/5 of the table; the useStats "
     "override is scoped to this execution and the result materializes "
-    "via eager localCheckpoint (no driver collect)",
+    "via an eager lineage cut (no driver collect)",
     tags=("events", "join", "scale"),
 )
 def q101_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scope the optimizer override to THIS query's execution and restore it
     # (r3 advice: the conf previously leaked into every later query on the
     # shared session). The pruning happens at action time, so the plan is
-    # optimized + materialized inside the scope by an EAGER localCheckpoint
-    # — the result stays a distributed DataFrame over executor blocks, not
-    # a driver-side collect()+re-parallelize (r4 advice).
+    # optimized + materialized inside the scope by an EAGER lineage cut
+    # (truncate_plan) — the result stays a distributed DataFrame, not a
+    # driver-side collect()+re-parallelize (r4 advice).
     key = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "false")
     try:
-        return dpp_join_plan(spark, sf_dir).localCheckpoint(eager=True)
+        return truncate_plan(dpp_join_plan(spark, sf_dir))
     finally:
         if prev is None:
             spark.conf.unset(key)

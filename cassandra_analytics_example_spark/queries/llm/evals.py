@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.operators.dedup import (
     simhash_near_dup_pairs_auto,
     connected_components,
@@ -93,7 +94,7 @@ def q180_rendezvous_shard_map(
             F.element_at(arr, 9) > F.array_max(F.slice(arr, 1, 8))
         ).alias("mover"),
     )
-    k = k.localCheckpoint(eager=True)
+    k = truncate_plan(k)
     loads = k.groupBy("winner8").agg(F.count(F.lit(1)).alias("n"))
     bal = loads.agg(
         F.max("n").alias("max_n"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.operators.dedup import minhash_lsh_dedup
 from cassandra_analytics_example_spark.operators.similarity import (
     brute_force_topk,
@@ -1127,9 +1128,7 @@ def q138_ivf_partitioned_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "false")
     try:
-        return ivf_partitioned_plan(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
+        return truncate_plan(ivf_partitioned_plan(spark, sf_dir))
     finally:
         if prev is None:
             spark.conf.unset(key)

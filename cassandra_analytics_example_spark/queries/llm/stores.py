@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from cassandra_analytics_example_spark.operators.similarity import (
     brute_force_topk,
 )
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
 
@@ -506,7 +507,7 @@ def q166_contingency_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_obs")
     )
-    cells = cells.localCheckpoint(eager=True)
+    cells = truncate_plan(cells)
     r = cells.groupBy("lang").agg(F.sum("n_obs").alias("n_lang"))
     c = cells.groupBy("source").agg(F.sum("n_obs").alias("n_source"))
     t = cells.agg(F.sum("n_obs").alias("n_total"))
@@ -938,7 +939,7 @@ def q176_fair_share_allocation(
             .alias("demand")
         )
     )
-    d = d.localCheckpoint(eager=True)
+    d = truncate_plan(d)
     tot = d.agg(
         F.count(F.lit(1)).alias("n_langs"),
         F.sum("demand").alias("total"),
@@ -1061,12 +1062,8 @@ def q177_index_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("cf"),
         )
 
-    base = stats(docs.where(F.expr("doc_id % 10 != 0"))).localCheckpoint(
-        eager=True
-    )
-    delta = stats(docs.where(F.expr("doc_id % 10 = 0"))).localCheckpoint(
-        eager=True
-    )
+    base = truncate_plan(stats(docs.where(F.expr("doc_id % 10 != 0"))))
+    delta = truncate_plan(stats(docs.where(F.expr("doc_id % 10 = 0"))))
     full = stats(docs)
 
     b = base.select(

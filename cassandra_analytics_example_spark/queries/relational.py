@@ -17,6 +17,7 @@ from cassandra_analytics_example_spark.functions.numeric import (
     money_sum,
     revenue_expr,
 )
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 from cassandra_analytics_example_spark.operators.quantiles import (
     group_quantiles_exact,
 )
@@ -2370,7 +2371,7 @@ def q179_bloom_fpr_calibration(
         .select((F.col("c_custkey") + F.lit(1_000_000_000_000)).alias("k"))
         .distinct()
     )
-    bits = bloom_build(members, "k", m=m, k=k).localCheckpoint(eager=True)
+    bits = truncate_plan(bloom_build(members, "k", m=m, k=k))
     probed = bloom_probe(probes, "k", bits, m=m, k=k)
     nm = members.agg(F.count(F.lit(1)).alias("n_members"))
     nb = bits.agg(F.count(F.lit(1)).alias("bits_set"))
@@ -2467,7 +2468,7 @@ def q181_market_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("rev").alias("revenue"))
     )
-    rev = rev.localCheckpoint(eager=True)
+    rev = truncate_plan(rev)
     tot = rev.groupBy("yr").agg(F.sum("revenue").alias("yr_total"))
     w_rank = Window.partitionBy("yr").orderBy(
         F.col("revenue").desc(), F.col("nation")

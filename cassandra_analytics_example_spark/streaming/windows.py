@@ -30,7 +30,8 @@ a query running. ``_fold_store`` is the merge-on-read store shape: it
 appends ``fold(batch)`` to a parquet store per microbatch (offsets
 checkpointed beside it) and returns the un-merged partials, to which
 each store applies its own merge. Stores that count their epochs (s09,
-s14, s21) write their own sinks and call ``_drain`` directly.
+s14, s21) write their own sinks and call ``_drain`` directly. Every store
+directory comes from ``_temp_root``, so ``spark.stop()`` removes it.
 """
 
 from __future__ import annotations
@@ -42,9 +43,12 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
 
 EVENTS_STREAM_SCHEMA = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, "
@@ -117,6 +121,12 @@ def _drain(writer: DataStreamWriter) -> StreamingQuery:
     return q
 
 
+def _temp_root(prefix: str) -> str:
+    """A fresh store directory under the context's file root, which Spark
+    deletes on stop: it lives as long as the session whose frames read it."""
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
+
+
 def _fold_store(
     stream: DataFrame, fold: Callable[[DataFrame], DataFrame], prefix: str
 ) -> DataFrame:
@@ -125,7 +135,7 @@ def _fold_store(
     ``prefix``, with the source offsets checkpointed beside it. Returns
     the appended partials UN-merged; the caller's merge-on-read (sum,
     max, argmin, top-k ...) publishes the store."""
-    root = tempfile.mkdtemp(prefix=prefix)
+    root = _temp_root(prefix)
     target = os.path.join(root, "store")
 
     def append(batch: DataFrame, epoch_id: int) -> None:
@@ -378,8 +388,8 @@ def run_stream_dedup_to_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams append immediately. Returns the sink read back, re-aggregated
     to match s03's output shape. On a cluster the paths become object-store
     URIs; the checkpoint makes restarts resume, not recompute."""
-    out = tempfile.mkdtemp(prefix="spark_graft_stream_sink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_stream_ckpt_")
+    out = _temp_root("spark_graft_stream_sink_")
+    ckpt = _temp_root("spark_graft_stream_ckpt_")
     deduped = dedup_within_watermark(stream_events(spark, sf_dir)).select(
         "event_id", "user_id", "event_type"
     )
@@ -567,7 +577,7 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joins to zero new rows, which the test exercises by re-running
     the stream over the same input.
     """
-    out = tempfile.mkdtemp(prefix="upsert_sink_")
+    out = _temp_root("upsert_sink_")
     target = os.path.join(out, "target")
     ck = os.path.join(out, "ck")
 
@@ -813,7 +823,7 @@ def run_jsonl_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    out = tempfile.mkdtemp(prefix="s13_jsonl_")
+    out = _temp_root("s13_jsonl_")
     write_jsonl(docs, out)
     with open(os.path.join(out, "part-corrupt.json"), "w") as f:
         f.write("this line is not json\n{broken\n")
@@ -889,7 +899,7 @@ def late_data_audit(
 
     Returns per-event-type accounting: ``n_ontime`` / ``n_late`` counts.
     """
-    root = tempfile.mkdtemp(prefix="s14_late_audit_")
+    root = _temp_root("s14_late_audit_")
     staged = os.path.join(root, "staged")
     os.makedirs(staged, exist_ok=True)
     _split, auto_lateness = stage_out_of_order_events(spark, sf_dir, staged)
@@ -926,7 +936,7 @@ def late_data_audit(
             if wm is not None
             else F.lit(False)
         )
-        tagged = batch.withColumn("__late", late).localCheckpoint()
+        tagged = truncate_plan(batch.withColumn("__late", late))
         tagged.where(F.col("__late")).drop("__late").write.mode(
             "append"
         ).parquet(late_dir)
@@ -1233,7 +1243,7 @@ def run_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch twin: q61 (single-file source = one microbatch, so the
     stream's extra within-stream growth is a no-op on the fixture and
     the accepted set is BIT-IDENTICAL to the batch anti-join)."""
-    out = tempfile.mkdtemp(prefix="stream_inc_dedup_")
+    out = _temp_root("stream_inc_dedup_")
     inv = os.path.join(out, "inventory")
     acc = os.path.join(out, "accepted")
     ck = os.path.join(out, "ck")
@@ -1372,12 +1382,11 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.floor(F.col("value") / 10).cast("bigint"), F.lit(0)),
         F.lit(9),
     )
-    base_h = (
+    base_h = truncate_plan(
         bb.where(F.col("ts_us") < mid)
         .select("event_type", bucket.alias("bucket"))
         .groupBy("event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=True)
     )
     live_stream = (
         stream_events(spark, sf_dir)
@@ -1665,11 +1674,10 @@ def run_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = bb.agg(
         F.expr("(min(ts_us) + max(ts_us)) div 2").alias("m")
     ).first()["m"]
-    base_h = (
+    base_h = truncate_plan(
         bb.where(F.col("ts_us") < mid)
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("na"))
-        .localCheckpoint(eager=True)
     )
     live_stream = (
         stream_events(spark, sf_dir)

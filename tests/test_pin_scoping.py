@@ -403,10 +403,10 @@ _PINNED_OPERATORS = {
 
 def _cached_rdd_ids(spark) -> set:
     """Persistent RDDs that hold a cache. The local checkpoints of
-    ``truncate_plan`` (``connected_components``' per-round lineage cuts)
-    are persistent RDDs too, but they are not caches and no registry
-    owns them: Spark's context cleaner drops their blocks once the frame
-    is garbage-collected."""
+    ``truncate_plan`` (the lineage cut an iterative operator such as
+    ``connected_components`` returns) are persistent RDDs too, but they
+    are not caches and no registry owns them: Spark's context cleaner
+    drops their blocks once the frame is garbage-collected."""
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     return {
         i for i in rdds.keySet() if not rdds.get(i).rdd().isLocallyCheckpointed()

@@ -4,6 +4,8 @@ contamination, and the attribution interval join — behavior + plan shape.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,9 @@ from cassandra_analytics_example_spark.operators.contamination import (
 )
 from cassandra_analytics_example_spark.operators.sampling import hash_split
 from cassandra_analytics_example_spark.queries import load_all
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -354,65 +359,156 @@ def test_dedup_drop_audit_all_green(spark, sf_dir):
         assert rows["candidates_bounded_by_kept_pairs"].n == 0
 
 
-def test_iterative_ops_reliable_checkpoint(spark, sf_dir, tmp_path):
-    """checkpoint_dir= selects a reliable checkpoint (survives executor
-    loss on a real cluster) and must produce results identical to the
-    localCheckpoint default — for both iterative operators."""
+# The lineage-cutting operators on fixed inputs, as JSON-able values. Run
+# in-process (local cuts) and in a child session whose context has a
+# checkpoint directory (reliable cuts).
+_CUT_RESULTS = """
+def cut_results(spark, sf_dir):
+    from pyspark.sql import functions as F
+
     from cassandra_analytics_example_spark.operators.dedup import (
         connected_components,
+    )
+    from cassandra_analytics_example_spark.operators.ranking import (
+        roc_auc_exact,
     )
     from cassandra_analytics_example_spark.operators.similarity import (
         kmeans_centroids,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    local = kmeans_centroids(emb, k=4, n_iter=2)
-    reliable = kmeans_centroids(
-        emb, k=4, n_iter=2, checkpoint_dir=str(tmp_path / "ck-km")
-    )
-    assert sorted(
-        (r.cent_id, tuple(r.centv)) for r in local.collect()
-    ) == sorted((r.cent_id, tuple(r.centv)) for r in reliable.collect())
-
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], "id_a long, id_b long"
     )
-    want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20), (22, 20)}
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            pairs, checkpoint_dir=str(tmp_path / "ck-cc")
-        ).collect()
+    scored = spark.range(2000).select(
+        (F.col("id") * 7919 % 101).alias("score"),
+        (F.col("id") % 3 == 0).cast("int").alias("is_pos"),
+    )
+    return {
+        "kmeans": sorted(
+            [r.cent_id, list(r.centv)]
+            for r in kmeans_centroids(emb, k=4, n_iter=2).collect()
+        ),
+        "cc": sorted(
+            [r.id, r.cluster_id] for r in connected_components(pairs).collect()
+        ),
+        "auc": [list(r) for r in roc_auc_exact(scored).collect()],
     }
-    assert got == want
-    # checkpoint files actually landed in the reliable dir
-    import os
+"""
 
-    assert any(os.scandir(tmp_path / "ck-cc"))
+_RELIABLE_SCRIPT = f"""
+import json, os, sys
+sys.path.insert(0, {ROOT!r})
+from cassandra_analytics_example_spark.session import get_spark
+{_CUT_RESULTS}
+sf_dir, ck_dir = sys.argv[1:3]
+spark = get_spark(
+    app_name="reliable-cuts", extra_conf={{"spark.checkpoint.dir": ck_dir}}
+)
+out = cut_results(spark, sf_dir)
+out["subdirs"] = sorted(os.listdir(ck_dir))
+out["files"] = sum(len(f) for _, _, f in os.walk(ck_dir))
+print(json.dumps(out))
+spark.stop()
+"""
 
 
-def test_truncate_plan_reuses_checkpoint_subdir(spark, tmp_path):
-    """Repeated truncations with the SAME base dir must reuse one
-    setCheckpointDir subdir (each setCheckpointDir call mints a fresh UUID
-    subdir — per-iteration calls leak one per round), while a DIFFERENT
-    base dir must actually move the checkpoint there (r4 advice: no
-    unrestored session-global clobber between operators)."""
-    import os
+def test_iterative_ops_reliable_checkpoint(spark, sf_dir, tmp_path):
+    """With a checkpoint directory on the context (``spark.checkpoint.dir``)
+    every lineage cut is a reliable checkpoint (survives executor loss on
+    a real cluster) and must produce results identical to the local cuts
+    of a session without one. A context's checkpoint directory cannot be
+    unset, so the reliable side runs in a child process rather than
+    switching the shared session for every later test."""
+    import json
+    import subprocess
+    import sys
+    import uuid
 
-    from cassandra_analytics_example_spark.operators.checkpoints import (
-        truncate_plan,
+    ck_dir = tmp_path / "ck"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_SCRIPT, sf_dir, str(ck_dir)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    reliable = json.loads(out.stdout.strip().splitlines()[-1])
+
+    ns: dict = {}
+    exec(_CUT_RESULTS, ns)
+    local = ns["cut_results"](spark, sf_dir)
+    assert reliable["kmeans"] == local["kmeans"]
+    want = [[1, 1], [2, 1], [3, 1], [10, 10], [11, 10], [20, 20], [21, 20],
+            [22, 20]]
+    assert reliable["cc"] == local["cc"] == want
+    assert reliable["auc"] == local["auc"]
+    # checkpoint files actually landed in the directory, and the many
+    # cuts above (kmeans rounds, cc edges + rounds, the AUC row) shared
+    # the one subdirectory the context minted at start
+    assert reliable["files"] > 0
+    assert len(reliable["subdirs"]) == 1
+    uuid.UUID(reliable["subdirs"][0])
+
+
+def _local_cut_ids(spark) -> set:
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        i for i in rdds.keySet() if rdds.get(i).rdd().isLocallyCheckpointed()
+    }
+
+
+def _cc_chain(spark, sf_dir):
+    from cassandra_analytics_example_spark.operators.dedup import (
+        connected_components,
     )
 
-    df = spark.range(10)
-    base_a = str(tmp_path / "ck-a")
-    base_b = str(tmp_path / "ck-b")
-    truncate_plan(df, base_a)
-    truncate_plan(df, base_a)
-    assert len(list(os.scandir(base_a))) == 1, (
-        "same-dir truncations minted extra checkpoint subdirs"
+    stats: dict = {}
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
-    truncate_plan(df, base_b)
-    assert any(os.scandir(base_b)), "checkpoint did not follow the new dir"
+    out = connected_components(pairs, stats=stats)
+    assert stats["rounds"] >= 3
+    return out
+
+
+def _kmeans(spark, sf_dir):
+    from cassandra_analytics_example_spark.operators.similarity import (
+        kmeans_centroids,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return kmeans_centroids(emb, k=4, n_iter=3)
+
+
+def _pagerank(spark, sf_dir):
+    from cassandra_analytics_example_spark.operators.graph import (
+        pagerank_integer,
+    )
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(6) for b in range(6) if a != b], ["src", "dst"]
+    )
+    return pagerank_integer(edges, iterations=7, checkpoint_every=2)
+
+
+@pytest.mark.parametrize(
+    "build", [_cc_chain, _kmeans, _pagerank], ids=lambda f: f.__name__[1:]
+)
+def test_iterative_ops_release_superseded_cuts(spark, sf_dir, build):
+    """An iterative operator cuts lineage every round (or every
+    ``checkpoint_every`` rounds); each round's cut is released once the
+    next one is materialized, so after the call only the returned
+    frame's cut is left (no checkpoint directory on the test session, so
+    the cuts are local checkpoints)."""
+    before = _local_cut_ids(spark)
+    out = build(spark, sf_dir)
+    assert len(_local_cut_ids(spark) - before) == 1
+    assert out.collect()
 
 
 def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):

@@ -171,3 +171,35 @@ def test_library_persists_go_through_the_pin_registry():
         "raw persist/cache outside the pin registry — use "
         f"session.pin_small: {found}"
     )
+
+
+_RAW_CUT = re.compile(r"\.localCheckpoint\(|\.checkpoint\(|setCheckpointDir")
+
+
+def test_lineage_cuts_go_through_truncate_plan():
+    """Every lineage cut in the package must go through
+    ``checkpoints.truncate_plan``, the one place that picks a local or a
+    reliable cut from the session's checkpoint directory; a raw
+    ``localCheckpoint`` ignores a cluster's reliable setting, and a
+    ``setCheckpointDir`` call changes it for the whole session."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "cassandra_analytics_example_spark"
+    )
+    found = []
+    scanned = 0
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "operators/checkpoints.py":
+            continue
+        scanned += 1
+        for lineno, line in enumerate(path.read_text().splitlines(), start=1):
+            m = _RAW_CUT.search(line)
+            hash_pos = line.find("#")
+            if m and not 0 <= hash_pos < m.start():
+                found.append(f"{path.relative_to(pkg)}:{lineno}")
+    assert scanned > 40, f"scanned only {scanned} modules under {pkg}"
+    assert not found, (
+        "raw lineage cut outside operators/checkpoints.py — use "
+        f"truncate_plan: {found}"
+    )

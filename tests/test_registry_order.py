@@ -274,13 +274,12 @@ def test_fingerprint_is_import_state_independent():
 
 
 def test_stamp_extract_script_matches_live_fingerprint():
-    """Round-9 ADVICE: ``tools/stamp_evidence._EXTRACT`` inlines the
-    fingerprint formula (it must run inside historical trees that predate
-    ``queries._fingerprint``) with a 'MUST stay in lockstep' comment but
-    no enforcement.  Run the extractor against the CURRENT tree and assert
-    its hash equals ``_fingerprint(qd)`` for EVERY registered query —
-    silent drift would wrongly void evidence (cheap) or wrongly keep
-    stale evidence current (defeats the staleness gate)."""
+    """``tools/stamp_evidence.py`` runs ``queries/_fingerprint.py`` by
+    path (``python -I``) inside historical trees. Run it that way against
+    the CURRENT tree and assert its hash equals ``_fingerprint(qd)`` for
+    EVERY registered query — a script path that resolved imports
+    differently from the package would wrongly void evidence (cheap) or
+    wrongly keep stale evidence current (defeats the staleness gate)."""
     import json
     import subprocess
     import sys
@@ -295,12 +294,12 @@ def test_stamp_extract_script_matches_live_fingerprint():
     root = Path(__file__).resolve().parents[1]
     sys.path.insert(0, str(root / "tools"))
     try:
-        from stamp_evidence import _EXTRACT
+        from stamp_evidence import _FINGERPRINT_SCRIPT
     finally:
         sys.path.pop(0)
 
     out = subprocess.run(
-        [sys.executable, "-I", "-c", _EXTRACT, str(root)],
+        [sys.executable, "-I", str(_FINGERPRINT_SCRIPT), str(root)],
         cwd=root, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-800:]

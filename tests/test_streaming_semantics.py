@@ -13,6 +13,7 @@ import os
 import time
 
 import pandas as pd
+import pytest
 
 from cassandra_analytics_example_spark.streaming.windows import (
     EVENTS_STREAM_SCHEMA,
@@ -1125,6 +1126,26 @@ def test_drain_reraises_fold_error_and_stops_the_stream(spark, tmp_path):
     with pytest.raises(Exception, match="fold failed on purpose"):
         _fold_store(stream, fold, "drain_raise_")
     assert spark.streams.active == []
+
+
+@pytest.mark.parametrize(
+    "store", ["run_stream_hll", "run_stream_dedup_to_files"]
+)
+def test_store_files_live_under_the_context_file_root(spark, sf_dir, store):
+    """A store's temp root (its sink, and the stream checkpoint beside
+    it) sits under ``SparkFiles.getRootDirectory()``, which Spark deletes
+    when the context stops, so stores leave no directories behind the
+    session that read them."""
+    from pyspark import SparkFiles
+
+    from cassandra_analytics_example_spark.streaming import windows as W
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    files = getattr(W, store)(spark, sf_dir).inputFiles()
+    assert files
+    for f in files:
+        path = os.path.realpath(f.removeprefix("file:"))
+        assert os.path.commonpath([root, path]) == root, (f, root)
 
 
 def test_memory_sink_store_drops_its_table(spark, sf_dir):

@@ -2,7 +2,7 @@
 
 The driver's CORRECTNESS_r{N}.json rows are evidence for the code that was
 CHECKED, not for whatever the tree holds now.  This tool reconstructs, for
-each query, the fingerprint (``queries._fingerprint``: sha256 over fn
+each query, the fingerprint (``queries/_fingerprint.py``: sha256 over fn
 source, oracle text, and the one-hop package-import sources — fn-local AND
 module-level-referenced symbols — "\x00"-joined) of the query AS OF the
 tree its latest green driver row ran against, and writes the map to
@@ -14,8 +14,9 @@ Tree reconstruction: the driver commits ``round N: verdict/advice/
 correctness/bench`` immediately after running the round-N checks, so the
 PARENT of that commit is the exact tree round N's rows were produced from.
 Each needed round is materialized once as a read-only git worktree under
-``.scratch/`` (gitignored) and its registry imported in an isolated
-subprocess — module import only, no SparkSession.
+``.scratch/`` (gitignored), and the current tree's ``_fingerprint.py``
+runs against it by path in an isolated subprocess — module import only, no
+SparkSession.
 
 Run at ROUND START, right after the new CORRECTNESS artifact lands (the
 round boundary commit must exist).  Idempotent; safe to re-run.
@@ -34,90 +35,12 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 
-# Runs inside each historical worktree: prints {name: fingerprint} for every
-# registered query.  The fingerprint formula MUST stay in lockstep with
-# queries._fingerprint (sha256 over fn source, oracle, and the one-hop
-# package-import sources, "\x00"-joined) — historical trees predate that
-# helper, so it is inlined here and resolves imports against the
-# HISTORICAL tree's modules.
-_EXTRACT = r"""
-import hashlib, importlib, inspect, json, re, sys
-sys.path.insert(0, sys.argv[1])
-q = importlib.import_module("cassandra_analytics_example_spark.queries")
-for mod in q._MODULES:
-    importlib.import_module(mod)
-PKG_IMPORT_RE = re.compile(
-    r"from\s+(cassandra_analytics_example_spark[.\w]*)\s+import\s+"
-    r"(\([^)]*\)|[^\n(]+)"
+# Prints {name: fingerprint} for every query a tree registers, resolving
+# imports against THAT tree's modules. It is run by path from the current
+# tree, because historical trees predate the module.
+_FINGERPRINT_SCRIPT = (
+    ROOT / "cassandra_analytics_example_spark" / "queries" / "_fingerprint.py"
 )
-def one_hop(src, fn):
-    found = {}
-    objs = {}
-    scan = re.sub(r"#[^\n]*", "", src)
-    for mod_name, names in PKG_IMPORT_RE.findall(scan):
-        for sym in names.strip("()").replace("\n", " ").split(","):
-            sym = sym.strip()
-            if not sym or sym == "register":
-                continue
-            sym = sym.split(" as ")[0].strip()
-            try:
-                obj = getattr(importlib.import_module(mod_name), sym, None)
-                if obj is None:
-                    obj = importlib.import_module(mod_name + "." + sym)
-                found[mod_name + "." + sym] = inspect.getsource(obj)
-                objs[mod_name + "." + sym] = obj
-            except Exception:
-                continue
-    mod = inspect.getmodule(fn)
-    for name, obj in list(vars(mod).items() if mod else []):
-        if name == "register" or obj is fn:
-            continue
-        obj_mod = getattr(obj, "__module__", "") or ""
-        if not obj_mod.startswith("cassandra_analytics_example_spark"):
-            continue
-        if not (inspect.isfunction(obj) or inspect.isclass(obj)):
-            continue
-        if not re.search(r"\b" + re.escape(name) + r"\b", src):
-            continue
-        try:
-            found[obj_mod + "." + name] = inspect.getsource(obj)
-            objs[obj_mod + "." + name] = obj
-        except Exception:
-            continue
-    for obj in list(objs.values()):
-        if not (inspect.isfunction(obj) or inspect.isclass(obj)):
-            continue
-        try:
-            osrc = inspect.getsource(obj)
-            omod = inspect.getmodule(obj)
-        except Exception:
-            continue
-        oscan = re.sub(r"#[^\n]*", "", osrc)
-        for name, hobj in list(vars(omod).items() if omod else []):
-            hmod = getattr(hobj, "__module__", "") or ""
-            if not hmod.startswith("cassandra_analytics_example_spark"):
-                continue
-            if not (inspect.isfunction(hobj) or inspect.isclass(hobj)):
-                continue
-            if hobj is obj or (hmod + "." + name) in found:
-                continue
-            if not re.search(r"\b" + re.escape(name) + r"\b", oscan):
-                continue
-            try:
-                found[hmod + "." + name] = inspect.getsource(hobj)
-            except Exception:
-                continue
-    return [found[k] for k in sorted(found)]
-out = {}
-for name, qd in q.REGISTRY.items():
-    try:
-        src = inspect.getsource(qd.fn)
-    except (OSError, TypeError):
-        src = qd.fn.__qualname__
-    parts = [src, qd.oracle or ""] + one_hop(src, qd.fn)
-    out[name] = hashlib.sha256("\x00".join(parts).encode()).hexdigest()
-print(json.dumps(out))
-"""
 
 
 def _git(*args: str) -> str:
@@ -188,7 +111,7 @@ def _fingerprints_at(sha: str, tag: str) -> dict[str, str]:
     _git("worktree", "add", "--detach", str(wt), sha)
     try:
         proc = subprocess.run(
-            [sys.executable, "-I", "-c", _EXTRACT, str(wt)],
+            [sys.executable, "-I", str(_FINGERPRINT_SCRIPT), str(wt)],
             cwd=wt, check=True, capture_output=True, text=True,
         )
         return json.loads(proc.stdout)
