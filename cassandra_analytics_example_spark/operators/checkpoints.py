@@ -40,10 +40,17 @@ def truncate_plan(df: DataFrame) -> DataFrame:
 
 
 def release_cut(cut: DataFrame) -> None:
-    """Free a local cut's blocks once the round that superseded it is
-    materialized; the frame is unreadable afterwards. (A reliable cut's
-    files stay unless ``spark.cleaner.referenceTracking.cleanCheckpoints``.)"""
-    cut._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    """Free a cut once the round that superseded it is materialized: a
+    local cut's blocks, or a reliable cut's checkpoint files (deleted
+    through their Hadoop ``FileSystem``). The frame is unreadable
+    afterwards."""
+    rdd = cut._jdf.queryExecution().analyzed().rdd()
+    rdd.unpersist(False)
+    ck = rdd.getCheckpointFile()
+    if ck.isDefined():
+        sc = cut.sparkSession.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(ck.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
 #: Whether ``pin_partition_ids`` fills each pin with an eager ``count()``.

@@ -15,6 +15,7 @@ from cassandra_analytics_example_spark.operators.relational import (
 )
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
+from cassandra_analytics_example_spark.session import temp_root
 
 
 # --------------------------------------------------------------------------
@@ -882,7 +883,6 @@ _DPP_ROOTS: dict[tuple[str, str], str] = {}
 
 def _dpp_tables(spark: SparkSession, sf_dir: str) -> str:
     import os
-    import tempfile
 
     from cassandra_analytics_example_spark.operators.layout import (
         write_partitioned,
@@ -893,7 +893,7 @@ def _dpp_tables(spark: SparkSession, sf_dir: str) -> str:
     if root is not None and os.path.isdir(root):
         return root
     ev = table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dpp-")
+    root = temp_root("dpp-")
     write_partitioned(
         ev.select("event_id", "value", "event_type"), root, ["event_type"]
     )

@@ -16,6 +16,7 @@ from cassandra_analytics_example_spark.operators.dedup import (
 )
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
+from cassandra_analytics_example_spark.session import temp_root
 
 from cassandra_analytics_example_spark.queries.llm.corpus import (  # noqa: E402
     _MINHASH_BANDS,
@@ -814,10 +815,9 @@ GROUP BY 1
     tags=("llm", "sources", "governance"),
 )
 def q196_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
 
     docs = table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="schema_evo_")
+    out = temp_root("schema_evo_")
     old = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     new = (
         docs.where(F.col("doc_id") % 2 == 1)

@@ -14,6 +14,7 @@ from cassandra_analytics_example_spark.operators.similarity import (
 )
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
+from cassandra_analytics_example_spark.session import temp_root
 
 from cassandra_analytics_example_spark.queries.llm.corpus import (  # noqa: E402
     _MINHASH_BANDS,
@@ -236,7 +237,6 @@ FROM documents
     tags=("llm", "sources"),
 )
 def q123_jsonl_ingest_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
 
     from cassandra_analytics_example_spark.sources.files import (
         read_jsonl,
@@ -245,7 +245,7 @@ def q123_jsonl_ingest_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="jsonl_ingest_")
+    out = temp_root("jsonl_ingest_")
     write_jsonl(docs, out)
     back = read_jsonl(
         spark,
@@ -390,7 +390,6 @@ FROM documents
     tags=("llm", "sources"),
 )
 def q128_orc_ingest_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
 
     from cassandra_analytics_example_spark.sources.files import (
         read_orc,
@@ -398,7 +397,7 @@ def q128_orc_ingest_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="orc_ingest_")
+    out = temp_root("orc_ingest_")
     write_orc(docs, out)
     back = read_orc(spark, out)
     return back.select(
@@ -1027,7 +1026,6 @@ _IVF_ROOTS: dict[tuple[str, str], str] = {}
 
 def _ivf_index_root(spark: SparkSession, sf_dir: str) -> str:
     import os
-    import tempfile
 
     from cassandra_analytics_example_spark.operators.similarity import (
         assign_cells,
@@ -1042,7 +1040,7 @@ def _ivf_index_root(spark: SparkSession, sf_dir: str) -> str:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("centv")
     )
     cells = assign_cells(emb, cents)
-    root = tempfile.mkdtemp(prefix="ivf_index-")
+    root = temp_root("ivf_index-")
     cells.select("vec_id", "embedding", "cell").write.partitionBy(
         "cell"
     ).mode("overwrite").parquet(root)
@@ -1175,7 +1173,6 @@ SELECT query_id, neighbor_id, cosine, rnk FROM (
 def q141_ivf_incremental_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import tempfile
 
     from cassandra_analytics_example_spark.functions.vector import (
         cosine_similarity,
@@ -1190,7 +1187,7 @@ def q141_ivf_incremental_maintenance(
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("centv")
     )
-    root = tempfile.mkdtemp(prefix="ivf_incr-")
+    root = temp_root("ivf_incr-")
     base = assign_cells(emb.filter(F.col("vec_id") < cut), cents)
     base.select("vec_id", "embedding", "cell").write.partitionBy(
         "cell"

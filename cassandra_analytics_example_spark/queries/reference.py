@@ -9,7 +9,6 @@ proving not just counts but content parity across the write/read/copy chain.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,6 +17,7 @@ from cassandra_analytics_example_spark.config import JobConfiguration
 from cassandra_analytics_example_spark.datagen import gen_dataset_deterministic
 from cassandra_analytics_example_spark.plans.jobs import copy_table
 from cassandra_analytics_example_spark.queries import register
+from cassandra_analytics_example_spark.session import temp_root
 from cassandra_analytics_example_spark.sources import read as sources_read
 from cassandra_analytics_example_spark.sources import write
 
@@ -64,7 +64,7 @@ def ref_datagen_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference",),
 )
 def ref_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="ref-snapshot-")
+    tmp = temp_root("ref-snapshot-")
     path = os.path.join(tmp, "test")
     write(
         gen_dataset_deterministic(spark, N_ROWS, 8),
@@ -89,7 +89,7 @@ def ref_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "cassandra"),
 )
 def ref_cassandra_branch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = tempfile.mkdtemp(prefix="ref-cassandra-")
+    root = temp_root("ref-cassandra-")
     opts = {
         "format": "cassandra",
         "sidecar_contact_points": root,
@@ -113,7 +113,7 @@ def ref_cassandra_branch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("reference",),
 )
 def ref_copy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="ref-roundtrip-")
+    tmp = temp_root("ref-roundtrip-")
     src, dst = os.path.join(tmp, "test"), os.path.join(tmp, "test2")
     write(
         gen_dataset_deterministic(spark, N_ROWS, 8),
@@ -164,7 +164,7 @@ def ref_cql_types_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen_wide_types_deterministic,
     )
 
-    root = tempfile.mkdtemp(prefix="ref-cql-types-")
+    root = temp_root("ref-cql-types-")
     opts = {
         "format": "cassandra",
         "sidecar_contact_points": root,
@@ -221,7 +221,7 @@ WHERE CAST(('0x' || substr(md5(CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)
 def ref_token_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.functions.text import md5_u60
 
-    root = tempfile.mkdtemp(prefix="ref-token-range-")
+    root = temp_root("ref-token-range-")
     opts = {
         "format": "cassandra",
         "sidecar_contact_points": root,

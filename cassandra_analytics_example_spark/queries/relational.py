@@ -24,6 +24,7 @@ from cassandra_analytics_example_spark.operators.quantiles import (
 from cassandra_analytics_example_spark.operators.relational import top_k_per_group
 from cassandra_analytics_example_spark.queries import register
 from cassandra_analytics_example_spark.queries._tables import table
+from cassandra_analytics_example_spark.session import temp_root
 
 # --------------------------------------------------------------------------
 # q01 — pricing summary (TPC-H Q1 shape): scan-filter → hash aggregate.
@@ -1464,10 +1465,9 @@ GROUP BY lang
     tags=("relational", "source"),
 )
 def q92_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
 
     docs = table(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="schema-evo-")
+    root = temp_root("schema-evo-")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
     ).parquet(f"{root}/v=1")
@@ -1657,14 +1657,13 @@ FROM documents WHERE lang = 'en' GROUP BY lang
     tags=("relational", "source", "versioning"),
 )
 def q103_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
 
     from cassandra_analytics_example_spark.sources import versioned as V
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    root = tempfile.mkdtemp(prefix="timetravel-")
+    root = temp_root("timetravel-")
     V.append(spark, root, docs.filter(F.col("doc_id") % 2 == 0))
     V.append(spark, root, docs.filter(F.col("doc_id") % 2 == 1))
     V.overwrite(spark, root, docs.filter(F.col("lang") == "en"))

@@ -15,7 +15,9 @@ comparable across engines and clusters.
 from __future__ import annotations
 
 import os
+import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "cassandra-analytics-example-spark"
@@ -179,6 +181,13 @@ def passing(value, pred, out_name: str):
     from pyspark.sql import functions as F
 
     return F.explode(F.filter(F.array(value), pred)).alias(out_name)
+
+
+def temp_root(prefix: str) -> str:
+    """A fresh directory under the active context's file root, which Spark
+    deletes on stop: it lives as long as the session whose frames read it.
+    The package makes every temp directory here."""
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 def stop_spark() -> None:

@@ -17,11 +17,11 @@ transformations are unchanged.
 The fixture's ``ts`` column has shipped either as ``timestamp[ns]``
 (needing the same ``nanosAsLong`` handling as batch, queries/_tables.py)
 or as native ``timestamp[us]``; ``readStream`` requires an explicit
-schema, so the loader probes the fixture's footer with a driver-side
-batch read first and adapts — both vintages surface an identical
-µs-timestamp ``ts`` column before watermarking. Every events-fed store
-streams through ``stream_events``, and its batch side (baselines, twins)
-reads through ``queries/_tables.py:events``.
+schema, so the loader takes the fixture's schema from the table
+catalog (``queries/_tables.py:schema``) and adapts — both vintages
+surface an identical µs-timestamp ``ts`` column before watermarking.
+Every events-fed store streams through ``stream_events``, and its batch
+side (baselines, twins) reads through ``queries/_tables.py:events``.
 
 Every store runs through two private helpers. ``_drain`` starts a
 stream with the ``availableNow`` trigger, blocks until all input is
@@ -31,24 +31,24 @@ appends ``fold(batch)`` to a parquet store per microbatch (offsets
 checkpointed beside it) and returns the un-merged partials, to which
 each store applies its own merge. Stores that count their epochs (s09,
 s14, s21) write their own sinks and call ``_drain`` directly. Every store
-directory comes from ``_temp_root``, so ``spark.stop()`` removes it.
+directory comes from ``session.temp_root``, so ``spark.stop()`` removes it.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from cassandra_analytics_example_spark.operators.checkpoints import truncate_plan
+from cassandra_analytics_example_spark.queries import _tables
+from cassandra_analytics_example_spark.session import temp_root
 
 EVENTS_STREAM_SCHEMA = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, "
@@ -59,10 +59,9 @@ EVENTS_STREAM_SCHEMA = (
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events fixture (one file = one microbatch)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    # readStream needs a declared schema; probe the footer (metadata-only
-    # batch read) so the declaration matches the fixture vintage.
-    probe = spark.read.parquet(path).schema
+    # readStream needs a declared schema; the table catalog's (inferred
+    # once per file) makes the declaration match the fixture vintage.
+    probe = _tables.schema(spark, sf_dir, "events")
     ns_fixture = dict((f.name, f.dataType.simpleString()) for f in probe)[
         "ts"
     ] in ("bigint", "long")
@@ -121,12 +120,6 @@ def _drain(writer: DataStreamWriter) -> StreamingQuery:
     return q
 
 
-def _temp_root(prefix: str) -> str:
-    """A fresh store directory under the context's file root, which Spark
-    deletes on stop: it lives as long as the session whose frames read it."""
-    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
-
-
 def _fold_store(
     stream: DataFrame, fold: Callable[[DataFrame], DataFrame], prefix: str
 ) -> DataFrame:
@@ -135,7 +128,7 @@ def _fold_store(
     ``prefix``, with the source offsets checkpointed beside it. Returns
     the appended partials UN-merged; the caller's merge-on-read (sum,
     max, argmin, top-k ...) publishes the store."""
-    root = _temp_root(prefix)
+    root = temp_root(prefix)
     target = os.path.join(root, "store")
 
     def append(batch: DataFrame, epoch_id: int) -> None:
@@ -388,8 +381,8 @@ def run_stream_dedup_to_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams append immediately. Returns the sink read back, re-aggregated
     to match s03's output shape. On a cluster the paths become object-store
     URIs; the checkpoint makes restarts resume, not recompute."""
-    out = _temp_root("spark_graft_stream_sink_")
-    ckpt = _temp_root("spark_graft_stream_ckpt_")
+    out = temp_root("spark_graft_stream_sink_")
+    ckpt = temp_root("spark_graft_stream_ckpt_")
     deduped = dedup_within_watermark(stream_events(spark, sf_dir)).select(
         "event_id", "user_id", "event_type"
     )
@@ -577,7 +570,7 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joins to zero new rows, which the test exercises by re-running
     the stream over the same input.
     """
-    out = _temp_root("upsert_sink_")
+    out = temp_root("upsert_sink_")
     target = os.path.join(out, "target")
     ck = os.path.join(out, "ck")
 
@@ -639,11 +632,9 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns per-(segment, event_type) counts re-aggregated in batch from
     the enriched row stream (append mode — row-level joins emit
     immediately; only the summary is small enough to assert on)."""
-    from cassandra_analytics_example_spark.queries._tables import events
-
     ev = stream_events(spark, sf_dir)
     users = (
-        events(spark, sf_dir)
+        _tables.events(spark, sf_dir)
         .select("user_id")
         .distinct()
         .withColumn("segment", (F.col("user_id") % 5).cast("bigint"))
@@ -822,8 +813,8 @@ def run_jsonl_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jsonl,
     )
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    out = _temp_root("s13_jsonl_")
+    docs = _tables.table(spark, sf_dir, "documents")
+    out = temp_root("s13_jsonl_")
     write_jsonl(docs, out)
     with open(os.path.join(out, "part-corrupt.json"), "w") as f:
         f.write("this line is not json\n{broken\n")
@@ -854,9 +845,7 @@ def stage_out_of_order_events(
     The file-source orders microbatches by file modification time; the two
     staged files get explicit mtimes to pin batch order.
     """
-    from cassandra_analytics_example_spark.queries._tables import events
-
-    ev = events(spark, sf_dir).select(
+    ev = _tables.events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value", "ts_us"
     )
     lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
@@ -899,7 +888,7 @@ def late_data_audit(
 
     Returns per-event-type accounting: ``n_ontime`` / ``n_late`` counts.
     """
-    root = _temp_root("s14_late_audit_")
+    root = temp_root("s14_late_audit_")
     staged = os.path.join(root, "staged")
     os.makedirs(staged, exist_ok=True)
     _split, auto_lateness = stage_out_of_order_events(spark, sf_dir, staged)
@@ -1071,8 +1060,7 @@ def run_stream_chunk_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         attach_audio_payload,
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    probe = spark.read.parquet(path).schema
+    probe = _tables.schema(spark, sf_dir, "documents")
     docs = (
         spark.readStream.schema(probe)
         .format("parquet")
@@ -1243,12 +1231,11 @@ def run_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch twin: q61 (single-file source = one microbatch, so the
     stream's extra within-stream growth is a no-op on the fixture and
     the accepted set is BIT-IDENTICAL to the batch anti-join)."""
-    out = _temp_root("stream_inc_dedup_")
+    out = temp_root("stream_inc_dedup_")
     inv = os.path.join(out, "inventory")
     acc = os.path.join(out, "accepted")
     ck = os.path.join(out, "ck")
-    path = os.path.join(sf_dir, "documents.parquet")
-    base = spark.read.parquet(path)
+    base = _tables.table(spark, sf_dir, "documents")
     (
         base.where(F.col("doc_id") % 7 == 0)
         .select(F.md5("text").alias("content_hash"))
@@ -1370,9 +1357,7 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and the per-bucket terms quantize BEFORE summation, the
     published table is BIT-IDENTICAL to q192's batch recompute
     (tests/test_streaming_batch_twins.py)."""
-    from cassandra_analytics_example_spark.queries._tables import events
-
-    bb = events(spark, sf_dir).select("event_type", "ts_us", "value")
+    bb = _tables.events(spark, sf_dir).select("event_type", "ts_us", "value")
     mid = bb.agg(
         ((F.min("ts_us") + F.max("ts_us")) / F.lit(2))
         .cast("bigint")
@@ -1517,8 +1502,7 @@ def run_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 50
     den = float(1 << 60)
-    path = os.path.join(sf_dir, "documents.parquet")
-    probe = spark.read.parquet(path).schema
+    probe = _tables.schema(spark, sf_dir, "documents")
     docs = (
         spark.readStream.schema(probe)
         .format("parquet")
@@ -1662,10 +1646,9 @@ def run_stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.rankstats import (
         ks_from_counts,
     )
-    from cassandra_analytics_example_spark.queries._tables import events
 
     bb = (
-        events(spark, sf_dir)
+        _tables.events(spark, sf_dir)
         .where(F.col("event_type") == "purchase")
         .select(
             "ts_us", F.round(F.col("value") * 100).cast("bigint").alias("v")

@@ -408,6 +408,9 @@ spark = get_spark(
 out = cut_results(spark, sf_dir)
 out["subdirs"] = sorted(os.listdir(ck_dir))
 out["files"] = sum(len(f) for _, _, f in os.walk(ck_dir))
+out["rdd_dirs"] = sorted(
+    d for sub in out["subdirs"] for d in os.listdir(os.path.join(ck_dir, sub))
+)
 print(json.dumps(out))
 spark.stop()
 """
@@ -453,6 +456,10 @@ def test_iterative_ops_reliable_checkpoint(spark, sf_dir, tmp_path):
     assert reliable["files"] > 0
     assert len(reliable["subdirs"]) == 1
     uuid.UUID(reliable["subdirs"][0])
+    # superseded rounds' files are deleted with their cuts: one rdd-* dir
+    # is left per returned cut (the centroids, the cc labels, the AUC row)
+    assert len(reliable["rdd_dirs"]) == 3, reliable["rdd_dirs"]
+    assert all(d.startswith("rdd-") for d in reliable["rdd_dirs"])
 
 
 def _local_cut_ids(spark) -> set:

@@ -203,3 +203,107 @@ def test_lineage_cuts_go_through_truncate_plan():
         "raw lineage cut outside operators/checkpoints.py — use "
         f"truncate_plan: {found}"
     )
+
+
+def _package_modules():
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "cassandra_analytics_example_spark"
+    )
+    return [(p.relative_to(pkg).as_posix(), p) for p in sorted(pkg.rglob("*.py"))]
+
+
+def _sf_dir_parquet_reads(source: str) -> list[int]:
+    """Lines of ``<x>.read.parquet(...)`` calls whose argument is a path
+    built from ``sf_dir`` (a name, f-string, ``+`` or ``*.join`` over it),
+    directly or through a name assigned such a path earlier in the same
+    function. A path returned by some other call (a temp copy) is not."""
+    import ast
+
+    def is_path(node, names):
+        if isinstance(node, ast.Name):
+            return node.id in names
+        if isinstance(node, ast.Call):
+            return (
+                isinstance(node.func, ast.Attribute)
+                and node.func.attr == "join"
+                and any(is_path(a, names) for a in node.args)
+            )
+        if isinstance(node, (ast.JoinedStr, ast.FormattedValue, ast.BinOp)):
+            return any(is_path(c, names) for c in ast.iter_child_nodes(node))
+        return False
+
+    hits = []
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        names = {"sf_dir"}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign) and is_path(node.value, names):
+                names |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+                and any(is_path(a, names) for a in node.args)
+            ):
+                hits.append(node.lineno)
+    return sorted(set(hits))
+
+
+def test_fixture_tables_read_through_the_table_catalog():
+    """Every read of a fixture table (a path under ``sf_dir``) goes
+    through ``queries/_tables.py``, which keeps each table's inferred
+    schema: a raw ``spark.read.parquet`` there runs a footer-inference
+    job on every build."""
+    found = []
+    modules = _package_modules()
+    for rel, path in modules:
+        if rel == "queries/_tables.py":
+            continue
+        found += [f"{rel}:{n}" for n in _sf_dir_parquet_reads(path.read_text())]
+    assert len(modules) > 40, f"scanned only {len(modules)} modules"
+    assert not found, (
+        "raw parquet read of a fixture table — use "
+        f"queries/_tables.py table()/schema(): {found}"
+    )
+
+
+def test_sf_dir_read_lint_sees_derived_paths():
+    src = (
+        "def f(spark, sf_dir):\n"
+        "    path = os.path.join(sf_dir, 'documents.parquet')\n"
+        "    probe = spark.read.parquet(path).schema\n"
+        "    root = copy_to_temp(spark, sf_dir)\n"
+        "    ok = spark.read.parquet(root)\n"
+        "    ok = spark.read.parquet(f'{root}_dim')\n"
+        "    return spark.read.parquet(f'{sf_dir}/x.parquet')\n"
+    )
+    assert _sf_dir_parquet_reads(src) == [3, 7]
+
+
+_RAW_MKDTEMP = re.compile(r"tempfile\.mkdtemp\(")
+
+
+def test_temp_dirs_come_from_session_temp_root():
+    """Every temp directory the package makes comes from
+    ``session.temp_root``, under the context's file root that Spark
+    deletes on stop; a bare ``tempfile.mkdtemp`` is never removed."""
+    found = []
+    modules = _package_modules()
+    for rel, path in modules:
+        if rel == "session.py":
+            continue
+        for lineno, line in enumerate(path.read_text().splitlines(), start=1):
+            m = _RAW_MKDTEMP.search(line)
+            hash_pos = line.find("#")
+            if m and not 0 <= hash_pos < m.start():
+                found.append(f"{rel}:{lineno}")
+    assert len(modules) > 40, f"scanned only {len(modules)} modules"
+    assert not found, (
+        f"bare tempfile.mkdtemp outside session.temp_root: {found}"
+    )

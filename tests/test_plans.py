@@ -554,6 +554,25 @@ def test_q101_result_distributed_not_collected(spark, registry):
     assert "ExistingRDD" in plan, "q101 is not a checkpointed distributed scan"
 
 
+def test_q101_copy_lives_under_the_context_file_root(spark):
+    """q101's partitioned events copy, and the dim table beside it, sit
+    under ``SparkFiles.getRootDirectory()``, which Spark deletes when the
+    context stops, so the query leaves no directories behind the session
+    that read them."""
+    import os
+
+    from pyspark import SparkFiles
+
+    from cassandra_analytics_example_spark.queries.events import dpp_join_plan
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    files = dpp_join_plan(spark, SF_DIR).inputFiles()
+    assert files
+    for f in files:
+        path = os.path.realpath(f.removeprefix("file:"))
+        assert os.path.commonpath([root, path]) == root, (f, root)
+
+
 def test_bpe_pair_counts_aggregates_vocab_not_tokens(spark, registry):
     """q115's pair explosion must run over the AGGREGATED word vocabulary
     (post-groupBy), not the raw token stream: the plan must show partial
