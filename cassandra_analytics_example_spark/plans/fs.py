@@ -9,13 +9,24 @@ its library's S3-compat transport; its driver-side file listing at
 ``App.scala:76`` is exactly the pattern we avoid.)
 
 These run on the DRIVER over py4j — fine for control-plane metadata (file
-inventories, manifests, markers), never for data movement: listing is O(n
-files) RPC-light, and manifest reads/writes are a few KB.
+inventories, manifests, markers): listing is O(n files) RPC-light, and
+manifest reads/writes are a few KB. Inventories walk ``listStatus``, never
+``listFiles``: the latter builds a ``LocatedFileStatus`` per file, which
+copies the file's permission, and on a local filesystem without the
+native-hadoop library reading a permission forks a shell command.
+
+The one data-movement helper is ``import_files``, the file-level import of
+a staged write (the reference imports its uploaded SSTables the same way).
+It streams the staged bytes through the driver's Hadoop client once per
+target. At 100 TB on an object store the right primitive is a server-side
+copy, which the Hadoop ``FileSystem`` API does not expose.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+
+_SUCCESS = "_SUCCESS"
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -25,39 +36,81 @@ def _fs_and_path(spark: SparkSession, path: str):
     return fs, jpath
 
 
+def _walk(fs, root):
+    """Yield ``(relative path, FileStatus)`` of every data file under
+    ``root``, skipping hidden/marker entries (``_SUCCESS``, ``.crc``,
+    ``_snapshots/``) exactly as Spark's own readers do. Hidden directories
+    are pruned as the walk meets them, so the root's own ancestors are
+    never looked at."""
+    stack = [(root, "")]
+    while stack:
+        directory, prefix = stack.pop()
+        for status in fs.listStatus(directory):
+            p = status.getPath()
+            name = p.getName()
+            if name.startswith(("_", ".")):
+                continue
+            if status.isDirectory():
+                stack.append((p, f"{prefix}{name}/"))
+            else:
+                yield f"{prefix}{name}", status
+
+
 def list_data_files(
     spark: SparkSession, path: str, suffix: str | None = None
 ) -> list[tuple[str, int]]:
-    """Recursive (path, size) inventory of data files under ``path``,
-    skipping hidden/marker entries (``_SUCCESS``, ``.crc``, ``_snapshots``)
-    exactly as Spark's own readers do."""
+    """Recursive (qualified path, size) inventory of the data files under
+    ``path`` (see ``_walk``)."""
     fs, jpath = _fs_and_path(spark, path)
-    # listFiles yields qualified paths (file:/..., s3a://...); compare the
-    # parent walk against the qualified root, or a scheme-less root never
-    # matches and the walk climbs into the root's own hidden ancestors
-    root = fs.makeQualified(jpath).toString()
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        name = p.getName()
-        if name.startswith(("_", ".")):
-            continue
-        # skip anything inside a hidden directory (e.g. _snapshots/)
-        parent_hidden = False
-        parent = p.getParent()
-        while parent is not None and parent.toString() != root:
-            if parent.getName().startswith(("_", ".")):
-                parent_hidden = True
-                break
-            parent = parent.getParent()
-        if parent_hidden:
-            continue
-        if suffix is not None and not name.endswith(suffix):
-            continue
-        out.append((p.toString(), int(status.getLen())))
-    return sorted(out)
+    return sorted(
+        (status.getPath().toString(), int(status.getLen()))
+        for rel, status in _walk(fs, jpath)
+        if suffix is None or rel.endswith(suffix)
+    )
+
+
+def data_file_sizes(spark: SparkSession, path: str) -> dict[str, int]:
+    """Size of each data file under ``path``, keyed by its path relative
+    to ``path`` (see ``_walk``)."""
+    fs, jpath = _fs_and_path(spark, path)
+    return {rel: int(status.getLen()) for rel, status in _walk(fs, jpath)}
+
+
+def import_files(
+    spark: SparkSession, src: str, files: list[str], dst: str, overwrite: bool
+) -> None:
+    """Copy the data files ``files`` (paths relative to ``src``) into
+    ``dst``, then ``src``'s ``_SUCCESS`` marker if it has one, so a reader
+    that waits for the marker sees every file. Each file is one Hadoop
+    ``FileUtil.copy``; a checksummed destination writes its own ``.crc``.
+
+    ``overwrite`` clears ``dst``'s children (not ``dst`` itself: a mount
+    point such as a ``viewfs`` link cannot be deleted) or makes ``dst``.
+    Otherwise the files are added next to ``dst``'s own, and a data file
+    whose name is already there raises ``FileExistsError`` before anything
+    is copied."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    src_fs, src_root = _fs_and_path(spark, src)
+    dst_fs, dst_root = _fs_and_path(spark, dst)
+    if overwrite:
+        if dst_fs.exists(dst_root):
+            for status in dst_fs.listStatus(dst_root):
+                dst_fs.delete(status.getPath(), True)
+        else:
+            dst_fs.mkdirs(dst_root)
+    elif dst_fs.exists(dst_root):
+        taken = sorted(set(files) & data_file_sizes(spark, dst).keys())
+        if taken:
+            raise FileExistsError(f"{dst} already holds {taken}")
+    copy = jvm.org.apache.hadoop.fs.FileUtil.copy
+    Path = jvm.org.apache.hadoop.fs.Path
+    for rel in files:
+        src_file, dst_file = Path(src_root, rel), Path(dst_root, rel)
+        copy(src_fs, src_file, dst_fs, dst_file, False, False, conf)
+    marker = Path(src_root, _SUCCESS)
+    if src_fs.exists(marker):
+        copy(src_fs, marker, dst_fs, Path(dst_root, _SUCCESS), False, True, conf)
 
 
 def write_text(spark: SparkSession, path: str, content: str) -> None:

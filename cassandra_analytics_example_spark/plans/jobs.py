@@ -19,6 +19,9 @@ Differences by design (Spark-first, 100 TB):
 * No driver-side ``collect()`` of file lists (the reference's
   ``App.scala:76``); output inventories are computed distributed and only
   small summaries come back.
+* Staged writes import files, not rows: a target whose layout equals the
+  staging write's gets the staged files copied in (``staged_write``), as
+  the reference's clusters import the uploaded SSTables.
 * ``table_to_parquet`` needs no work-unit RDD: Spark's task model already
   parallelizes per input split, and ``maxRecordsPerFile`` bounds output files
   exactly like the transformer's ``maxRowsPerFile(100000)``.
@@ -28,6 +31,7 @@ from __future__ import annotations
 
 import logging
 import tempfile
+import time
 import uuid
 from typing import Callable, TypeVar
 
@@ -44,6 +48,7 @@ from cassandra_analytics_example_spark.plans.listeners import (
     StorageTransportListener,
 )
 from cassandra_analytics_example_spark.sources import read, write
+from cassandra_analytics_example_spark.sources.registry import MAX_RECORDS_PER_FILE
 
 log = logging.getLogger(__name__)
 
@@ -84,6 +89,38 @@ def _generate(spark: SparkSession, config: JobConfiguration):
     return gen(spark, config.row_count, splits)
 
 
+#: write options that place or label a write; every other key shapes the
+#: files the write makes
+_PLACEMENT_KEYS = frozenset(
+    {"path", "mode", "staging_dir", "rows", "deterministic", "data_transport"}
+)
+
+
+def _layout(options: dict[str, str]) -> dict[str, str]:
+    """The options that decide a write's format and file layout, with the
+    sink's defaults filled in."""
+    layout = {k: str(v) for k, v in options.items() if k not in _PLACEMENT_KEYS}
+    layout.setdefault("format", "parquet")
+    layout.setdefault("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
+    return layout
+
+
+def _file_import(
+    spark: SparkSession, stage_dir: str, staged: dict[str, int], target: str, mode: str
+) -> str | None:
+    """Copy the staged files into ``target`` and check that each landed
+    with its staged size. Returns why the import failed, or None."""
+    try:
+        fs.import_files(spark, stage_dir, sorted(staged), target, mode == "overwrite")
+    except FileExistsError as exc:
+        return str(exc)
+    landed = fs.data_file_sizes(spark, target)
+    short = sorted(rel for rel, size in staged.items() if landed.get(rel) != size)
+    if short:
+        return f"{len(short)} of {len(staged)} staged files missing or resized: {short}"
+    return None
+
+
 def staged_write(
     spark: SparkSession,
     df: DataFrame,
@@ -97,20 +134,29 @@ def staged_write(
     Phase 1 stages the dataset once into ``staging_dir`` and fires
     object-persisted/stage-succeeded per target; phase 2 imports into every
     target only after ALL targets staged (all-or-nothing when the listener
-    is coordinated). Returns the staged row count; an import that writes a
-    different count raises before its import-succeeded callback. Without a
-    ``staging_dir`` option the stage goes to a fresh temporary directory,
-    deleted when the write ends.
+    is coordinated). Without a ``staging_dir`` option the stage goes to a
+    fresh temporary directory, deleted when the write ends.
+
+    A target whose format and layout options (``_layout``) equal the
+    staging write's, in ``overwrite`` or ``append`` mode, imports the staged
+    files as they are (``fs.import_files``, one object-applied callback per
+    file): nothing is re-encoded, as the reference's clusters import the
+    uploaded SSTables. The import fails if a staged file is missing from the
+    target or has another size. Any other target (``cassandra``, another
+    compression, ...) re-encodes the staged rows, and fails if it writes a
+    different count. A failed import fires import-failed and raises. Returns
+    the staged row count.
 
     Object-store staging is a CONFIG change, not a code change: every path
     here (``staging_dir``, targets) is resolved through Spark's Hadoop
     FileSystem API — the write/read legs by the parquet committers, the
-    inventory by ``fs.list_data_files`` — so ``file://``, ``s3a://``,
+    inventories and copies by ``plans/fs`` — so ``file://``, ``s3a://``,
     ``hdfs://`` and ``gs://`` URIs all take this exact path with the same
     listener lifecycle (gated by test_roundtrip's ``file://`` URI run;
     the bucket/region/credential plane of the reference's
     LocalStorageTransportExtension.scala:79-99 maps onto the scheme's
     Hadoop connector configuration)."""
+    t0 = time.monotonic()
     listener.on_transport_start()
     stage_dir = write_options.get("staging_dir")
     own_stage = stage_dir is None
@@ -118,25 +164,44 @@ def staged_write(
         stage_dir = f"{tempfile.gettempdir()}/staged-{uuid.uuid4().hex}"
     try:
         n_rows = write(df, {**write_options, "path": stage_dir, "mode": "overwrite"})
-        staged_files = fs.list_data_files(spark, stage_dir, suffix=".parquet")
-        for fpath, size in staged_files:
-            listener.on_object_persisted("staging", fpath, size)
+        staged_files = fs.data_file_sizes(spark, stage_dir)
+        stage_root = stage_dir.rstrip("/")
+        for rel, size in sorted(staged_files.items()):
+            listener.on_object_persisted("staging", f"{stage_root}/{rel}", size)
         listener.on_all_objects_persisted(len(staged_files), n_rows)
         for cluster in targets:
             listener.on_stage_succeeded(cluster)
         if isinstance(listener, CoordinatedStorageTransportListener):
             if not listener.all_staged:  # pragma: no cover - defensive
                 raise RuntimeError("coordinated write: staging incomplete")
-        # the staged files carry df's schema: no footer-inference job
-        staged = spark.read.schema(df.schema).parquet(stage_dir)
+        layout = _layout(write_options)
+        staged = None
         for cluster, opts in targets.items():
-            imported = write(staged, opts)
-            if imported != n_rows:
-                cause = f"imported {imported} of {n_rows} staged rows"
+            mode = opts.get("mode", "append").lower()
+            copies = (
+                layout["format"] != "cassandra"
+                and "path" in opts
+                and mode in ("overwrite", "append")
+                and _layout(opts) == layout
+            )
+            if copies:
+                cause = _file_import(spark, stage_dir, staged_files, opts["path"], mode)
+            else:
+                if staged is None:
+                    # the staged files carry df's schema: no footer-inference job
+                    staged = spark.read.schema(df.schema).parquet(stage_dir)
+                imported = write(staged, opts)
+                cause = None
+                if imported != n_rows:
+                    cause = f"imported {imported} of {n_rows} staged rows"
+            if cause is not None:
                 listener.on_import_failed(cluster, cause)
                 raise RuntimeError(f"staged write into {cluster!r}: {cause}")
+            if copies:
+                for rel, size in sorted(staged_files.items()):
+                    listener.on_object_applied(cluster, rel, size)
             listener.on_import_succeeded(cluster)
-        listener.on_job_succeeded(0.0)
+        listener.on_job_succeeded((time.monotonic() - t0) * 1000)
         return n_rows
     finally:
         if own_stage:
@@ -211,7 +276,9 @@ def two_clusters_coordinated_write(
 
     Two-phase: (1) stage the dataset once into a staging directory, firing
     object-persisted/stage-succeeded callbacks per target; (2) only when every
-    target staged successfully, import (rename/copy) into each target path.
+    target staged successfully, import into each target path: a file copy
+    of the staged files when the target's layout matches (see
+    ``staged_write``), a re-encode otherwise.
     On any staging failure nothing is imported. Returns the staged rows,
     which every import matched.
     """

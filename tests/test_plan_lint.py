@@ -307,3 +307,29 @@ def test_temp_dirs_come_from_session_temp_root():
     assert not found, (
         f"bare tempfile.mkdtemp outside session.temp_root: {found}"
     )
+
+
+_RAW_FS_DATA = re.compile(r"\.listFiles\(|FileUtil")
+
+
+def test_file_inventories_and_copies_go_through_plans_fs():
+    """File inventories and file copies have one home, ``plans/fs.py``:
+    its ``listStatus`` walk (``listFiles`` builds a ``LocatedFileStatus``
+    per file, and on a local filesystem without native-hadoop each one
+    forks a shell command to read the file's permission) and its
+    ``import_files``."""
+    found = []
+    modules = _package_modules()
+    for rel, path in modules:
+        if rel == "plans/fs.py":
+            continue
+        for lineno, line in enumerate(path.read_text().splitlines(), start=1):
+            m = _RAW_FS_DATA.search(line)
+            hash_pos = line.find("#")
+            if m and not 0 <= hash_pos < m.start():
+                found.append(f"{rel}:{lineno}")
+    assert len(modules) > 40, f"scanned only {len(modules)} modules"
+    assert not found, (
+        "raw listFiles/FileUtil outside plans/fs.py — use "
+        f"fs.list_data_files / fs.data_file_sizes / fs.import_files: {found}"
+    )

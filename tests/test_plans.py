@@ -1062,10 +1062,11 @@ def test_list_data_files_scheme_less_path_under_hidden_ancestor(spark, tmp_path)
 def test_etl_legs_run_one_pass(spark, tmp_path):
     """Each bulk-ETL leg runs its lineage once: the sink write counts its
     own rows, and snapshot and staging reads plan from a known schema
-    instead of running a parquet footer-inference job. The job budgets
-    below are what the legs take with that design; a persist+count pair
-    or a re-inferred read adds at least one job. No leg leaves a cached
-    RDD behind."""
+    instead of running a parquet footer-inference job. A coordinated
+    write copies its staged files into each target, so its one job is
+    the stage. The job budgets below are what the legs take with that
+    design; a persist+count pair, a re-inferred read or a re-encoded
+    import adds at least one job. No leg leaves a cached RDD behind."""
     from cassandra_analytics_example_spark.config import JobConfiguration
     from cassandra_analytics_example_spark.plans import jobs
 
@@ -1098,7 +1099,7 @@ def test_etl_legs_run_one_pass(spark, tmp_path):
             write_options={"path": uri("t2"), "mode": "overwrite"}))),
         "table_to_parquet": (2, lambda: jobs.table_to_parquet(
             spark, cfg(read_options={"path": uri("t2")}), uri("t3"))),
-        "coordinated_write": (3, lambda: jobs.two_clusters_coordinated_write(
+        "coordinated_write": (1, lambda: jobs.two_clusters_coordinated_write(
             spark, cfg(write_options={"rows": "4000", "staging_dir": uri("stg")}),
             {"c1": {"path": uri("c1")}, "c2": {"path": uri("c2")}})),
     }

@@ -10,10 +10,12 @@ discipline at the plan level.
 from __future__ import annotations
 
 import json
+import os
 import signal
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from cassandra_analytics_example_spark.config import JobConfiguration
@@ -328,15 +330,50 @@ class TestDataTransportRouting:
     def test_short_import_fails_the_staged_write(
         self, spark, tmp_path, monkeypatch
     ):
-        """An import that writes fewer rows than were staged raises before
-        its import-succeeded callback: the coordinated listener never
-        reports success, and the generated staging directory still goes."""
+        """A file import that lands one staged file short raises before its
+        import-succeeded callback: the coordinated listener never reports
+        success, and the generated staging directory still goes."""
         tmp = tmp_path / "tmp"
         tmp.mkdir()
         monkeypatch.setattr(tempfile, "tempdir", str(tmp))
         targets = {
             "c1": {"path": str(tmp_path / "c1")},
             "c2": {"path": str(tmp_path / "c2")},
+        }
+        real_import = fs.import_files
+
+        def short_second(spark, src, files, dst, overwrite):
+            real_import(spark, src, files, dst, overwrite)
+            if dst == targets["c2"]["path"]:
+                fs.delete(spark, f"{dst}/{files[0]}")
+
+        monkeypatch.setattr(fs, "import_files", short_second)
+        listener = CoordinatedStorageTransportListener(list(targets))
+        with pytest.raises(RuntimeError, match="c2"):
+            two_clusters_coordinated_write(
+                spark,
+                JobConfiguration(write_options={"rows": "200"}),
+                targets,
+                listener,
+            )
+        kinds = [e.kind for e in listener.events]
+        assert "job_succeeded" not in kinds
+        assert kinds.count("import_succeeded") == 1
+        assert kinds[-1] == "import_failed"
+        assert list(tmp.iterdir()) == []
+
+    def test_short_reencode_fails_the_staged_write(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The re-encode twin: targets whose layout differs from the
+        staging write's (``compression``) write the staged rows again, and
+        one that writes fewer rows than were staged fails the same way."""
+        tmp = tmp_path / "tmp"
+        tmp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        targets = {
+            "c1": {"path": str(tmp_path / "c1"), "compression": "gzip"},
+            "c2": {"path": str(tmp_path / "c2"), "compression": "gzip"},
         }
         real_write = jobs.write
 
@@ -358,6 +395,152 @@ class TestDataTransportRouting:
         assert kinds.count("import_succeeded") == 1
         assert kinds[-1] == "import_failed"
         assert list(tmp.iterdir()) == []
+
+
+def _digest(df) -> tuple:
+    """(count, sum(id), sum(marks), sum(crc32(course))) of a frame."""
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum("id"),
+        F.sum("marks"),
+        F.sum(F.crc32("course").cast("decimal(38,0)")),
+    ).first()
+    return tuple(row)
+
+
+class TestFileImport:
+    """Targets whose layout equals the staging write's import the staged
+    files by copy (``fs.import_files``) instead of re-encoding them."""
+
+    def test_object_applied_per_staged_file_per_target(self, spark, tmp_path):
+        targets = {c: {"path": str(tmp_path / c)} for c in ("c1", "c2")}
+        listener = CoordinatedStorageTransportListener(list(targets))
+        two_clusters_coordinated_write(
+            spark,
+            JobConfiguration(
+                write_options={"rows": "900", "staging_dir": str(tmp_path / "stg")}
+            ),
+            targets,
+            listener,
+        )
+        staged = fs.data_file_sizes(spark, str(tmp_path / "stg"))
+        assert staged
+        applied = [e.detail for e in listener.events if e.kind == "object_applied"]
+        want = sorted(
+            f"{c}/{rel} ({size} B)" for c in targets for rel, size in staged.items()
+        )
+        assert sorted(applied) == want
+        for c, opts in targets.items():
+            assert fs.data_file_sizes(spark, opts["path"]) == staged
+            assert spark.read.parquet(opts["path"]).count() == 900
+
+    def test_overwrite_import_leaves_only_staged_files(self, spark, tmp_path):
+        target = str(tmp_path / "c1")
+        write(gen_dataset_deterministic(spark, 70, 3), {"path": target})
+        create_snapshot(spark, target, "old")
+        stale = fs.data_file_sizes(spark, target)
+        two_clusters_coordinated_write(
+            spark,
+            JobConfiguration(
+                write_options={"rows": "400", "staging_dir": str(tmp_path / "stg")}
+            ),
+            {"c1": {"path": target}},
+        )
+        staged = fs.data_file_sizes(spark, str(tmp_path / "stg"))
+        assert fs.data_file_sizes(spark, target) == staged
+        assert not set(stale) & set(staged)
+        assert not (tmp_path / "c1" / "_snapshots").exists()
+        assert (tmp_path / "c1" / "_SUCCESS").exists()
+        assert spark.read.parquet(target).count() == 400
+
+    def test_append_import_keeps_earlier_files(self, spark, tmp_path):
+        target = str(tmp_path / "t")
+        write(gen_dataset_deterministic(spark, 80, 2), {"path": target})
+        earlier = fs.data_file_sizes(spark, target)
+        listener = StorageTransportListener()
+        opts = {
+            "rows": "300",
+            "path": target,
+            "staging_dir": str(tmp_path / "stg"),
+            "data_transport": "S3_COMPAT",
+        }
+        assert write_job(spark, JobConfiguration(write_options=opts), listener) == 300
+        staged = fs.data_file_sizes(spark, opts["staging_dir"])
+        assert fs.data_file_sizes(spark, target) == {**earlier, **staged}
+        assert spark.read.parquet(target).count() == 380
+        assert [e.kind for e in listener.events].count("object_applied") == len(staged)
+
+    def test_append_import_refuses_a_name_collision(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An append whose staged file name is already in the target fails
+        with import-failed and copies nothing."""
+        stage, target = str(tmp_path / "stg"), str(tmp_path / "t")
+        write(gen_dataset_deterministic(spark, 50, 1), {"path": target})
+        taken = sorted(fs.data_file_sizes(spark, target))[0]
+        real_write = jobs.write
+
+        def stage_onto_taken_name(df, options):
+            n = real_write(df, options)
+            first = sorted(fs.data_file_sizes(spark, stage))[0]
+            os.rename(f"{stage}/{first}", f"{stage}/{taken}")
+            return n
+
+        monkeypatch.setattr(jobs, "write", stage_onto_taken_name)
+        listener = StorageTransportListener()
+        with pytest.raises(RuntimeError, match="already holds"):
+            jobs.staged_write(
+                spark,
+                gen_dataset_deterministic(spark, 60, 1),
+                {"staging_dir": stage},
+                {"t": {"path": target}},
+                listener,
+            )
+        kinds = [e.kind for e in listener.events]
+        assert kinds[-1] == "import_failed"
+        assert "import_succeeded" not in kinds
+        assert "object_applied" not in kinds
+        assert spark.read.parquet(target).count() == 50
+
+    def test_reencode_target_imports_the_same_rows(self, spark, tmp_path):
+        """A target with another compression re-encodes the staged rows:
+        its files differ from the staged ones, its rows do not."""
+        import pyarrow.parquet as pq
+
+        target = str(tmp_path / "gz")
+        listener = CoordinatedStorageTransportListener(["gz"])
+        two_clusters_coordinated_write(
+            spark,
+            JobConfiguration(
+                write_options={"rows": "700", "staging_dir": str(tmp_path / "stg")}
+            ),
+            {"gz": {"path": target, "compression": "gzip"}},
+            listener,
+        )
+        kinds = [e.kind for e in listener.events]
+        assert "object_applied" not in kinds
+        assert kinds[-2:] == ["import_succeeded", "job_succeeded"]
+        files = sorted((tmp_path / "gz").glob("*.parquet"))
+        assert files
+        assert all(
+            pq.ParquetFile(f).metadata.row_group(0).column(0).compression == "GZIP"
+            for f in files
+        )
+        assert _digest(spark.read.parquet(target)) == _digest(
+            gen_dataset_deterministic(spark, 700, 2)
+        )
+
+    def test_job_succeeded_reports_elapsed_ms(self, spark, tmp_path):
+        listener = CoordinatedStorageTransportListener(["c1"])
+        two_clusters_coordinated_write(
+            spark,
+            JobConfiguration(write_options={"rows": "100"}),
+            {"c1": {"path": str(tmp_path / "c1")}},
+            listener,
+        )
+        last = listener.events[-1]
+        assert last.kind == "job_succeeded"
+        assert float(last.detail.removesuffix(" ms")) > 0
 
 
 def _empty_frame(spark, kind: str):
