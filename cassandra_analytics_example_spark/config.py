@@ -26,21 +26,13 @@ DEFAULT_ROW_COUNT = 10_000  # reference default, SparkUtils.scala:121
 class JobConfiguration:
     """Reader + writer option maps driving a pipeline run.
 
-    Mirrors ``JobConfiguration(writeOptions, readOptions)`` with the same
-    derived accessors: ``row_count`` (default 10 000), ``should_write`` /
-    ``should_read`` (map non-empty), ``splits`` (default = parallelism).
+    Mirrors ``JobConfiguration(writeOptions, readOptions)`` with the
+    derived accessors the jobs use: ``row_count`` (default 10 000) and
+    ``splits`` (default = parallelism).
     """
 
     write_options: dict[str, str] = field(default_factory=dict)
     read_options: dict[str, str] = field(default_factory=dict)
-
-    @property
-    def should_write(self) -> bool:
-        return bool(self.write_options)
-
-    @property
-    def should_read(self) -> bool:
-        return bool(self.read_options)
 
     @property
     def row_count(self) -> int:
@@ -48,11 +40,3 @@ class JobConfiguration:
 
     def splits(self, default_parallelism: int) -> int:
         return int(self.write_options.get("splits", default_parallelism))
-
-    @staticmethod
-    def write_only(options: dict[str, str]) -> "JobConfiguration":
-        return JobConfiguration(write_options=options)
-
-    @staticmethod
-    def read_only(options: dict[str, str]) -> "JobConfiguration":
-        return JobConfiguration(read_options=options)

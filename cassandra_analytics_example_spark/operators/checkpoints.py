@@ -18,8 +18,10 @@ argument. This module never sets one.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import threading
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
@@ -262,3 +264,47 @@ def pin_scope(spark: SparkSession) -> Iterator[None]:
                 df.unpersist()
         pins[:] = [df for df in pins if id(df) in before_ids]
         del before  # the snapshot's strong refs release only now
+
+
+def eager_terminal(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """EAGER contract of the one-row terminal metrics (``roc_auc_exact``,
+    the ``rankstats`` statistics): build the lazy plan inside a
+    ``pin_scope``, materialize it lineage-free (``truncate_plan``) and
+    release the internal partition pins before returning, so looping
+    callers hold ZERO CacheManager entries between calls.
+
+    The wrapper forwards ``*args``/``**kwargs`` against the wrapped fn's
+    OWN signature (round-9 ADVICE: a named first parameter here silently
+    renamed every metric's first argument to ``df`` and broke keyword
+    calls like ``cusum_changepoint_from_counts(d=...)``); the session for
+    ``pin_scope`` is taken from the bound first argument, which must be
+    the input DataFrame."""
+    sig = inspect.signature(fn)
+    # The first bound argument must be the DataFrame, or pin_scope/
+    # truncate_plan fail far from the call: check it at decoration time
+    # (required positional) and at call time (a DataFrame). Raise, not
+    # assert, so the checks hold under python -O.
+    _first = next(iter(sig.parameters.values()))
+    if _first.default is not inspect.Parameter.empty or _first.kind not in (
+        inspect.Parameter.POSITIONAL_ONLY,
+        inspect.Parameter.POSITIONAL_OR_KEYWORD,
+    ):
+        raise TypeError(
+            f"{fn.__name__}: eager_terminal requires the first parameter "
+            f"to be a required positional DataFrame, got {_first}"
+        )
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs) -> DataFrame:
+        bound = sig.bind(*args, **kwargs)
+        df = next(iter(bound.arguments.values()))
+        if not isinstance(df, DataFrame):
+            raise TypeError(
+                f"{fn.__name__}: first argument must be the input "
+                f"DataFrame (got {type(df).__name__}) - eager_terminal "
+                f"takes its SparkSession from it"
+            )
+        with pin_scope(df.sparkSession):
+            return truncate_plan(fn(*args, **kwargs))
+
+    return wrapper

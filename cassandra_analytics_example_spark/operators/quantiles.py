@@ -13,18 +13,21 @@ statistics) with bounded memory per task:
 
 1. per-group counts ``n`` -> the at-most-two boundary ranks per quantile
    (a G x Q row table, broadcast);
-2. range-repartition the corpus on (group, value, tiebreak) so each
-   partition holds a contiguous slice of each group's value order;
-3. LOCAL ``row_number`` per (partition, group) cell — the window partition
-   is a range-partition cell, never a whole group;
-4. globalise ranks by adding broadcast cumulative per-cell offsets (the
-   q111 shard-packing offset-layer pattern), keep only rows whose global
-   rank is a boundary rank, and interpolate.
+2. each row's global rank in its group, as the exclusive prefix sum of a
+   unit count over (value, tiebreak) plus one — the package's one
+   range-prefix operator (``operators/ranking.py:grouped_prefix_sums``:
+   range cells on (group, value, tiebreak), a LOCAL window per
+   (partition, group) cell, broadcast per-cell offsets);
+3. keep only rows whose global rank is a boundary rank, and interpolate.
 
 Cost: two corpus passes (count + select), one range shuffle, one bounded
 window shuffle, two tiny broadcasts.  No aggregation buffer ever holds
 more than a few doubles; the largest window cell is ~|corpus| /
 num_partitions rows regardless of group cardinality.
+
+``weighted_quantile_exact`` keeps its own range cells: it windows only
+the candidate cells whose weight span can hold the threshold, which a
+prefix over every cell cannot do.
 """
 
 from __future__ import annotations
@@ -36,6 +39,9 @@ from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
     pin_partition_ids,
+)
+from cassandra_analytics_example_spark.operators.ranking import (
+    grouped_prefix_sums,
 )
 
 
@@ -89,38 +95,25 @@ def group_quantiles_exact(
         )
     )
 
-    # Pass 2: contiguous range cells.  The tiebreak column spreads heavy
-    # duplicate values across cells (selection is tie-order independent:
-    # equal ranks carry equal values).  monotonically_increasing_id is
-    # stable for a deterministic source partitioning, which is all the
-    # two branches below need to agree.
-    # pin_partition_ids: the cells layer and the ranked layer both consume
-    # this frame and join back on __pid — the pid mapping (and the
-    # partition-layout-dependent __tb) must be frozen once
-    # (operators/checkpoints.py:pin_partition_ids).
-    part = pin_partition_ids(
-        base.withColumn("__tb", F.monotonically_increasing_id())
-        .repartitionByRange(num_partitions, "__g", "__v", "__tb")
-        .withColumn("__pid", F.spark_partition_id())
-    )
-
-    cells = part.groupBy("__pid", "__g").agg(F.count("*").alias("__c"))
-    w_off = (
-        Window.partitionBy("__g")
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = cells.select(
-        "__pid",
-        "__g",
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"),
-    )
-
-    w_local = Window.partitionBy("__pid", "__g").orderBy("__v", "__tb")
-    ranked = part.withColumn("__lr", F.row_number().over(w_local))
-    glob = ranked.join(F.broadcast(offsets), ["__pid", "__g"]).withColumn(
-        "__gr", (F.col("__off") + F.col("__lr")).cast("bigint")
-    )
+    # Pass 2: global rank within the group = the rows of the group before
+    # this one in (value, tiebreak) order, plus one: the one prefix
+    # operator (operators/ranking.py:grouped_prefix_sums) over a unit
+    # count, i.e. range cells on (group, value, tiebreak) with broadcast
+    # per-cell offsets, never a window over a whole group.  The tiebreak
+    # column makes the order total and spreads heavy duplicate values
+    # across cells (selection is tie-order independent: equal ranks carry
+    # equal values).  monotonically_increasing_id depends on the source
+    # partitioning; the operator's partition-id pin freezes it along with
+    # the cells.
+    glob = grouped_prefix_sums(
+        base.withColumn("__tb", F.monotonically_increasing_id()).withColumn(
+            "__one", F.lit(1).cast("bigint")
+        ),
+        ["__g"],
+        ["__v", "__tb"],
+        ["__one"],
+        num_partitions=num_partitions,
+    ).withColumn("__gr", (F.col("__one_before") + F.lit(1)).cast("bigint"))
 
     bnd = glob.join(F.broadcast(ranks), "__g").where(
         (F.col("__gr") == F.col("__k_lo"))

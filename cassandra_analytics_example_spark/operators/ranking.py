@@ -1,20 +1,25 @@
-"""Distributed global order statistics — exclusive prefix sums and the
-exact rank metrics built on them (ROC AUC via the Mann-Whitney U rank
-statistic).
+"""Distributed order statistics — the one exclusive-prefix operator
+(``grouped_prefix_sums``) and the exact rank metrics built on it (ROC AUC
+via the Mann-Whitney U rank statistic, average precision).
 
 A global ``Window.orderBy(...)`` with no partition key funnels the whole
-corpus through ONE task — the single-ordering failure mode the quantile
-selector (operators/quantiles.py) exists to avoid.  This module applies
-the same two-layer trick to running sums:
+corpus through ONE task.  ``grouped_prefix_sums`` is a segmented scan
+instead (Blelloch, *Prefix Sums and Their Applications*): per group, or
+over the whole frame with ``group_cols=[]`` (one segment),
 
-1. ``repartitionByRange`` on the order key so each partition holds a
-   contiguous slice of the global order;
-2. a LOCAL window prefix sum inside each (partition) cell;
-3. a tiny per-cell totals table, whose own exclusive prefix (computed on
-   at-most-``num_partitions`` rows) broadcasts back as the cell offset.
+1. ``repartitionByRange`` on (group, order) so each partition holds a
+   contiguous slice of each group's order;
+2. a LOCAL window prefix sum inside each (partition, group) cell;
+3. a tiny per-cell totals table, whose own exclusive prefix (at most
+   ``num_partitions`` rows per group) broadcasts back as the cell offset.
 
 Cost: one range shuffle + one bounded local window + one broadcast.  No
-task ever sees more than ~|corpus| / num_partitions rows.
+task ever sees more than ~|corpus| / num_partitions rows.  Every global
+or per-group running sum in the package goes through it
+(``operators/rankstats.py``, ``operators/quantiles.py``'s rank layer and
+the registered queries); ``tests/test_plan_lint.py`` lets only it, and
+the two operators with cells of their own (``weighted_quantile_exact``,
+``pareto_frontier_2d``), pin a partition-id frame.
 
 Reference scope note: the reference engine (558-LoC Scala ETL,
 ``App.scala``/``SparkUtils.scala``) has no rank/window machinery at all —
@@ -29,49 +34,56 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
+    eager_terminal,
     pin_partition_ids,
-    pin_scope,
-    truncate_plan,
 )
 
 
-def exclusive_prefix_sums(
+def grouped_prefix_sums(
     df: DataFrame,
+    group_cols: Sequence[str],
     order_cols: Sequence[str],
     sum_cols: Sequence[str],
     num_partitions: int = 64,
 ) -> DataFrame:
-    """Append ``<c>_before`` columns: for each row, the sum of ``c`` over
-    all rows STRICTLY before it in the total order given by ``order_cols``.
+    """Exclusive prefix sums per group: ``<c>_before`` is the sum of
+    ``c`` over rows of the SAME group strictly before this row in the
+    group's ``order_cols`` order — running totals for millions of
+    groups of any size without a per-group buffer.  ``group_cols=[]``
+    is one group: the global running total in ``order_cols`` order.
 
-    The caller must ensure ``order_cols`` is a total order (no duplicate
-    keys) — with duplicates, "strictly before" would be ambiguous between
-    engines.  Sum columns must be integral (bigint-safe) so partial sums
+    The group key is prepended to the range partitioning and to both
+    window partitionings: each (partition, group) cell takes a bounded
+    local window, and each group's per-cell offset table holds at most
+    ``num_partitions`` rows (its own window is per-group bounded).  The
+    caller must ensure (group_cols, order_cols) is a total order — with
+    duplicate keys "strictly before" would be ambiguous between engines
+    — and sum columns must be integral (bigint-safe), so partial sums
     are associative and engine-portable.
     """
     if not order_cols or not sum_cols:
         raise ValueError("order_cols and sum_cols must be non-empty")
 
-    # pin_partition_ids: the local layer and the offsets layer below both
-    # consume this frame and join back on __pid — the pid mapping must be
-    # frozen once (operators/checkpoints.py:pin_partition_ids).
+    # pin_partition_ids: both window layers join back on __pid — frozen
+    # pid mapping required (operators/checkpoints.py:pin_partition_ids).
     part = pin_partition_ids(
         df.repartitionByRange(
-            num_partitions, *[F.col(c) for c in order_cols]
+            num_partitions,
+            *[F.col(c) for c in (*group_cols, *order_cols)],
         ).withColumn("__pid", F.spark_partition_id())
     )
 
-    # Per-cell totals -> exclusive per-cell offsets.  The offsets table has
-    # at most num_partitions rows; its own prefix window is driver-cheap
-    # and the result broadcasts.
-    cells = part.groupBy("__pid").agg(
+    cells = part.groupBy("__pid", *group_cols).agg(
         *[F.sum(F.col(c)).alias(f"__tot_{c}") for c in sum_cols]
     )
-    w_cells = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
+    w_cells = (
+        Window.partitionBy(*group_cols)
+        .orderBy("__pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = cells.select(
         "__pid",
+        *group_cols,
         *[
             F.coalesce(F.sum(f"__tot_{c}").over(w_cells), F.lit(0))
             .alias(f"__off_{c}")
@@ -79,10 +91,12 @@ def exclusive_prefix_sums(
         ],
     )
 
-    w_local = Window.partitionBy("__pid").orderBy(
-        *[F.col(c) for c in order_cols]
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    out = part.join(F.broadcast(offsets), "__pid")
+    w_local = (
+        Window.partitionBy("__pid", *group_cols)
+        .orderBy(*[F.col(c) for c in order_cols])
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    out = part.join(F.broadcast(offsets), ["__pid", *group_cols])
     for c in sum_cols:
         out = out.withColumn(
             f"{c}_before",
@@ -91,11 +105,10 @@ def exclusive_prefix_sums(
                 + F.coalesce(F.sum(F.col(c)).over(w_local), F.lit(0))
             ).cast("bigint"),
         )
-    return out.drop(
-        "__pid", *[f"__off_{c}" for c in sum_cols]
-    )
+    return out.drop("__pid", *[f"__off_{c}" for c in sum_cols])
 
 
+@eager_terminal
 def roc_auc_exact(
     scored: DataFrame,
     score_col: str = "score",
@@ -131,27 +144,15 @@ def roc_auc_exact(
     a decommissioned executor and the truncated lineage cannot
     recompute; on a cluster with dynamic allocation set
     ``spark.checkpoint.dir`` for the reliable path
-    (``operators/checkpoints.py:truncate_plan``).
+    (``operators/checkpoints.py:eager_terminal``).
     """
-    with pin_scope(scored.sparkSession):
-        return truncate_plan(
-            _roc_auc_lazy(scored, score_col, label_col, num_partitions)
-        )
-
-
-def _roc_auc_lazy(
-    scored: DataFrame,
-    score_col: str,
-    label_col: str,
-    num_partitions: int,
-) -> DataFrame:
     g = scored.groupBy(F.col(score_col).alias("__s")).agg(
         F.count("*").cast("bigint").alias("__n"),
         F.sum(F.col(label_col).cast("bigint")).alias("__np"),
     ).withColumn("__nn", F.col("__n") - F.col("__np"))
 
-    pre = exclusive_prefix_sums(
-        g, ["__s"], ["__nn"], num_partitions=num_partitions
+    pre = grouped_prefix_sums(
+        g, [], ["__s"], ["__nn"], num_partitions=num_partitions
     )
     # coalesce: sums over an EMPTY input are NULL — the degenerate
     # contract is a defined counts row (zeros), not NULL counts.
@@ -190,6 +191,7 @@ def _roc_auc_lazy(
     )
 
 
+@eager_terminal
 def average_precision_exact(
     scored: DataFrame,
     score_col: str = "score",
@@ -220,26 +222,12 @@ def average_precision_exact(
     EAGER like ``roc_auc_exact``: one-row result materialized, the
     internal pin released before returning.
     """
-    with pin_scope(scored.sparkSession):
-        return truncate_plan(
-            _average_precision_lazy(
-                scored, score_col, label_col, num_partitions
-            )
-        )
-
-
-def _average_precision_lazy(
-    scored: DataFrame,
-    score_col: str,
-    label_col: str,
-    num_partitions: int,
-) -> DataFrame:
     g = scored.groupBy(F.col(score_col).alias("__s")).agg(
         F.count("*").cast("bigint").alias("__n"),
         F.sum(F.col(label_col).cast("bigint")).alias("__np"),
     )
-    pre = exclusive_prefix_sums(
-        g, ["__s"], ["__n", "__np"], num_partitions=num_partitions
+    pre = grouped_prefix_sums(
+        g, [], ["__s"], ["__n", "__np"], num_partitions=num_partitions
     )
     # coalesce: sum over an EMPTY input is NULL — the documented contract
     # is one row with n_pos = 0 / n_total = 0, not a row of NULL counts
@@ -295,69 +283,3 @@ def _average_precision_lazy(
             ).alias("ap_ppm"),
         )
     )
-
-
-def grouped_prefix_sums(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_cols: Sequence[str],
-    sum_cols: Sequence[str],
-    num_partitions: int = 64,
-) -> DataFrame:
-    """Per-GROUP exclusive prefix sums: ``<c>_before`` is the sum of
-    ``c`` over rows of the SAME group strictly before this row in the
-    group's ``order_cols`` order — running totals for millions of
-    groups of any size without a per-group buffer.
-
-    Same two-layer trick as ``exclusive_prefix_sums``, with the group
-    key prepended to the range partitioning and to both window
-    partitionings: each (partition, group) cell takes a bounded local
-    window, and each group's per-cell offset table holds at most
-    ``num_partitions`` rows (its own window is per-group bounded).  The
-    caller must ensure (group_cols, order_cols) is a total order.
-    """
-    if not group_cols or not order_cols or not sum_cols:
-        raise ValueError("group/order/sum cols must be non-empty")
-
-    # pin_partition_ids: both window layers join back on __pid — frozen
-    # pid mapping required (operators/checkpoints.py:pin_partition_ids).
-    part = pin_partition_ids(
-        df.repartitionByRange(
-            num_partitions,
-            *[F.col(c) for c in (*group_cols, *order_cols)],
-        ).withColumn("__pid", F.spark_partition_id())
-    )
-
-    cells = part.groupBy("__pid", *group_cols).agg(
-        *[F.sum(F.col(c)).alias(f"__tot_{c}") for c in sum_cols]
-    )
-    w_cells = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = cells.select(
-        "__pid",
-        *group_cols,
-        *[
-            F.coalesce(F.sum(f"__tot_{c}").over(w_cells), F.lit(0))
-            .alias(f"__off_{c}")
-            for c in sum_cols
-        ],
-    )
-
-    w_local = (
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = part.join(F.broadcast(offsets), ["__pid", *group_cols])
-    for c in sum_cols:
-        out = out.withColumn(
-            f"{c}_before",
-            (
-                F.col(f"__off_{c}")
-                + F.coalesce(F.sum(F.col(c)).over(w_local), F.lit(0))
-            ).cast("bigint"),
-        )
-    return out.drop("__pid", *[f"__off_{c}" for c in sum_cols])

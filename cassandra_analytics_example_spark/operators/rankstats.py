@@ -1,18 +1,31 @@
 """Exact distributed rank statistics — Spearman correlation, Gini
-concentration, two-sample Kolmogorov–Smirnov, Kaplan–Meier survival.
+concentration, two-sample Kolmogorov–Smirnov, Kaplan–Meier survival and
+the CUSUM changepoint scan, each over the whole input or per group.
 
-All four reduce to the same scale-safe skeleton:
+All five reduce to the same scale-safe skeleton:
 
-1. collapse the corpus to its DISTINCT value groups (one groupBy —
-   map-side combinable, output bounded by the value domain, never the
-   row count);
-2. lay the groups on the global value order with the range-partitioned
-   exclusive-prefix operator (``operators/ranking.py`` — range shuffle +
+1. collapse the corpus to its DISTINCT (group, value) cells (one
+   groupBy — map-side combinable, output bounded by the value domain,
+   never the row count);
+2. lay the cells on each group's value order with the one
+   range-partitioned exclusive-prefix operator
+   (``operators/ranking.py:grouped_prefix_sums`` — range shuffle +
    bounded local window + broadcast cell offsets, never a single-task
-   global window);
+   window);
 3. finish with exact integer algebra (DECIMAL(38,0) moments where
    products can outgrow bigint), so every output hash-matches a SQL
    oracle bit-for-bit.
+
+Each statistic has ONE private implementation (``_spearman``,
+``_gini``, ``_ks``, ``_kaplan_meier``, ``_cusum``) over a possibly
+empty list of group columns; the public global and ``*_grouped`` names
+are thin entry points over it, so the two forms cannot drift apart.
+With no group columns the aggregates are global (``groupBy()``) and the
+joins onto per-group totals become broadcast cross joins of the one-row
+side (``_join_on``).  What differs stays explicit in the
+implementation: the grouped forms drop degenerate groups (zero total,
+no variance, a missing sample), the global forms return their row
+whatever the input, and only the global KS reports ``d_at``.
 
 Float appears in exactly two sanctioned forms (the q214 precedent):
 a single deterministic closed-form expression over exact moments
@@ -21,12 +34,12 @@ summed as integers (Kaplan–Meier's log-survival) — never a float
 accumulation whose partition order could differ between engines.
 
 Every PUBLIC metric here is EAGER and self-releasing
-(``_eager_terminal``): the prefix layer pins its range partitioning
-(``pin_partition_ids``), and a lazy return would park that pin in the
-CacheManager until an explicit release — so a monitoring loop calling
-metrics per-slice would accumulate entries without bound (the round-8
-advisor scenario, fixed first for ``roc_auc_exact``).  The building
-blocks (``doubled_average_ranks``, ``ks_from_counts``,
+(``checkpoints.eager_terminal``): the prefix layer pins its range
+partitioning (``pin_partition_ids``), and a lazy return would park that
+pin in the CacheManager until an explicit release — so a monitoring
+loop calling metrics per-slice would accumulate entries without bound
+(the round-8 advisor scenario, fixed first for ``roc_auc_exact``).  The
+building blocks (``doubled_average_ranks``, ``ks_from_counts``,
 ``densify_counts``) stay lazy for composition; wrap loops over THEM in
 ``pin_scope``.
 
@@ -39,66 +52,63 @@ the reference's ETL job shapes.
 
 from __future__ import annotations
 
-import functools
-import inspect
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_analytics_example_spark.operators.checkpoints import (
-    pin_scope,
-    truncate_plan,
+    eager_terminal,
 )
 from cassandra_analytics_example_spark.operators.ranking import (
-    exclusive_prefix_sums,
+    grouped_prefix_sums,
 )
 
 _DEC = "decimal(38,0)"
 
 
-def _eager_terminal(fn):
-    """Terminal-metric EAGER contract (operators/ranking.py:roc_auc_exact):
-    build the lazy plan inside a ``pin_scope``, materialize it
-    lineage-free (``truncate_plan``), release the internal partition pins
-    before returning — looping callers hold ZERO CacheManager entries
-    between calls.  ``truncate_plan`` picks the local or reliable cut
-    from the session's checkpoint directory.
+def _group_keys(
+    group_cols: Sequence[str],
+) -> tuple[list[str], list[Column], list[Column]]:
+    """Internal names of the caller's group columns, the select that
+    renames them in, and the one that renames them back.  The internal
+    names keep a group column from colliding with a statistic's own
+    columns (``t``, ``n``, ``h`` ...)."""
+    keys = [f"__grp{i}" for i in range(len(group_cols))]
+    pairs = list(zip(group_cols, keys))
+    return (
+        keys,
+        [F.col(c).alias(k) for c, k in pairs],
+        [F.col(k).alias(c) for c, k in pairs],
+    )
 
-    The wrapper forwards ``*args``/``**kwargs`` against the wrapped fn's
-    OWN signature (round-9 ADVICE: a named first parameter here silently
-    renamed every metric's first argument to ``df`` and broke keyword
-    calls like ``cusum_changepoint_from_counts(d=...)``); the session for
-    ``pin_scope`` is taken from the bound first argument, which is the
-    input DataFrame for every metric in this module."""
-    sig = inspect.signature(fn)
-    # The first bound argument must be the DataFrame, or pin_scope/
-    # truncate_plan fail far from the call: check it at decoration time
-    # (required positional) and at call time (a DataFrame). Raise, not
-    # assert, so the checks hold under python -O.
-    _first = next(iter(sig.parameters.values()))
-    if _first.default is not inspect.Parameter.empty or _first.kind not in (
-        inspect.Parameter.POSITIONAL_ONLY,
-        inspect.Parameter.POSITIONAL_OR_KEYWORD,
-    ):
-        raise TypeError(
-            f"{fn.__name__}: _eager_terminal requires the first parameter "
-            f"to be a required positional DataFrame, got {_first}"
-        )
 
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs) -> DataFrame:
-        bound = sig.bind(*args, **kwargs)
-        df = next(iter(bound.arguments.values()))
-        if not isinstance(df, DataFrame):
-            raise TypeError(
-                f"{fn.__name__}: first argument must be the input "
-                f"DataFrame (got {type(df).__name__}) - _eager_terminal "
-                f"takes its SparkSession from it"
-            )
-        with pin_scope(df.sparkSession):
-            return truncate_plan(fn(*args, **kwargs))
+def _join_on(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """Inner join on the group keys.  With no keys ``right`` is the
+    one-row global side and rides a broadcast cross join (PySpark's
+    ``join(other, [])`` raises ``IndexError``)."""
+    if keys:
+        return left.join(right, keys)
+    return left.crossJoin(F.broadcast(right))
 
-    return wrapper
+
+def _doubled_ranks(
+    df: DataFrame, keys: list[str], value_col: str, num_partitions: int
+) -> DataFrame:
+    g = df.groupBy(*keys, F.col(value_col)).agg(
+        F.count("*").cast("bigint").alias("__n")
+    )
+    pre = grouped_prefix_sums(
+        g, keys, [value_col], ["__n"], num_partitions=num_partitions
+    )
+    return pre.select(
+        *keys,
+        value_col,
+        "__n",
+        (F.lit(2) * F.col("__n_before") + F.col("__n") + F.lit(1))
+        .cast("bigint")
+        .alias("__r2"),
+    )
 
 
 def doubled_average_ranks(
@@ -115,22 +125,72 @@ def doubled_average_ranks(
     the distinct-value count and the prefix layer is the range-cell +
     broadcast-offset pattern, so no task ever holds a full ordering.
     """
-    g = df.groupBy(F.col(value_col)).agg(
-        F.count("*").cast("bigint").alias("__n")
+    return _doubled_ranks(df, [], value_col, num_partitions)
+
+
+def _spearman(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    x_col: str,
+    y_col: str,
+    num_partitions: int,
+) -> DataFrame:
+    keys, key_in, key_out = _group_keys(group_cols)
+    # NULL rows are excluded UP FRONT (see spearman_rho)
+    d = df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull()).select(
+        *key_in, x_col, y_col
     )
-    pre = exclusive_prefix_sums(
-        g, [value_col], ["__n"], num_partitions=num_partitions
+    rx = _doubled_ranks(d, keys, x_col, num_partitions).select(
+        *keys, x_col, F.col("__r2").alias("__rx")
     )
-    return pre.select(
-        value_col,
-        "__n",
-        (F.lit(2) * F.col("__n_before") + F.col("__n") + F.lit(1))
-        .cast("bigint")
-        .alias("__r2"),
+    ry = _doubled_ranks(d, keys, y_col, num_partitions).select(
+        *keys, y_col, F.col("__r2").alias("__ry")
+    )
+    ranked = (
+        d.join(rx, [*keys, x_col])
+        .join(ry, [*keys, y_col])
+        .select(*keys, F.col("__rx").alias("x"), F.col("__ry").alias("y"))
+    )
+    m = ranked.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        # operands cast BEFORE the multiply: doubled ranks are O(n), so
+        # a bigint sum of rank products is O(n^3) and overflows past ~2e6
+        # rows; the decimal(38,0) sums are exact to 4n^3 < 1e38.
+        F.sum(F.col("x").cast(_DEC) * F.col("y")).alias("sxy"),
+        F.sum(F.col("x").cast(_DEC) * F.col("x")).alias("sxx"),
+        F.sum(F.col("y").cast(_DEC) * F.col("y")).alias("syy"),
+    )
+    # Centered-moment identity: doubled tie-averaged ranks over n rows sum
+    # to EXACTLY n(n+1) (tie-averaging preserves the total), so both means
+    # are the integer (n+1) and Pearson's numerator/variances reduce to
+    #   sum(x'y') = sxy - n(n+1)^2,   sum(x'^2) = sxx - n(n+1)^2
+    # with x' = x - (n+1).  Every quantity stays O(n^3) — no n*sxx-style
+    # decimal-times-decimal product of two 38-digit values (the old form
+    # was O(n^4) and bound at ~2e9 rows).  Exact range: 4n^3 < 1e38,
+    # i.e. n ~ 2.9e12 rows per correlation (proved at the formula level
+    # by tests/test_rankstats_properties.py near-ceiling case).
+    if keys:
+        # per-group form: only groups with variance in BOTH variables
+        m = m.where(
+            (F.expr("sxx - n * (n + 1) * (n + 1)") > 0)
+            & (F.expr("syy - n * (n + 1) * (n + 1)") > 0)
+        )
+    return m.select(
+        *key_out,
+        F.col("n").cast("bigint").alias("n"),
+        (
+            F.expr("cast(sxy - n * (n + 1) * (n + 1) as double)")
+            / (
+                F.sqrt(F.expr("cast(sxx - n * (n + 1) * (n + 1) as double)"))
+                * F.sqrt(
+                    F.expr("cast(syy - n * (n + 1) * (n + 1) as double)")
+                )
+            )
+        ).alias("rho"),
     )
 
 
-@_eager_terminal
+@eager_terminal
 def spearman_rho(
     df: DataFrame,
     x_col: str,
@@ -160,52 +220,71 @@ def spearman_rho(
     sum(2r) = n(n+1) and could push |rho| past 1 or under a sqrt of a
     negative (round-9 review finding).
     """
-    df = df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-    rx = doubled_average_ranks(df, x_col, num_partitions).withColumnRenamed(
-        "__r2", "__rx"
-    ).drop("__n")
-    ry = doubled_average_ranks(df, y_col, num_partitions).withColumnRenamed(
-        "__r2", "__ry"
-    ).drop("__n")
-    ranked = (
-        df.select(x_col, y_col)
-        .join(rx, x_col)
-        .join(ry, y_col)
-        .select(F.col("__rx").alias("x"), F.col("__ry").alias("y"))
+    return _spearman(df, [], x_col, y_col, num_partitions)
+
+
+@eager_terminal
+def spearman_grouped(
+    df: DataFrame,
+    group_col: str,
+    x_col: str,
+    y_col: str,
+    num_partitions: int = 64,
+) -> DataFrame:
+    """``spearman_rho`` per group — one row ``(group, n, rho)`` per
+    group with variance in both variables; exact to ~2.9e12 rows PER
+    GROUP.  Doubled tie-averaged ranks per group come from per-(group,
+    value) counts plus the grouped prefix operator (no per-group
+    buffer)."""
+    return _spearman(df, [group_col], x_col, y_col, num_partitions)
+
+
+def _gini(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    value_col: str,
+    num_partitions: int,
+) -> DataFrame:
+    keys, key_in, key_out = _group_keys(group_cols)
+    # NULL measures are excluded up front (same rationale as spearman_rho:
+    # a NULL row would ride the prefix layer while the moment sums skip
+    # its products, so n and the moments would disagree)
+    g = (
+        df.where(F.col(value_col).isNotNull())
+        .groupBy(*key_in, F.col(value_col).alias("__v"))
+        .agg(F.count("*").cast("bigint").alias("__n"))
     )
-    m = ranked.agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
-        # operands cast BEFORE the multiply: doubled ranks are O(n), so
-        # a bigint sum of rank products is O(n^3) and overflows past ~2e6
-        # rows; the decimal(38,0) sums are exact to 4n^3 < 1e38.
-        F.sum(F.col("x").cast(_DEC) * F.col("y")).alias("sxy"),
-        F.sum(F.col("x").cast(_DEC) * F.col("x")).alias("sxx"),
-        F.sum(F.col("y").cast(_DEC) * F.col("y")).alias("syy"),
+    pre = grouped_prefix_sums(
+        g, keys, ["__v"], ["__n"], num_partitions=num_partitions
     )
-    # Centered-moment identity: doubled tie-averaged ranks over n rows sum
-    # to EXACTLY n(n+1) (tie-averaging preserves the total), so both means
-    # are the integer (n+1) and Pearson's numerator/variances reduce to
-    #   sum(x'y') = sxy - n(n+1)^2,   sum(x'^2) = sxx - n(n+1)^2
-    # with x' = x - (n+1).  Every quantity stays O(n^3) — no n*sxx-style
-    # decimal-times-decimal product of two 38-digit values (the old form
-    # was O(n^4) and bound at ~2e9 rows).  Exact range: 4n^3 < 1e38,
-    # i.e. n ~ 2.9e12 rows per correlation (proved at the formula level
-    # by tests/test_rankstats_properties.py near-ceiling case).
-    return m.select(
-        F.col("n").cast("bigint").alias("n"),
-        (
-            F.expr("cast(sxy - n * (n + 1) * (n + 1) as double)")
-            / (
-                F.sqrt(F.expr("cast(sxx - n * (n + 1) * (n + 1) as double)"))
-                * F.sqrt(
-                    F.expr("cast(syy - n * (n + 1) * (n + 1) as double)")
-                )
+    m = pre.groupBy(*keys).agg(
+        F.sum("__n").cast(_DEC).alias("n"),
+        F.sum(F.col("__v").cast(_DEC) * F.col("__n")).alias("sx"),
+        F.sum(
+            F.col("__v").cast(_DEC)
+            * (
+                F.col("__n").cast(_DEC) * F.col("__n_before")
+                + (
+                    F.col("__n").cast(_DEC)
+                    * (F.col("__n") + F.lit(1))
+                    / F.lit(2)
+                ).cast(_DEC)
             )
-        ).alias("rho"),
+        ).alias("srx"),
+    )
+    if keys:
+        m = m.where(F.col("sx") > 0)  # per-group form: non-zero totals
+    return m.select(
+        *key_out,
+        F.col("n").cast("bigint").alias("n"),
+        F.col("sx").cast("bigint").alias("total"),
+        F.expr(
+            "cast((2 * srx - (n + 1) * sx) * 1000000 div (n * sx) as bigint)"
+        ).alias("gini_ppm"),
     )
 
 
-@_eager_terminal
+@eager_terminal
 def gini_exact(
     df: DataFrame, value_col: str, num_partitions: int = 64
 ) -> DataFrame:
@@ -226,41 +305,91 @@ def gini_exact(
     sort of the rows.  All products run in DECIMAL(38,0); the output is
     the exact floor of ``10⁶·G``.
     """
-    # NULL measures are excluded up front (same rationale as spearman_rho:
-    # a NULL row would ride the prefix layer while the moment sums skip
-    # its products, so n and the moments would disagree)
-    df = df.where(F.col(value_col).isNotNull())
-    g = df.groupBy(F.col(value_col).alias("__v")).agg(
-        F.count("*").cast("bigint").alias("__n")
-    )
-    pre = exclusive_prefix_sums(
-        g, ["__v"], ["__n"], num_partitions=num_partitions
-    )
-    m = pre.agg(
-        F.sum("__n").cast(_DEC).alias("n"),
-        F.sum(F.col("__v").cast(_DEC) * F.col("__n")).alias("sx"),
-        F.sum(
-            F.col("__v").cast(_DEC)
-            * (
-                F.col("__n").cast(_DEC) * F.col("__n_before")
-                + (
-                    F.col("__n").cast(_DEC)
-                    * (F.col("__n") + F.lit(1))
-                    / F.lit(2)
-                ).cast(_DEC)
+    return _gini(df, [], value_col, num_partitions)
+
+
+@eager_terminal
+def gini_grouped(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    num_partitions: int = 64,
+) -> DataFrame:
+    """``gini_exact`` per group — one row ``(group, n, total, gini_ppm)``
+    per group with a non-zero total, so millions of groups of any size
+    never buffer."""
+    return _gini(df, [group_col], value_col, num_partitions)
+
+
+def _ks_counts(
+    df: DataFrame, group_cols: Sequence[str], value_col: str, split_col: str
+) -> DataFrame:
+    """Per-(group, value) sample counts ``(keys..., __v, __na, __nb)``
+    of a binary ``split_col`` (0 = sample a, anything else = b)."""
+    _, key_in, _ = _group_keys(group_cols)
+    return (
+        df.where(F.col(value_col).isNotNull() & F.col(split_col).isNotNull())
+        .groupBy(*key_in, F.col(value_col).alias("__v"))
+        .agg(
+            F.sum(
+                F.when(F.col(split_col) == 0, F.lit(1)).otherwise(F.lit(0))
             )
-        ).alias("srx"),
-    )
-    return m.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.col("sx").cast("bigint").alias("total"),
-        F.expr(
-            "cast((2 * srx - (n + 1) * sx) * 1000000 div (n * sx) as bigint)"
-        ).alias("gini_ppm"),
+            .cast("bigint")
+            .alias("__na"),
+            F.sum(
+                F.when(F.col(split_col) == 0, F.lit(0)).otherwise(F.lit(1))
+            )
+            .cast("bigint")
+            .alias("__nb"),
+        )
     )
 
 
-@_eager_terminal
+def _ks(
+    g: DataFrame, group_cols: Sequence[str], num_partitions: int
+) -> DataFrame:
+    keys, _, key_out = _group_keys(group_cols)
+    pre = grouped_prefix_sums(
+        g, keys, ["__v"], ["__na", "__nb"], num_partitions=num_partitions
+    )
+    tot = pre.groupBy(*keys).agg(
+        F.sum("__na").cast("bigint").alias("n_a"),
+        F.sum("__nb").cast("bigint").alias("n_b"),
+    )
+    gap = _join_on(pre, tot, keys).select(
+        *keys,
+        "__v",
+        "n_a",
+        "n_b",
+        F.abs(
+            (F.col("__na_before") + F.col("__na")).cast(_DEC) * F.col("n_b")
+            - (F.col("__nb_before") + F.col("__nb")).cast(_DEC)
+            * F.col("n_a")
+        ).alias("__gap"),
+    )
+    d_ppm = F.expr(
+        "cast(__best * 1000000 div "
+        "(cast(n_a as decimal(38,0)) * n_b) as bigint)"
+    ).alias("d_ppm")
+    if keys:
+        # per-group form: groups missing a sample are dropped
+        return (
+            gap.where((F.col("n_a") > 0) & (F.col("n_b") > 0))
+            .groupBy(*keys, "n_a", "n_b")
+            .agg(F.max("__gap").alias("__best"))
+            .select(*key_out, "n_a", "n_b", d_ppm)
+        )
+    # global form: also the smallest value attaining the supremum
+    best = gap.agg(F.max("__gap").alias("__best"))
+    return (
+        gap.join(F.broadcast(best), gap["__gap"] == best["__best"])
+        .groupBy("n_a", "n_b", "__best")
+        .agg(F.min("__v").cast("bigint").alias("d_at"))
+        .select("n_a", "n_b", d_ppm, "d_at")
+    )
+
+
+@eager_terminal
 def ks_two_sample(
     df: DataFrame,
     value_col: str,
@@ -277,23 +406,9 @@ def ks_two_sample(
     ``B(v)`` the cumulative counts through ``v`` — a per-value groupBy,
     one prefix layer over the merged value order, and exact integer
     cross-multiplication (no per-sample division, no float ECDFs).
+    Incomplete rows are excluded up front (see spearman_rho/gini_exact).
     """
-    df = df.where(
-        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-    )  # incomplete rows excluded up front — see spearman_rho/gini_exact
-    g = df.groupBy(F.col(value_col).alias("__v")).agg(
-        F.sum(
-            F.when(F.col(group_col) == 0, F.lit(1)).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("__na"),
-        F.sum(
-            F.when(F.col(group_col) == 0, F.lit(0)).otherwise(F.lit(1))
-        )
-        .cast("bigint")
-        .alias("__nb"),
-    )
-    return ks_from_counts(g, num_partitions=num_partitions)
+    return _ks(_ks_counts(df, [], value_col, group_col), [], num_partitions)
 
 
 def ks_from_counts(
@@ -304,79 +419,50 @@ def ks_from_counts(
     counts sum-merge exactly across shards or stream microbatches, so a
     streaming monitor that appends count partials and calls this on the
     merged-on-read table is bit-identical to the batch recompute."""
-    pre = exclusive_prefix_sums(
-        g, ["__v"], ["__na", "__nb"], num_partitions=num_partitions
-    )
-    tot = pre.agg(
-        F.sum("__na").cast("bigint").alias("n_a"),
-        F.sum("__nb").cast("bigint").alias("n_b"),
-    )
-    cum = pre.select(
-        "__v",
-        (F.col("__na_before") + F.col("__na")).alias("__ca"),
-        (F.col("__nb_before") + F.col("__nb")).alias("__cb"),
-    ).crossJoin(F.broadcast(tot))
-    gap = cum.select(
-        "__v",
-        "n_a",
-        "n_b",
-        F.abs(
-            F.col("__ca").cast(_DEC) * F.col("n_b")
-            - F.col("__cb").cast(_DEC) * F.col("n_a")
-        ).alias("__gap"),
-    )
-    best = gap.agg(F.max("__gap").alias("__best"))
-    return (
-        gap.join(F.broadcast(best), gap["__gap"] == best["__best"])
-        .groupBy("n_a", "n_b", "__best")
-        .agg(F.min("__v").cast("bigint").alias("d_at"))
-        .select(
-            "n_a",
-            "n_b",
-            F.expr(
-                "cast(__best * 1000000 div "
-                "(cast(n_a as decimal(38,0)) * n_b) as bigint)"
-            ).alias("d_ppm"),
-            "d_at",
-        )
-    )
+    return _ks(g, [], num_partitions)
 
 
-@_eager_terminal
-def kaplan_meier(
+@eager_terminal
+def ks_grouped(
     df: DataFrame,
-    duration_col: str,
-    event_col: str,
+    group_col: str,
+    value_col: str,
+    split_col: str,
     num_partitions: int = 64,
 ) -> DataFrame:
-    """Exact Kaplan–Meier survival table over integral durations with a
-    0/1 ``event_col`` (1 = event observed, 0 = right-censored at that
-    duration): one row per distinct duration with at least one observed
-    event — ``(t, n_risk, n_events, n_censored, log_s_nano)``.
+    """Per-group two-sample KS — one row ``(group, n_a, n_b, d_ppm)``
+    per group with both samples non-empty: the "which slice drifted"
+    monitoring table, with any number of groups of any size and no
+    per-group buffer."""
+    return _ks(
+        _ks_counts(df, [group_col], value_col, split_col),
+        [group_col],
+        num_partitions,
+    )
 
-    ``n_risk(t)`` is subjects with duration ≥ t, computed as
-    ``N − (rows strictly below t)`` from one prefix layer.  The product
-    estimator ``S(t) = Π_{tᵢ≤t} (1 − dᵢ/nᵢ)`` is carried in log space
-    with each step's ``ln(1 − dᵢ/nᵢ)`` floor-quantized to integer
-    nano-nats BEFORE the cumulative sum (the repo's sanctioned
-    quantize-then-integer-sum pattern), so the running sum is exact
-    integer arithmetic and engine-portable; the cumulative layer is a
-    second bounded prefix pass over the distinct-duration table.
-    ``log_s_nano`` is NULL at and after any step where every subject at
-    risk dies (S hits exactly 0; its logarithm is undefined).
-    """
+
+def _kaplan_meier(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    duration_col: str,
+    event_col: str,
+    num_partitions: int,
+) -> DataFrame:
+    keys, key_in, key_out = _group_keys(group_cols)
+    # incomplete rows excluded up front — see spearman_rho/gini_exact
     df = df.where(
         F.col(duration_col).isNotNull() & F.col(event_col).isNotNull()
-    )  # incomplete rows excluded up front — see spearman_rho/gini_exact
-    g = df.groupBy(F.col(duration_col).alias("t")).agg(
+    )
+    g = df.groupBy(*key_in, F.col(duration_col).alias("t")).agg(
         F.count("*").cast("bigint").alias("__n"),
         F.sum(F.col(event_col).cast("bigint")).alias("n_events"),
     ).withColumn("n_censored", F.col("__n") - F.col("n_events"))
-    pre = exclusive_prefix_sums(
-        g, ["t"], ["__n"], num_partitions=num_partitions
+    pre = grouped_prefix_sums(
+        g, keys, ["t"], ["__n"], num_partitions=num_partitions
     )
-    tot = pre.agg(F.sum("__n").cast("bigint").alias("__grand"))
-    risk = pre.crossJoin(F.broadcast(tot)).select(
+    tot = pre.groupBy(*keys).agg(F.sum("__n").cast("bigint").alias("__grand"))
+    risk = _join_on(pre, tot, keys).select(
+        *keys,
         "t",
         "n_events",
         "n_censored",
@@ -408,12 +494,13 @@ def kaplan_meier(
         .otherwise(F.lit(0))
         .cast("bigint"),
     )
-    cum = exclusive_prefix_sums(
-        step, ["t"], ["__step", "__died"], num_partitions=num_partitions
+    cum = grouped_prefix_sums(
+        step, keys, ["t"], ["__step", "__died"], num_partitions=num_partitions
     )
     return (
         cum.filter(F.col("n_events") > 0)
         .select(
+            *key_out,
             F.col("t").cast("bigint").alias("t"),
             "n_risk",
             "n_events",
@@ -430,7 +517,89 @@ def kaplan_meier(
     )
 
 
-@_eager_terminal
+@eager_terminal
+def kaplan_meier(
+    df: DataFrame,
+    duration_col: str,
+    event_col: str,
+    num_partitions: int = 64,
+) -> DataFrame:
+    """Exact Kaplan–Meier survival table over integral durations with a
+    0/1 ``event_col`` (1 = event observed, 0 = right-censored at that
+    duration): one row per distinct duration with at least one observed
+    event — ``(t, n_risk, n_events, n_censored, log_s_nano)``.
+
+    ``n_risk(t)`` is subjects with duration ≥ t, computed as
+    ``N − (rows strictly below t)`` from one prefix layer.  The product
+    estimator ``S(t) = Π_{tᵢ≤t} (1 − dᵢ/nᵢ)`` is carried in log space
+    with each step's ``ln(1 − dᵢ/nᵢ)`` floor-quantized to integer
+    nano-nats BEFORE the cumulative sum (the repo's sanctioned
+    quantize-then-integer-sum pattern), so the running sum is exact
+    integer arithmetic and engine-portable; the cumulative layer is a
+    second bounded prefix pass over the distinct-duration table.
+    ``log_s_nano`` is NULL at and after any step where every subject at
+    risk dies (S hits exactly 0; its logarithm is undefined).
+    """
+    return _kaplan_meier(df, [], duration_col, event_col, num_partitions)
+
+
+@eager_terminal
+def kaplan_meier_grouped(
+    df: DataFrame,
+    group_col: str,
+    duration_col: str,
+    event_col: str,
+    num_partitions: int = 64,
+) -> DataFrame:
+    """Per-cohort Kaplan–Meier — the ``kaplan_meier`` table per group
+    (signup cohorts, experiment arms), any number of cohorts of any size
+    without a per-cohort buffer.  NULL log-S at and after a cohort's
+    extinction step."""
+    return _kaplan_meier(
+        df, [group_col], duration_col, event_col, num_partitions
+    )
+
+
+def _cusum(
+    d: DataFrame, group_cols: Sequence[str], num_partitions: int
+) -> DataFrame:
+    keys, key_in, key_out = _group_keys(group_cols)
+    d = d.select(*key_in, "h", "c")
+    t = d.groupBy(*keys).agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.sum("c").cast("bigint").alias("total"),
+    )
+    dev = _join_on(d, t, keys).select(
+        *keys,
+        "h",
+        "n",
+        "total",
+        (F.col("n") * F.col("c") - F.col("total")).alias("dev"),
+    )
+    cu = grouped_prefix_sums(
+        dev, keys, ["h"], ["dev"], num_partitions=num_partitions
+    ).select(
+        *keys, "h", "n", "total", (F.col("dev_before") + F.col("dev")).alias("s")
+    )
+    m = cu.groupBy(*keys).agg(F.max(F.abs(F.col("s"))).alias("peak"))
+    at = (
+        _join_on(cu, m, keys)
+        .where(F.abs(F.col("s")) == F.col("peak"))
+        .groupBy(*keys)
+        .agg(F.min("h").cast("bigint").alias("change_at_hour"))
+    )
+    return _join_on(_join_on(t, m, keys), at, keys).select(
+        *key_out,
+        F.col("n").alias("n_hours"),
+        F.col("total").alias("n_events"),
+        "change_at_hour",
+        F.expr(
+            "cast(cast(peak as decimal(38,0)) * 1000000 div n as bigint)"
+        ).alias("peak_micro_events"),
+    )
+
+
+@eager_terminal
 def cusum_changepoint_from_counts(
     d: DataFrame, num_partitions: int = 64
 ) -> DataFrame:
@@ -447,40 +616,18 @@ def cusum_changepoint_from_counts(
     change_at_hour, peak_micro_events)`` with the earliest argmax of
     |CUSUM| and the peak scaled back by one exact division.
     """
-    t = d.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("c").cast("bigint").alias("total"),
-    )
-    dev = d.crossJoin(F.broadcast(t)).select(
-        "h",
-        "n",
-        "total",
-        (F.col("n") * F.col("c") - F.col("total")).alias("dev"),
-    )
-    cu = exclusive_prefix_sums(
-        dev, ["h"], ["dev"], num_partitions=num_partitions
-    ).select(
-        "h", "n", "total", (F.col("dev_before") + F.col("dev")).alias("s")
-    )
-    m = cu.agg(F.max(F.abs(F.col("s"))).alias("peak"))
-    at = cu.join(F.broadcast(m), F.abs(cu.s) == m.peak).agg(
-        F.min("h").cast("bigint").alias("change_at_hour")
-    )
-    return (
-        t.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(at))
-        .select(
-            F.col("n").alias("n_hours"),
-            F.col("total").alias("n_events"),
-            "change_at_hour",
-            F.expr(
-                "cast(cast(peak as decimal(38,0)) * 1000000 div n "
-                "as bigint)"
-            ).alias(
-                "peak_micro_events"
-            ),
-        )
-    )
+    return _cusum(d, [], num_partitions)
+
+
+@eager_terminal
+def cusum_grouped_from_counts(
+    d: DataFrame, group_col: str, num_partitions: int = 64
+) -> DataFrame:
+    """Per-group CUSUM changepoint scan over dense per-(group, bucket)
+    counts ``(group, h, c)`` — one row ``(group, n_hours, n_events,
+    change_at_hour, peak_micro_events)`` per group: the which-slice-
+    changed monitor, with no per-slice buffer."""
+    return _cusum(d, [group_col], num_partitions)
 
 
 def densify_counts(e: DataFrame, bucket_col: str = "h") -> DataFrame:
@@ -499,349 +646,4 @@ def densify_counts(e: DataFrame, bucket_col: str = "h") -> DataFrame:
     return spine.join(e, bucket_col, "left").select(
         bucket_col,
         F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("c"),
-    )
-
-
-@_eager_terminal
-def gini_grouped(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    num_partitions: int = 64,
-) -> DataFrame:
-    """``gini_exact`` per group — one row ``(group, n, total, gini_ppm)``
-    per group with a non-zero total, using the grouped prefix operator
-    so millions of groups of any size never buffer: distinct
-    (group, value) counts, per-group exclusive prefix of the counts,
-    the same exact DECIMAL(38,0) rank-sum algebra per group."""
-    df = df.where(F.col(value_col).isNotNull())  # see gini_exact
-    from cassandra_analytics_example_spark.operators.ranking import (
-        grouped_prefix_sums,
-    )
-
-    g = df.groupBy(
-        F.col(group_col).alias("__grp"), F.col(value_col).alias("__v")
-    ).agg(F.count("*").cast("bigint").alias("__n"))
-    pre = grouped_prefix_sums(
-        g, ["__grp"], ["__v"], ["__n"], num_partitions=num_partitions
-    )
-    m = pre.groupBy("__grp").agg(
-        F.sum("__n").cast(_DEC).alias("n"),
-        F.sum(F.col("__v").cast(_DEC) * F.col("__n")).alias("sx"),
-        F.sum(
-            F.col("__v").cast(_DEC)
-            * (
-                F.col("__n").cast(_DEC) * F.col("__n_before")
-                + (
-                    F.col("__n").cast(_DEC)
-                    * (F.col("__n") + F.lit(1))
-                    / F.lit(2)
-                ).cast(_DEC)
-            )
-        ).alias("srx"),
-    )
-    return m.where(F.col("sx") > 0).select(
-        F.col("__grp").alias(group_col),
-        F.col("n").cast("bigint").alias("n"),
-        F.col("sx").cast("bigint").alias("total"),
-        F.expr(
-            "cast((2 * srx - (n + 1) * sx) * 1000000 div (n * sx) as bigint)"
-        ).alias("gini_ppm"),
-    )
-
-
-@_eager_terminal
-def ks_grouped(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    split_col: str,
-    num_partitions: int = 64,
-) -> DataFrame:
-    """Per-group two-sample KS — one row ``(group, n_a, n_b, d_ppm)``
-    per group with both samples non-empty: the "which slice drifted"
-    monitoring table.  Same integer cross-multiplied ECDF-gap algebra as
-    ``ks_two_sample``, with the cumulative layer on the grouped prefix
-    operator so any number of groups of any size runs without a
-    per-group buffer."""
-    df = df.where(
-        F.col(value_col).isNotNull() & F.col(split_col).isNotNull()
-    )  # incomplete rows excluded up front — see ks_two_sample
-    from cassandra_analytics_example_spark.operators.ranking import (
-        grouped_prefix_sums,
-    )
-
-    g = df.groupBy(
-        F.col(group_col).alias("__grp"), F.col(value_col).alias("__v")
-    ).agg(
-        F.sum(
-            F.when(F.col(split_col) == 0, F.lit(1)).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("__na"),
-        F.sum(
-            F.when(F.col(split_col) == 0, F.lit(0)).otherwise(F.lit(1))
-        )
-        .cast("bigint")
-        .alias("__nb"),
-    )
-    pre = grouped_prefix_sums(
-        g, ["__grp"], ["__v"], ["__na", "__nb"],
-        num_partitions=num_partitions,
-    )
-    tot = pre.groupBy("__grp").agg(
-        F.sum("__na").cast("bigint").alias("n_a"),
-        F.sum("__nb").cast("bigint").alias("n_b"),
-    )
-    gap = pre.join(tot, "__grp").select(
-        "__grp",
-        "n_a",
-        "n_b",
-        F.abs(
-            (F.col("__na_before") + F.col("__na")).cast(_DEC) * F.col("n_b")
-            - (F.col("__nb_before") + F.col("__nb")).cast(_DEC)
-            * F.col("n_a")
-        ).alias("__gap"),
-    )
-    return (
-        gap.where((F.col("n_a") > 0) & (F.col("n_b") > 0))
-        .groupBy("__grp", "n_a", "n_b")
-        .agg(F.max("__gap").alias("__best"))
-        .select(
-            F.col("__grp").alias(group_col),
-            "n_a",
-            "n_b",
-            F.expr(
-                "cast(__best * 1000000 div "
-                "(cast(n_a as decimal(38,0)) * n_b) as bigint)"
-            ).alias("d_ppm"),
-        )
-    )
-
-
-@_eager_terminal
-def spearman_grouped(
-    df: DataFrame,
-    group_col: str,
-    x_col: str,
-    y_col: str,
-    num_partitions: int = 64,
-) -> DataFrame:
-    """Per-group exact tie-corrected Spearman — one row
-    ``(group, n, rho)`` per group with variance in both variables.
-    Doubled tie-averaged ranks per group come from per-(group, value)
-    counts plus the grouped prefix operator (no per-group buffer);
-    the per-group moments and the single closed-form float expression
-    follow the global ``spearman_rho`` exactly — including the up-front
-    NULL exclusion the centered identity requires (see spearman_rho)."""
-    from cassandra_analytics_example_spark.operators.ranking import (
-        grouped_prefix_sums,
-    )
-
-    df = df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-
-    def ranks(col, out):
-        g = df.groupBy(
-            F.col(group_col).alias("__grp"), F.col(col).alias("__v")
-        ).agg(F.count("*").cast("bigint").alias("__n"))
-        pre = grouped_prefix_sums(
-            g, ["__grp"], ["__v"], ["__n"], num_partitions=num_partitions
-        )
-        return pre.select(
-            "__grp",
-            F.col("__v").alias(col),
-            (F.lit(2) * F.col("__n_before") + F.col("__n") + F.lit(1))
-            .cast("bigint")
-            .alias(out),
-        )
-
-    rx = ranks(x_col, "__rx")
-    ry = ranks(y_col, "__ry")
-    ranked = (
-        df.select(F.col(group_col).alias("__grp"), x_col, y_col)
-        .join(rx, ["__grp", x_col])
-        .join(ry, ["__grp", y_col])
-        .select(
-            "__grp",
-            F.col("__rx").alias("x"),
-            F.col("__ry").alias("y"),
-        )
-    )
-    m = ranked.groupBy("__grp").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
-        # operands cast BEFORE the multiply: doubled ranks are O(n), so
-        # a bigint sum of rank products is O(n^3) and overflows past ~2e6
-        # rows; the decimal(38,0) sums are exact to 4n^3 < 1e38.
-        F.sum(F.col("x").cast(_DEC) * F.col("y")).alias("sxy"),
-        F.sum(F.col("x").cast(_DEC) * F.col("x")).alias("sxx"),
-        F.sum(F.col("y").cast(_DEC) * F.col("y")).alias("syy"),
-    )
-    # Centered-moment identity (see spearman_rho): per-group doubled ranks
-    # sum to exactly n_g(n_g+1), so the group mean is the integer (n_g+1)
-    # and the moments center by subtracting n(n+1)^2 — everything stays
-    # O(n^3), exact to ~2.9e12 rows PER GROUP (4n^3 < 1e38); the old
-    # n*sxx - sx*sx form was O(n^4) and bound at ~2e9.  The guard keeps
-    # only groups with variance in BOTH variables (same sign as the old
-    # n-scaled guard: new = old / n).
-    return m.where(
-        (F.expr("sxx - n * (n + 1) * (n + 1)") > 0)
-        & (F.expr("syy - n * (n + 1) * (n + 1)") > 0)
-    ).select(
-        F.col("__grp").alias(group_col),
-        F.col("n").cast("bigint").alias("n"),
-        (
-            F.expr("cast(sxy - n * (n + 1) * (n + 1) as double)")
-            / (
-                F.sqrt(F.expr("cast(sxx - n * (n + 1) * (n + 1) as double)"))
-                * F.sqrt(
-                    F.expr("cast(syy - n * (n + 1) * (n + 1) as double)")
-                )
-            )
-        ).alias("rho"),
-    )
-
-
-@_eager_terminal
-def kaplan_meier_grouped(
-    df: DataFrame,
-    group_col: str,
-    duration_col: str,
-    event_col: str,
-    num_partitions: int = 64,
-) -> DataFrame:
-    """Per-cohort Kaplan–Meier — the survival-curve table per group
-    (signup cohorts, experiment arms): same estimator as
-    ``kaplan_meier`` with BOTH prefix layers (at-risk counts and the
-    cumulative quantized log-survival) on the grouped prefix operator,
-    so any number of cohorts of any size runs without a per-cohort
-    buffer.  NULL log-S at and after a cohort's extinction step."""
-    df = df.where(
-        F.col(duration_col).isNotNull() & F.col(event_col).isNotNull()
-    )  # incomplete rows excluded up front — see kaplan_meier
-    from cassandra_analytics_example_spark.operators.ranking import (
-        grouped_prefix_sums,
-    )
-
-    g = df.groupBy(
-        F.col(group_col).alias("__grp"), F.col(duration_col).alias("t")
-    ).agg(
-        F.count("*").cast("bigint").alias("__n"),
-        F.sum(F.col(event_col).cast("bigint")).alias("n_events"),
-    ).withColumn("n_censored", F.col("__n") - F.col("n_events"))
-    pre = grouped_prefix_sums(
-        g, ["__grp"], ["t"], ["__n"], num_partitions=num_partitions
-    )
-    tot = pre.groupBy("__grp").agg(
-        F.sum("__n").cast("bigint").alias("__grand")
-    )
-    risk = pre.join(tot, "__grp").select(
-        "__grp",
-        "t",
-        "n_events",
-        "n_censored",
-        (F.col("__grand") - F.col("__n_before"))
-        .cast("bigint")
-        .alias("n_risk"),
-    )
-    step = risk.withColumn(
-        "__step",
-        F.when(
-            (F.col("n_events") > 0) & (F.col("n_events") < F.col("n_risk")),
-            F.floor(
-                F.lit(1_000_000_000.0)
-                * F.log(
-                    (F.col("n_risk") - F.col("n_events")).cast("double")
-                    / F.col("n_risk").cast("double")
-                )
-            ).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint")),
-    ).withColumn(
-        "__died",
-        F.when(F.col("n_events") >= F.col("n_risk"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("bigint"),
-    )
-    cum = grouped_prefix_sums(
-        step, ["__grp"], ["t"], ["__step", "__died"],
-        num_partitions=num_partitions,
-    )
-    return (
-        cum.filter(F.col("n_events") > 0)
-        .select(
-            F.col("__grp").alias(group_col),
-            F.col("t").cast("bigint").alias("t"),
-            "n_risk",
-            "n_events",
-            "n_censored",
-            F.when(
-                F.col("__died_before") + F.col("__died") > 0,
-                F.lit(None).cast("bigint"),
-            )
-            .otherwise(
-                (F.col("__step_before") + F.col("__step")).cast("bigint")
-            )
-            .alias("log_s_nano"),
-        )
-    )
-
-
-@_eager_terminal
-def cusum_grouped_from_counts(
-    d: DataFrame, group_col: str, num_partitions: int = 64
-) -> DataFrame:
-    """Per-group CUSUM changepoint scan over dense per-(group, bucket)
-    counts ``(group, h, c)`` — one row ``(group, n_hours, n_events,
-    change_at_hour, peak_micro_events)`` per group: the which-slice-
-    changed monitor. Same scaled-integer algebra as
-    ``cusum_changepoint_from_counts`` (Σ n·c − total per group, exact),
-    with the running sum on the grouped prefix operator so any number
-    of slices runs without a per-slice buffer."""
-    from cassandra_analytics_example_spark.operators.ranking import (
-        grouped_prefix_sums,
-    )
-
-    t = d.groupBy(F.col(group_col).alias("__grp")).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("c").cast("bigint").alias("total"),
-    )
-    dev = d.select(
-        F.col(group_col).alias("__grp"), "h", "c"
-    ).join(t, "__grp").select(
-        "__grp",
-        "h",
-        "n",
-        "total",
-        (F.col("n") * F.col("c") - F.col("total")).alias("dev"),
-    )
-    cu = grouped_prefix_sums(
-        dev, ["__grp"], ["h"], ["dev"], num_partitions=num_partitions
-    ).select(
-        "__grp",
-        "h",
-        "n",
-        "total",
-        (F.col("dev_before") + F.col("dev")).alias("s"),
-    )
-    m = cu.groupBy("__grp").agg(F.max(F.abs(F.col("s"))).alias("peak"))
-    at = (
-        cu.join(m, "__grp")
-        .where(F.abs(F.col("s")) == F.col("peak"))
-        .groupBy("__grp")
-        .agg(F.min("h").cast("bigint").alias("change_at_hour"))
-    )
-    return (
-        t.join(m, "__grp")
-        .join(at, "__grp")
-        .select(
-            F.col("__grp").alias(group_col),
-            F.col("n").alias("n_hours"),
-            F.col("total").alias("n_events"),
-            "change_at_hour",
-            F.expr(
-                "cast(cast(peak as decimal(38,0)) * 1000000 div n "
-                "as bigint)"
-            ).alias(
-                "peak_micro_events"
-            ),
-        )
     )

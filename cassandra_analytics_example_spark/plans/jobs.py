@@ -47,7 +47,7 @@ from cassandra_analytics_example_spark.plans.listeners import (
     CoordinatedStorageTransportListener,
     StorageTransportListener,
 )
-from cassandra_analytics_example_spark.sources import read, write
+from cassandra_analytics_example_spark.sources import get_reader, read, write
 from cassandra_analytics_example_spark.sources.registry import MAX_RECORDS_PER_FILE
 
 log = logging.getLogger(__name__)
@@ -55,12 +55,11 @@ log = logging.getLogger(__name__)
 T = TypeVar("T")
 
 
-def execute(fn: Callable[[], T], on_failure: T | None = None) -> T:
+def execute(fn: Callable[[], T]) -> T:
     """O2 error-reporting executor (reference ``SparkUtils.execute``,
     ``SparkUtils.scala:34-47``): run, and on failure log it with the stack
-    trace and rethrow. ``on_failure`` is kept for signature parity with the
-    reference, whose rethrow makes the fallback unreachable on errors — it
-    is never returned here either."""
+    trace and rethrow. The reference's fallback value is unreachable behind
+    its rethrow, so there is none here."""
     try:
         return fn()
     except Exception as exc:
@@ -144,8 +143,11 @@ def staged_write(
     uploaded SSTables. The import fails if a staged file is missing from the
     target or has another size. Any other target (``cassandra``, another
     compression, ...) re-encodes the staged rows, and fails if it writes a
-    different count. A failed import fires import-failed and raises. Returns
-    the staged row count.
+    different count. The re-encode reads the stage back in the staging
+    write's own format and reader options, with ``df``'s schema. A failed
+    import fires import-failed; any failure (stage or import) then fires
+    job-failed with the elapsed millis and raises. Returns the staged row
+    count.
 
     Object-store staging is a CONFIG change, not a code change: every path
     here (``staging_dir``, targets) is resolved through Spark's Hadoop
@@ -188,8 +190,12 @@ def staged_write(
                 cause = _file_import(spark, stage_dir, staged_files, opts["path"], mode)
             else:
                 if staged is None:
-                    # the staged files carry df's schema: no footer-inference job
-                    staged = spark.read.schema(df.schema).parquet(stage_dir)
+                    # the staged files carry df's schema: no inference job
+                    staged = (
+                        get_reader(spark, write_options)
+                        .schema(df.schema)
+                        .load(stage_dir)
+                    )
                 imported = write(staged, opts)
                 cause = None
                 if imported != n_rows:
@@ -203,6 +209,9 @@ def staged_write(
             listener.on_import_succeeded(cluster)
         listener.on_job_succeeded((time.monotonic() - t0) * 1000)
         return n_rows
+    except Exception as exc:
+        listener.on_job_failed((time.monotonic() - t0) * 1000, str(exc))
+        raise
     finally:
         if own_stage:
             fs.delete(spark, stage_dir)
@@ -296,7 +305,9 @@ def table_to_parquet(
     spark: SparkSession, config: JobConfiguration, output_dir: str
 ) -> tuple[int, int]:
     """sstableToParquet: re-materialize a table into parquet files of at most
-    100 000 rows each (reference App.scala:35-82).
+    100 000 rows each (reference App.scala:35-82; the sink's
+    ``MAX_RECORDS_PER_FILE`` unless the write options set
+    ``maxRecordsPerFile``).
 
     The reference resolves token partitions on the driver and maps an RDD of
     work units through an SSTableTransformer; Spark's native task-per-split
@@ -306,14 +317,7 @@ def table_to_parquet(
     """
     rows = write(
         read(spark, config.read_options),
-        {
-            **config.write_options,
-            "path": output_dir,
-            "mode": "overwrite",
-            "maxRecordsPerFile": config.write_options.get(
-                "maxRecordsPerFile", 100_000
-            ),
-        },
+        {**config.write_options, "path": output_dir, "mode": "overwrite"},
     )
     n_files = len(fs.list_data_files(spark, output_dir, suffix=".parquet"))
     return rows, n_files

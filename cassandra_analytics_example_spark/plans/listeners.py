@@ -49,7 +49,7 @@ class StorageTransportListener:
         log.info("transport %s %s (%.1f ms)", kind, detail, ev.elapsed_ms)
 
     # staged-write lifecycle (names follow the reference's overrides)
-    def on_transport_start(self, elapsed_ms: float = 0.0) -> None:
+    def on_transport_start(self) -> None:
         self._emit("transport_start")
 
     def on_object_persisted(self, bucket: str, key: str, size: int) -> None:
@@ -77,7 +77,7 @@ class StorageTransportListener:
         self._emit("job_succeeded", f"{elapsed_ms:.1f} ms")
 
     def on_job_failed(self, elapsed_ms: float, cause: str) -> None:
-        self._emit("job_failed", cause)
+        self._emit("job_failed", f"{elapsed_ms:.1f} ms: {cause}")
 
 
 @dataclass

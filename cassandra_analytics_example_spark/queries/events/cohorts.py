@@ -1087,7 +1087,7 @@ FROM m
 )
 def q231_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     ev = table(spark, sf_dir, "events").select(
@@ -1111,8 +1111,8 @@ def q231_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_id",
         )
     )
-    pre = exclusive_prefix_sums(
-        pts, ["ts", "delta", "user_id", "session_id"], ["delta"]
+    pre = grouped_prefix_sums(
+        pts, [], ["ts", "delta", "user_id", "session_id"], ["delta"]
     )
     conc = pre.select(
         "ts", (F.col("delta_before") + F.col("delta")).alias("conc")

@@ -664,7 +664,7 @@ FROM c GROUP BY day ORDER BY day
 )
 def q271_daily_uptime_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     ev = table(spark, sf_dir, "events").select(
@@ -707,8 +707,9 @@ def q271_daily_uptime_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_id",
         )
     ).withColumn("one", F.lit(1).cast("bigint"))
-    pre = exclusive_prefix_sums(
+    pre = grouped_prefix_sums(
         pts,
+        [],
         ["day", "ts", "delta", "user_id", "session_id"],
         ["delta", "one"],
     ).select(

@@ -148,14 +148,14 @@ GROUP BY d.source, CAST(r.permille // 100 AS BIGINT)
 )
 def q232_rank_normalized_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     docs = table(spark, sf_dir, "documents").select("source", "n_chars")
     g = docs.groupBy(F.col("n_chars").alias("score")).agg(
         F.count("*").cast("bigint").alias("n")
     )
-    pre = exclusive_prefix_sums(g, ["score"], ["n"])
+    pre = grouped_prefix_sums(g, [], ["score"], ["n"])
     tot = g.agg(F.sum("n").alias("n_total"))
     r = pre.crossJoin(F.broadcast(tot)).select(
         "score",
@@ -445,7 +445,7 @@ FROM m
 )
 def q245_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     docs = table(spark, sf_dir, "documents")
@@ -458,13 +458,14 @@ def q245_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("freq"))
         .where(F.col("freq") >= 2)
     )
-    ranked = exclusive_prefix_sums(
+    ranked = grouped_prefix_sums(
         v.select(
             (-F.col("freq")).alias("negf"),
             "term",
             "freq",
             F.lit(1).cast("bigint").alias("one"),
         ),
+        [],
         ["negf", "term"],
         ["one"],
     ).select(
@@ -831,7 +832,7 @@ FROM t
 )
 def q260_brier_rank_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -844,7 +845,7 @@ def q260_brier_rank_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("np"),
     )
-    pre = exclusive_prefix_sums(g, ["score"], ["n"])
+    pre = grouped_prefix_sums(g, [], ["score"], ["n"])
     t = g.agg(F.sum("n").cast("bigint").alias("nt"))
     p = pre.crossJoin(F.broadcast(t)).select(
         "np",
@@ -924,7 +925,7 @@ FROM cum, t
 )
 def q261_decile_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -938,8 +939,9 @@ def q261_decile_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("bigint").alias("np"),
     )
     # rank from the TOP: prefix over descending score via negated key
-    pre = exclusive_prefix_sums(
+    pre = grouped_prefix_sums(
         g.select((-F.col("score")).alias("negs"), "n", "np"),
+        [],
         ["negs"],
         ["n"],
     )
@@ -956,7 +958,9 @@ def q261_decile_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("bigint").alias("n_rows"),
         F.sum("np").cast("bigint").alias("n_pos"),
     )
-    cum = exclusive_prefix_sums(dd, ["decile"], ["n_rows", "n_pos"]).select(
+    cum = grouped_prefix_sums(
+        dd, [], ["decile"], ["n_rows", "n_pos"]
+    ).select(
         "decile",
         "n_rows",
         "n_pos",
@@ -1047,7 +1051,7 @@ FROM k, qhat
 )
 def q267_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     docs = table(spark, sf_dir, "documents")
@@ -1092,7 +1096,7 @@ def q267_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kk"),
     )
     g = res.groupBy("r").agg(F.count("*").cast("bigint").alias("c"))
-    cum = exclusive_prefix_sums(g, ["r"], ["c"]).select(
+    cum = grouped_prefix_sums(g, [], ["r"], ["c"]).select(
         "r", (F.col("c_before") + F.col("c")).alias("cw")
     )
     qhat = (

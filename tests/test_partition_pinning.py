@@ -73,7 +73,7 @@ def test_ks_grouped_conserves_rows_and_is_run_stable(spark):
 
 def test_exclusive_prefix_totals_conserve_and_are_run_stable(spark):
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     g = (
@@ -83,7 +83,7 @@ def test_exclusive_prefix_totals_conserve_and_are_run_stable(spark):
     )
     results = []
     for _ in range(3):
-        pre = exclusive_prefix_sums(g, ["v"], ["n"])
+        pre = grouped_prefix_sums(g, [], ["v"], ["n"])
         row = pre.agg(
             F.sum("n").alias("tot"),
             F.max(F.col("n_before") + F.col("n")).alias("max_cum"),

@@ -115,14 +115,14 @@ def test_pin_scope_releases_only_inner_pins(spark):
 
 def test_release_pins_drains_row_level_operators(spark):
     from cassandra_analytics_example_spark.operators.ranking import (
-        exclusive_prefix_sums,
+        grouped_prefix_sums,
     )
 
     release_pins(spark)
     g = _scored(spark).groupBy("score").agg(
         F.count("*").cast("bigint").alias("n")
     )
-    pre = exclusive_prefix_sums(g, ["score"], ["n"])
+    pre = grouped_prefix_sums(g, [], ["score"], ["n"])
     total = pre.agg(F.sum("n")).first()[0]
     assert len(_thread_pins(spark)) == 1
     assert release_pins(spark) == 1

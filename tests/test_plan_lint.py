@@ -333,3 +333,44 @@ def test_file_inventories_and_copies_go_through_plans_fs():
         "raw listFiles/FileUtil outside plans/fs.py — use "
         f"fs.list_data_files / fs.data_file_sizes / fs.import_files: {found}"
     )
+
+
+#: the only callers of ``checkpoints.pin_partition_ids``: the one prefix
+#: operator, and two operators whose windows cover only some of the cells
+#: (the candidate cells of a weighted quantile; a prefix max, not a sum)
+_PIN_PID_CALLERS = {
+    ("operators/ranking.py", "grouped_prefix_sums"),
+    ("operators/quantiles.py", "weighted_quantile_exact"),
+    ("operators/frontier.py", "pareto_frontier_2d"),
+}
+
+
+def test_range_prefix_cells_have_one_operator():
+    """Range-partitioned prefix cells (a ``spark_partition_id`` frame
+    pinned by ``pin_partition_ids``) are built in one place: a global or
+    per-group running sum is ``ranking.grouped_prefix_sums`` (with
+    ``group_cols=[]`` for a global order), never another copy of the
+    cell layer."""
+    import ast
+
+    calls = []
+    modules = _package_modules()
+    for rel, path in modules:
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if name == "pin_partition_ids":
+                    calls.append((rel, fn.name))
+    assert len(modules) > 40, f"scanned only {len(modules)} modules"
+    # a nested def would be seen twice (once per enclosing def): compare
+    # as sets, and check that each allowed caller calls it exactly once
+    assert set(calls) == _PIN_PID_CALLERS, sorted(set(calls))
+    assert len(calls) == len(_PIN_PID_CALLERS), sorted(calls)

@@ -508,6 +508,9 @@ def test_group_quantiles_from_counts_matches_rowlevel(spark):
 
 
 def test_grouped_prefix_sums_match_pandas(spark):
+    """Per-group running totals, and with ``group_cols=[]`` the global
+    ones (one segment), against pandas cumsums at several partition
+    counts; the rows arrive shuffled, so input order is not key order."""
     from cassandra_analytics_example_spark.operators.ranking import (
         grouped_prefix_sums,
     )
@@ -522,31 +525,44 @@ def test_grouped_prefix_sums_match_pandas(spark):
             "x": rng.integers(-50, 50, n),
         }
     )
-    for parts in (3, 64):
-        got = (
-            grouped_prefix_sums(
-                spark.createDataFrame(pdf), ["g"], ["k"], ["x"],
-                num_partitions=parts,
+    pdf["y"] = rng.integers(0, 100, n)
+    pdf = pdf.sample(frac=1, random_state=7).reset_index(drop=True)
+    for group_cols in (["g"], []):
+        ref = pdf.sort_values([*group_cols, "k"]).reset_index(drop=True)
+        for c in ("x", "y"):
+            cum = ref.groupby(group_cols)[c].cumsum() if group_cols else (
+                ref[c].cumsum()
             )
-            .toPandas()
-            .sort_values(["g", "k"])
-            .reset_index(drop=True)
-        )
-        ref = pdf.sort_values(["g", "k"]).reset_index(drop=True)
-        ref["x_before"] = (
-            ref.groupby("g")["x"].cumsum() - ref["x"]
-        )
-        pd.testing.assert_series_equal(
-            got["x_before"].astype("int64"),
-            ref["x_before"].astype("int64"),
-            check_names=False,
-        )
+            ref[f"{c}_before"] = cum - ref[c]
+        for parts in (1, 3, 7, 64):
+            got = (
+                grouped_prefix_sums(
+                    spark.createDataFrame(pdf), group_cols, ["k"], ["x", "y"],
+                    num_partitions=parts,
+                )
+                .toPandas()
+                .sort_values([*group_cols, "k"])
+                .reset_index(drop=True)
+            )
+            for c in ("x_before", "y_before"):
+                pd.testing.assert_series_equal(
+                    got[c].astype("int64"),
+                    ref[c].astype("int64"),
+                    check_names=False,
+                    obj=f"{c} group_cols={group_cols} parts={parts}",
+                )
 
 
 def test_gini_grouped_matches_global_per_group(spark):
+    """Each grouped statistic equals its global form run on the group's
+    rows alone: Gini, two-sample KS (without the global ``d_at``) and the
+    CUSUM scan over dense per-group counts."""
     from cassandra_analytics_example_spark.operators.rankstats import (
+        cusum_changepoint_from_counts,
+        cusum_grouped_from_counts,
         gini_exact,
         gini_grouped,
+        ks_grouped,
     )
 
     rng = np.random.default_rng(41)
@@ -556,15 +572,44 @@ def test_gini_grouped_matches_global_per_group(spark):
             "v": rng.integers(0, 5000, 3000),
         }
     )
+    pdf["s"] = rng.integers(0, 2, 3000)
     grouped = {
         r["g"]: r["gini_ppm"]
         for r in gini_grouped(spark.createDataFrame(pdf), "g", "v").collect()
+    }
+    ks = {
+        r["g"]: (r["n_a"], r["n_b"], r["d_ppm"])
+        for r in ks_grouped(spark.createDataFrame(pdf), "g", "v", "s").collect()
     }
     for g, sub in pdf.groupby("g"):
         solo = gini_exact(
             spark.createDataFrame(sub[["v"]]), "v"
         ).collect()[0]["gini_ppm"]
         assert grouped[g] == solo, g
+        one = ks_two_sample(spark.createDataFrame(sub[["v", "s"]]), "v", "s")
+        r = one.collect()[0]
+        assert ks[g] == (r["n_a"], r["n_b"], r["d_ppm"]), g
+
+    # dense hourly counts per group, with a level shift at a
+    # group-specific hour so each group has its own changepoint
+    rows = [
+        (g, h, int(rng.poisson(20 if h < shift else 35)))
+        for g, shift in (("x", 30), ("y", 55), ("z", 80))
+        for h in range(100)
+    ]
+    d = pd.DataFrame(rows, columns=["g", "h", "c"])
+    cusum = {
+        r["g"]: tuple(r)[1:]
+        for r in cusum_grouped_from_counts(
+            spark.createDataFrame(d), "g"
+        ).collect()
+    }
+    assert set(cusum) == {"x", "y", "z"}
+    for g, sub in d.groupby("g"):
+        one = cusum_changepoint_from_counts(
+            spark.createDataFrame(sub[["h", "c"]])
+        ).collect()[0]
+        assert cusum[g] == tuple(one), g
 
 
 def test_spearman_grouped_matches_pandas_per_group(spark):

@@ -177,9 +177,10 @@ def test_fingerprint_covers_one_hop_operator_imports():
     )
     hop2 = _one_hop_sources(src2)
     assert any("def spearman_rho(" in h for h in hop2)
-    # spearman_rho's own helpers ride along (doubled_average_ranks is
-    # called two hops from the query)
-    assert any("def doubled_average_ranks(" in h for h in hop2)
+    # spearman_rho's own helpers ride along (_spearman, the one
+    # implementation of its global and grouped forms, is called two hops
+    # from the query)
+    assert any("def _spearman(" in h for h in hop2)
     # unresolvable imports are omitted, never fatal
     assert _one_hop_sources(
         "from cassandra_analytics_example_spark.nope import gone\n"

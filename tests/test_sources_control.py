@@ -359,7 +359,7 @@ class TestDataTransportRouting:
         kinds = [e.kind for e in listener.events]
         assert "job_succeeded" not in kinds
         assert kinds.count("import_succeeded") == 1
-        assert kinds[-1] == "import_failed"
+        assert kinds[-2:] == ["import_failed", "job_failed"]
         assert list(tmp.iterdir()) == []
 
     def test_short_reencode_fails_the_staged_write(
@@ -393,7 +393,7 @@ class TestDataTransportRouting:
         kinds = [e.kind for e in listener.events]
         assert "job_succeeded" not in kinds
         assert kinds.count("import_succeeded") == 1
-        assert kinds[-1] == "import_failed"
+        assert kinds[-2:] == ["import_failed", "job_failed"]
         assert list(tmp.iterdir()) == []
 
 
@@ -497,7 +497,7 @@ class TestFileImport:
                 listener,
             )
         kinds = [e.kind for e in listener.events]
-        assert kinds[-1] == "import_failed"
+        assert kinds[-2:] == ["import_failed", "job_failed"]
         assert "import_succeeded" not in kinds
         assert "object_applied" not in kinds
         assert spark.read.parquet(target).count() == 50
@@ -529,6 +529,68 @@ class TestFileImport:
         assert _digest(spark.read.parquet(target)) == _digest(
             gen_dataset_deterministic(spark, 700, 2)
         )
+
+    def test_orc_stage_imports_and_reencodes(self, spark, tmp_path):
+        """An orc stage feeds a copy target (same layout) and a re-encode
+        target (``compression=zlib``): the re-encode reads the stage back
+        as orc, and both targets hold the generated rows."""
+        stage = str(tmp_path / "stg")
+        targets = {
+            "copy": {"path": str(tmp_path / "copy"), "format": "orc"},
+            "zlib": {
+                "path": str(tmp_path / "zlib"),
+                "format": "orc",
+                "compression": "zlib",
+            },
+        }
+        listener = CoordinatedStorageTransportListener(list(targets))
+        n = two_clusters_coordinated_write(
+            spark,
+            JobConfiguration(
+                write_options={"rows": "300", "format": "orc", "staging_dir": stage}
+            ),
+            targets,
+            listener,
+        )
+        assert n == 300
+        applied = {
+            e.detail.split("/")[0]
+            for e in listener.events
+            if e.kind == "object_applied"
+        }
+        assert applied == {"copy"}
+        assert fs.data_file_sizes(spark, targets["copy"]["path"]) == (
+            fs.data_file_sizes(spark, stage)
+        )
+        want = _digest(gen_dataset_deterministic(spark, 300, 2))
+        for opts in targets.values():
+            assert _digest(spark.read.orc(opts["path"])) == want
+        assert listener.events[-1].kind == "job_succeeded"
+
+    def test_failed_stage_write_fires_job_failed(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A stage write that raises ends the event list with job-failed
+        (elapsed millis and the cause), and the error reaches the caller;
+        nothing is staged or imported."""
+
+        def failing_write(df, options):
+            raise OSError("stage volume gone")
+
+        monkeypatch.setattr(jobs, "write", failing_write)
+        listener = CoordinatedStorageTransportListener(["c1"])
+        with pytest.raises(OSError, match="stage volume gone"):
+            two_clusters_coordinated_write(
+                spark,
+                JobConfiguration(write_options={"rows": "100"}),
+                {"c1": {"path": str(tmp_path / "c1")}},
+                listener,
+            )
+        assert [e.kind for e in listener.events] == ["transport_start", "job_failed"]
+        elapsed, cause = listener.events[-1].detail.split(" ms: ")
+        assert cause == "stage volume gone"
+        assert float(elapsed) >= 0
+        assert not (tmp_path / "c1").exists()
 
     def test_job_succeeded_reports_elapsed_ms(self, spark, tmp_path):
         listener = CoordinatedStorageTransportListener(["c1"])
