@@ -200,6 +200,40 @@ def test_weighted_quantile_matches_pandas_reference(spark):
         assert got["threshold"] == T
 
 
+def test_exclusive_prefix_sums_match_pandas(spark):
+    """The global exclusive prefix sum is ``grouped_prefix_sums`` with
+    ``group_cols=[]``: one segment, running totals in key order."""
+    from cassandra_analytics_example_spark.operators.ranking import (
+        grouped_prefix_sums,
+    )
+
+    rng = np.random.default_rng(20260815)
+    keys = rng.permutation(np.arange(5000))
+    pdf = pd.DataFrame(
+        {
+            "k": keys,
+            "a": rng.integers(0, 100, 5000),
+            "b": rng.integers(-50, 50, 5000),
+        }
+    )
+    for parts in (1, 7, 64):
+        got = (
+            grouped_prefix_sums(
+                spark.createDataFrame(pdf), [], ["k"], ["a", "b"], parts
+            )
+            .toPandas()
+            .sort_values("k")
+            .reset_index(drop=True)
+        )
+        ref = pdf.sort_values("k").reset_index(drop=True)
+        for c in ("a", "b"):
+            want = ref[c].cumsum().shift(1, fill_value=0).astype("int64")
+            assert (got[f"{c}_before"].to_numpy() == want.to_numpy()).all(), (
+                parts,
+                c,
+            )
+
+
 def test_roc_auc_matches_pair_counting(spark):
     from cassandra_analytics_example_spark.operators.ranking import (
         roc_auc_exact,
